@@ -18,14 +18,4 @@ object Fs {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(s.sessionState.newHadoopConf()).exists(p)
   }
-
-  /** Recursive delete through Hadoop's FileSystem API (no-op if absent) —
-    * the retention hammer for superseded engine-state artifacts. Returns
-    * whether anything was deleted.
-    */
-  def delete(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    fs.exists(p) && fs.delete(p, true)
-  }
 }

@@ -19,7 +19,7 @@ object SparkEntry {
     EndToEnd.corpusPipeline(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A. Relational core
     "q01_agg_pricing"     -> (Relational.aggPricing _),
     "q02_filter_pushdown" -> (Relational.filterPushdown _),
@@ -575,7 +575,7 @@ object SparkEntry {
       |        '</p>' AS markup
       |      FROM d)""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Map(
     // t31: heading-path sectioning — markup split on <h2>, per-element
     // capture-group extraction, tag-strip + whitespace-collapse (t01 law)
     "t31_html_sections" ->

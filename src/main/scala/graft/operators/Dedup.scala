@@ -413,23 +413,20 @@ object Dedup {
       .orderBy($"doc_id")
   }
 
-  /** s14 micro-batch body: sign + band the incoming docs, refuse any doc
+  /** s14 fold merge: sign + band the incoming docs, refuse any doc
     * that collides with the persisted signature index at >= threshold
     * agreement (the d20 verdict, applied at ingest), and append the
     * survivors' bands to the index — so the index d20 queries never goes
     * stale. Intra-batch near-dups are the upstream d01/d02 stages' job;
-    * this sink guards the batch↔index boundary. Same
-    * localCheckpoint-then-overwrite publish as the s07/s10 sinks (a
-    * transactional table format with bucket-preserving appends replaces it
-    * at scale — the state is already keyed by (band_id, band_key)).
+    * this sink guards the batch↔index boundary. (A transactional table
+    * format with bucket-preserving appends replaces the parquet state at
+    * scale — the state is already keyed by (band_id, band_key).)
     */
-  private[graft] def mergeIntoSignatureIndex(batch: DataFrame, statePath: String,
-                                             threshold: Double = 0.5): Unit = {
+  private[graft] def signatureIndexMerge(existing: Option[DataFrame], batch: DataFrame,
+                                         threshold: Double = 0.5): DataFrame = {
     val s = batch.sparkSession
     import s.implicits._
     val banded = bandSignatures(signaturesOf(batch))
-    val existing =
-      if (graft.Fs.exists(s, statePath)) Some(s.read.parquet(statePath)) else None
     val fresh = existing match {
       case None => banded
       case Some(st) =>
@@ -440,8 +437,7 @@ object Dedup {
           .select($"doc_id").distinct()
         banded.join(dupIds, Seq("doc_id"), "left_anti")
     }
-    val merged = existing.map(_.unionByName(fresh)).getOrElse(fresh).localCheckpoint(true)
-    merged.write.mode("overwrite").parquet(statePath)
+    existing.map(_.unionByName(fresh)).getOrElse(fresh)
   }
 
   /** d21: adaptive per-source quality gate — a single global quality

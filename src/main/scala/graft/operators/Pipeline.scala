@@ -309,11 +309,10 @@ object PipelineOps {
   def bm25Fold(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val base = bm25Base(Tables.documents(s, dir))
-    // Per-batch stats rows from ONE tokenization pass (q45's replay-harness
-    // rule: sums/counts are additive, so the grouped-by-batch partials fold
-    // to the same one-row state; the fold loop and its per-batch
-    // materialization are unchanged). The previous shape re-ran the
-    // term-count kernel over the whole corpus once per batch.
+    // Per-batch stats rows from ONE tokenization pass: sums/counts are
+    // additive, so the grouped-by-batch partials fold to the same one-row
+    // state (the keyless sumByKeys) without re-running the term-count
+    // kernel over the corpus once per batch.
     val partials = base
       .groupBy(pmod($"doc_id", lit(Bm25ReplayBatches.toLong)).as("b"))
       .agg(count(lit(1)).as("n_docs"),
@@ -321,18 +320,9 @@ object PipelineOps {
          SearchTerms.indices.map(i =>
            sum(when(col(tfCol(i)) > 0, 1L).otherwise(0L)).as(dfCol(i)))): _*)
       .localCheckpoint(true)
-    var stats: Option[DataFrame] = None
-    for (b <- 0 until Bm25ReplayBatches) {
-      val inc = partials.filter($"b" === b.toLong).drop("b")
-      stats = Some((stats match {
-        case None => inc
-        case Some(st) => st.unionByName(inc).agg(
-          sum($"n_docs").as("n_docs"),
-          (sum($"total_toks").as("total_toks") +:
-           SearchTerms.indices.map(i => sum(col(dfCol(i))).as(dfCol(i)))): _*)
-      }).localCheckpoint(true))
-    }
-    tfDisplay(bm25From(base, stats.get), SearchTerms)
+    val stats = graft.streaming.Fold.replay(Bm25ReplayBatches)(
+      b => partials.filter($"b" === b.toLong).drop("b"))(graft.streaming.Streams.sumByKeys())
+    tfDisplay(bm25From(base, stats), SearchTerms)
   }
 
   /** get_child_pages(recursive=True): transitive closure over the derived

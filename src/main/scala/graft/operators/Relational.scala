@@ -1000,33 +1000,20 @@ object Relational {
         (dec2($"l_extendedprice") *
           (lit(1).cast("decimal(18,2)") - dec2($"l_discount"))).as("disc_price"))
     // All per-batch partials derive from ONE fact scan (groupBy batch +
-    // group keys), materialized once; the previous per-batch
-    // filter-then-aggregate replay re-scanned the fact table once per
-    // batch (3 full scans for a 3-batch replay — at 100 TB, 3 corpus
-    // passes where one suffices). The fold itself is untouched: state
-    // still merges batch by batch and MATERIALIZES between folds (the MV
-    // refresh loop being modeled); only the replay harness's batch
-    // partials are produced together — which is exactly what a historical
-    // backfill of an incremental MV does. DECIMAL partials make the
-    // regrouped sums bit-identical to the per-batch aggregation.
+    // group keys), materialized once — at 100 TB, one corpus pass instead
+    // of one per batch, which is exactly what a historical backfill of an
+    // incremental MV does. DECIMAL partials make the regrouped sums
+    // bit-identical to the per-batch aggregation.
     val partials = rows
       .withColumn("b", pmod($"l_orderkey", lit(MvReplayBatches.toLong)))
       .groupBy($"b", $"l_returnflag", $"l_linestatus")
       .agg(sum($"qty").as("s_qty"), sum($"price").as("s_price"),
            sum($"disc_price").as("s_disc"), count(lit(1)).as("n"))
       .localCheckpoint(true)
-    var state: Option[DataFrame] = None
-    for (b <- 0 until MvReplayBatches) {
-      val inc = partials.filter($"b" === b.toLong).drop("b")
-      state = Some((state match {
-        case None => inc
-        case Some(st) => st.unionByName(inc)
-          .groupBy($"l_returnflag", $"l_linestatus")
-          .agg(sum($"s_qty").as("s_qty"), sum($"s_price").as("s_price"),
-               sum($"s_disc").as("s_disc"), sum($"n").as("n"))
-      }).localCheckpoint(true))
-    }
-    state.get.select($"l_returnflag", $"l_linestatus",
+    val state = graft.streaming.Fold.replay(MvReplayBatches)(
+      b => partials.filter($"b" === b.toLong).drop("b"))(
+      graft.streaming.Streams.sumByKeys("l_returnflag", "l_linestatus"))
+    state.select($"l_returnflag", $"l_linestatus",
         $"s_qty".cast("double").as("sum_qty"),
         $"s_price".cast("double").as("sum_base_price"),
         $"s_disc".cast("double").as("sum_disc_price"),

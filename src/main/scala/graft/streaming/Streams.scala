@@ -214,6 +214,23 @@ object Streams {
       }
   }
 
+  /** Additive fold merge: union into state, then sum every non-key column
+    * per `keys` (no keys = one global row). The q45/p39/s28/s30 law. */
+  private[graft] def sumByKeys(keys: String*)(state: Option[DataFrame], inc: DataFrame): DataFrame =
+    state.fold(inc) { st =>
+      val sums = inc.columns.filterNot(keys.contains).map(c => sum(c).as(c))
+      st.unionByName(inc).groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
+    }
+
+  /** Additive fold merge by full-outer join on `keys`: every other (long)
+    * column adds, a side missing a key counts 0. The s24/s26 law. */
+  private[graft] def fullOuterAdd(keys: String*)(state: Option[DataFrame], inc: DataFrame): DataFrame =
+    state.fold(inc) { st =>
+      val adds = inc.columns.filterNot(keys.contains).map(c =>
+        (coalesce(col(s"s.$c"), lit(0L)) + coalesce(col(s"i.$c"), lit(0L))).as(c))
+      st.as("s").join(inc.as("i"), keys, "full_outer").select(keys.map(col) ++ adds: _*)
+    }
+
   /** s30: volume-anomaly monitoring maintained at ingest — q49's MAD
     * verdicts over hourly state folded per micro-batch (s28's additive
     * (type, hour) count state; counts are the only fold), verdicts DERIVED
@@ -226,28 +243,17 @@ object Streams {
   val AnomalyReplayBatches = 3
   def anomalyFoldBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // Per-batch partials from ONE corpus scan (q45's replay-harness rule:
-    // batch partials computed together, fold loop — merge + materialize
-    // per batch — unchanged); the previous shape re-scanned events once
-    // per batch. Counts are additive, so the regrouped partials fold to
-    // the same state bit-for-bit.
+    // Per-batch partials from ONE corpus scan; counts are additive, so the
+    // regrouped partials fold to the same state bit-for-bit.
     val partials = Tables.events(s, dir)
       .select($"event_type", expr("unix_micros(ts) div 3600000000").as("hb"),
               pmod($"event_id", lit(AnomalyReplayBatches.toLong)).as("b"))
       .groupBy($"b", $"event_type", $"hb")
       .agg(count(lit(1)).as("n_events"))
       .localCheckpoint(true)
-    var state: Option[DataFrame] = None
-    for (b <- 0 until AnomalyReplayBatches) {
-      val inc = partials.filter($"b" === b.toLong).drop("b")
-      state = Some((state match {
-        case None => inc
-        case Some(st) => st.unionByName(inc)
-          .groupBy($"event_type", $"hb")
-          .agg(sum($"n_events").as("n_events"))
-      }).localCheckpoint(true))
-    }
-    graft.operators.Relational.madFromHourly(state.get)
+    val state = Fold.replay(AnomalyReplayBatches)(
+      b => partials.filter($"b" === b.toLong).drop("b"))(sumByKeys("event_type", "hb"))
+    graft.operators.Relational.madFromHourly(state)
   }
 
   /** The transformWithState census stream — see [[TypeCensusProcessor]]. */
@@ -428,56 +434,37 @@ object Streams {
   /** Streaming state upsert through foreachBatch — the reference's
     * StateManager persistence (utilities/state_manager.py:84
     * update_page_state) as a continuously-maintained table: each micro-batch
-    * keyed-merges into the parquet state, max (version, ts) wins per key.
-    * The merge materializes via localCheckpoint before overwriting the path
-    * it just read (parquet has no transactional swap; at scale the sink is
-    * a transactional table format and this body becomes a MERGE INTO).
+    * keyed-merges into the parquet state, max (version, ts) wins per key
+    * (at scale the sink is a transactional table format and [[upsertMerge]]
+    * becomes a MERGE INTO).
     */
   def upsertSink(updates: DataFrame,
-                 statePath: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    updates.writeStream.outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val incoming = batch.select(col("user_id").as("key"),
-          col("value").as("version"), col("ts"))
-        val merged = (if (graft.Fs.exists(s, statePath))
-                        s.read.parquet(statePath).unionByName(incoming)
-                      else incoming)
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("key"))
-              .orderBy(col("version").desc, col("ts").desc)))
-          .filter(col("rn") === 1).drop("rn")
-          .localCheckpoint(true)
-        merged.write.mode("overwrite").parquet(statePath)
-        ()
-      }
-      .start()
-  }
+                 statePath: String): org.apache.spark.sql.streaming.StreamingQuery =
+    Fold.sink(updates.select(col("user_id").as("key"), col("value").as("version"), col("ts")),
+      statePath, "update")(upsertMerge)
+
+  /** The s07 upsert fold: latest (version, ts) per key wins. */
+  private[graft] def upsertMerge(state: Option[DataFrame], incoming: DataFrame): DataFrame =
+    state.map(_.unionByName(incoming)).getOrElse(incoming)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("key"))
+          .orderBy(col("version").desc, col("ts").desc)))
+      .filter(col("rn") === 1).drop("rn")
 
   /** CDC sink with tombstones — p23's streaming twin, extending s07's
     * upsert with DELETE semantics: each micro-batch merges into the parquet
     * state and the latest (ts, version) op per key wins. Tombstones
     * ('error') are RETAINED in state rather than physically dropped, so a
     * late-arriving older update cannot resurrect a deleted key; the live
-    * view ([[cdcLiveState]]) filters them out. Same
-    * localCheckpoint-then-overwrite publish as s07 (a transactional table
-    * format with retention-windowed tombstone compaction replaces it at
-    * scale).
+    * view ([[cdcLiveState]]) filters them out. (A transactional table
+    * format with retention-windowed tombstone compaction replaces the
+    * parquet state at scale.)
     */
   def cdcSink(updates: DataFrame,
-              statePath: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    updates.writeStream.outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val incoming = batch.select(col("event_id"), col("user_id").as("key"),
-          col("event_type").as("op"), col("value").as("version"), col("ts"))
-        val state = if (graft.Fs.exists(s, statePath)) Some(s.read.parquet(statePath)) else None
-        cdcMerge(state, incoming).localCheckpoint(true)
-          .write.mode("overwrite").parquet(statePath)
-        ()
-      }
-      .start()
-  }
+              statePath: String): org.apache.spark.sql.streaming.StreamingQuery =
+    Fold.sink(updates.select(col("event_id"), col("user_id").as("key"),
+        col("event_type").as("op"), col("value").as("version"), col("ts")),
+      statePath, "update")(cdcMerge)
 
   /** The CDC merge fold — ONE body shared by the streaming sink and the
     * s17 oracled replay: latest op per key wins under the TOTAL order
@@ -501,27 +488,22 @@ object Streams {
 
   /** s17: multi-batch CDC replay as an oracled key — the [[cdcSink]] merge
     * fold (the reference StateManager's persistence loop,
-    * state_manager.py:84-102) run over [[CdcReplayBatches]] deterministic
-    * micro-batches with state MATERIALIZED between folds, exactly as
-    * foreachBatch does (localCheckpoint stands in for the parquet
-    * round-trip). Batches split by event_id mod, so late-arriving older
-    * ops land in later batches and must lose to retained state — incl.
-    * tombstones, which stay in state and mask every older op. The DuckDB
-    * oracle computes the GLOBAL latest-wins winner per key in one window:
-    * hash-equality proves the incremental fold reaches the same state as
-    * a from-scratch rebuild — the associativity/exactly-once contract.
+    * state_manager.py:84-102) replayed through [[Fold.replay]] over
+    * [[CdcReplayBatches]] deterministic micro-batches. Batches split by
+    * event_id mod, so late-arriving older ops land in later batches and
+    * must lose to retained state — incl. tombstones, which stay in state
+    * and mask every older op. The DuckDB oracle computes the GLOBAL
+    * latest-wins winner per key in one window: hash-equality proves the
+    * incremental fold reaches the same state as a from-scratch rebuild —
+    * the associativity/exactly-once contract.
     */
   val CdcReplayBatches = 3
   def cdcReplayBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, dir).select($"event_id", $"user_id".as("key"),
       $"event_type".as("op"), $"value".as("version"), $"ts")
-    var state: Option[DataFrame] = None
-    for (b <- 0 until CdcReplayBatches) {
-      val batch = ev.filter(pmod($"event_id", lit(CdcReplayBatches.toLong)) === b)
-      state = Some(cdcMerge(state, batch).localCheckpoint(true))
-    }
-    state.get
+    Fold.replay(CdcReplayBatches)(
+        b => ev.filter(pmod($"event_id", lit(CdcReplayBatches.toLong)) === b))(cdcMerge)
       .select($"key", $"op", $"version", $"ts", ($"op" =!= "error").as("live"))
       .orderBy($"key")
   }
@@ -533,68 +515,53 @@ object Streams {
     * size is |types| (independent of stream volume), and the sketch union
     * is commutative/associative by construction — so ANY batch
     * partitioning of the stream reaches the same sketch, which is what
-    * makes the fold restart-safe. Same localCheckpoint-then-overwrite
-    * publish as s07/s17 (a transactional table replaces it at scale).
+    * makes the fold restart-safe.
     */
   def sketchSink(events: DataFrame,
                  statePath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val state = if (graft.Fs.exists(s, statePath)) Some(s.read.parquet(statePath)) else None
-        sketchMerge(state, batch).localCheckpoint(true)
-          .write.mode("overwrite").parquet(statePath)
-        ()
-      }
-      .start()
+    Fold.sink(events, statePath, "append")(sketchMerge)
 
-  /** The sketch fold body — ONE merge shared by the sink and the s20
-    * oracled replay: sketch the incoming batch per event_type, union with
-    * retained state. */
+  /** The sketch fold body: sketch the incoming batch per event_type, union
+    * with retained state. */
   private[graft] def sketchMerge(state: Option[DataFrame], incoming: DataFrame): DataFrame = {
     val sk = incoming.groupBy(col("event_type"))
       .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sketch"))
-    state.map(_.unionByName(sk)).getOrElse(sk)
-      .groupBy(col("event_type"))
-      .agg(hll_union_agg(col("sketch")).as("sketch"))
+    sketchUnion(state.map(_.unionByName(sk)).getOrElse(sk))
   }
 
-  /** s20: multi-batch sketch fold as an oracled key — [[sketchMerge]] run
-    * over [[SketchFoldBatches]] deterministic micro-batches with state
-    * materialized between folds, exactly as the [[sketchSink]] foreachBatch
-    * loop does. The readout verdicts the FOLDED estimate against the exact
-    * global distinct count: hash-equality proves the incremental sketches
-    * reach (within the q24 error gate) the same answer as a from-scratch
-    * pass — the mergeability contract that lets 100-TB ingest maintain
-    * distinct-user counts without ever re-scanning history. The estimate
-    * itself is engine-specific, so the oracle asserts the bound TRUE.
+  /** The sketch union step, shared by [[sketchMerge]] and the s20 replay. */
+  private def sketchUnion(sketches: DataFrame): DataFrame =
+    sketches.groupBy(col("event_type")).agg(hll_union_agg(col("sketch")).as("sketch"))
+
+  /** s20: multi-batch sketch fold as an oracled key — the [[sketchSink]]
+    * union fold replayed through [[Fold.replay]] over [[SketchFoldBatches]]
+    * deterministic micro-batches. The readout verdicts the FOLDED estimate
+    * against the exact global distinct count: hash-equality proves the
+    * incremental sketches reach (within the q24 error gate) the same answer
+    * as a from-scratch pass — the mergeability contract that lets 100-TB
+    * ingest maintain distinct-user counts without ever re-scanning history.
+    * The estimate itself is engine-specific, so the oracle asserts the bound
+    * TRUE.
     */
   val SketchFoldBatches = 3
   def sketchFoldBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, dir).select($"event_id", $"event_type", $"user_id")
-    // Per-batch sketches from ONE corpus scan (q45's replay-harness rule):
-    // hll_sketch_agg is register-max based, so the per-(type, batch) sketch
-    // is identical however the batch's rows are delivered, and the fold
-    // below unions precisely the sketch sketchMerge would have built from
-    // the raw batch. The previous shape re-scanned events once per batch.
+    // Per-batch sketches from ONE corpus scan: hll_sketch_agg is
+    // register-max based, so the per-(type, batch) sketch is identical
+    // however the batch's rows are delivered, and the fold unions precisely
+    // the sketch sketchMerge would have built from the raw batch.
     val partials = ev
       .groupBy(pmod($"event_id", lit(SketchFoldBatches.toLong)).as("b"), $"event_type")
       .agg(hll_sketch_agg($"user_id", lit(12)).as("sketch"))
       .localCheckpoint(true)
-    var state: Option[DataFrame] = None
-    for (b <- 0 until SketchFoldBatches) {
-      val inc = partials.filter($"b" === b.toLong).select($"event_type", $"sketch")
-      state = Some((state match {
-        case None => inc
-        case Some(st) => st.unionByName(inc)
-          .groupBy($"event_type")
-          .agg(hll_union_agg($"sketch").as("sketch"))
-      }).localCheckpoint(true))
+    val state = Fold.replay(SketchFoldBatches)(
+        b => partials.filter($"b" === b.toLong).select($"event_type", $"sketch")) {
+      (prior, inc) => prior.fold(inc)(st => sketchUnion(st.unionByName(inc)))
     }
     val exact = ev.groupBy($"event_type")
       .agg(countDistinct($"user_id").as("exact_users"))
-    state.get
+    state
       .select($"event_type", hll_sketch_estimate($"sketch").as("est"))
       .join(exact, Seq("event_type"))
       .select($"event_type", $"exact_users",
@@ -672,12 +639,7 @@ object Streams {
     */
   def signatureIndexSink(docs: DataFrame,
                          statePath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Dedup.mergeIntoSignatureIndex(batch, statePath)
-        ()
-      }
-      .start()
+    Fold.sink(docs, statePath, "append")(graft.operators.Dedup.signatureIndexMerge(_, _))
 
   /** d09's content fingerprint, shared by the s13 batch twin and stream. */
   private[graft] def contentFp(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -1141,28 +1103,14 @@ object Streams {
     }
   }
 
-  /** Retire the superseded pre-round-10 layout: per-fold versioned bucketed
-    * tables (`…_v0/_v1/_v2`) whose directories outlive the in-memory
-    * catalog. Runs once per ingest — idempotent, no-op when clean. */
-  private[graft] def retireChunkStateLegacy(s: SparkSession, key: String): Unit =
-    (0 until ChunkReplayBatches).foreach { v =>
-      val legacy = s"${chunkStateTableName(key)}_v$v"
-      if (s.catalog.tableExists(legacy)) s.sql(s"DROP TABLE `$legacy`")
-      graft.Fs.delete(s, chunkStatePath(legacy))
-    }
-
   def chunkIngestBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    retireChunkStateLegacy(s, dir)
     val chunks = graft.operators.TextOps
       .chunkRows(Tables.documents(s, dir))
       .withColumn("batch", pmod($"doc_id", lit(ChunkReplayBatches.toLong)))
-    var state: DataFrame = null
-    for (b <- 0 until ChunkReplayBatches) {
-      val batch = chunks.filter($"batch" === b.toLong)
-      state = chunkFold(s, dir, batch, b.toLong, firstFold = b == 0)
-    }
-    state
+    (0 until ChunkReplayBatches).map { b =>
+      chunkFold(s, dir, chunks.filter($"batch" === b.toLong), b.toLong, firstFold = b == 0)
+    }.last
       .select($"chunk_hash", $"n_copies",
         $"first.batch".as("first_batch"),
         $"first.doc_id".cast("long").as("first_doc"),
@@ -1218,24 +1166,13 @@ object Streams {
   def driftFoldBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val base = graft.operators.Dedup.driftBase(s, dir)
-    // Per-batch partials from ONE scan (q45's replay-harness rule; the
-    // full-outer-add fold and per-batch materialization are unchanged).
+    // Per-batch partials from ONE scan.
     val partials = graft.operators.Dedup.driftCounts(base,
         extraKeys = Seq("b" -> pmod($"doc_id", lit(DriftReplayBatches.toLong))))
       .localCheckpoint(true)
-    var state: Option[DataFrame] = None
-    for (b <- 0 until DriftReplayBatches) {
-      val inc = partials.filter($"b" === b.toLong).drop("b")
-      state = Some((state match {
-        case None => inc
-        case Some(st) =>
-          st.as("s").join(inc.as("i"), Seq("dim", "bucket"), "full_outer")
-            .select($"dim", $"bucket",
-              (coalesce($"s.n_a", lit(0L)) + coalesce($"i.n_a", lit(0L))).as("n_a"),
-              (coalesce($"s.n_b", lit(0L)) + coalesce($"i.n_b", lit(0L))).as("n_b"))
-      }).localCheckpoint(true))
-    }
-    graft.operators.Dedup.driftReadout(state.get)
+    val state = Fold.replay(DriftReplayBatches)(
+      b => partials.filter($"b" === b.toLong).drop("b"))(fullOuterAdd("dim", "bucket"))
+    graft.operators.Dedup.driftReadout(state)
   }
 
   /** s26: t30's unigram census maintained at INGEST — the language-model
@@ -1255,26 +1192,15 @@ object Streams {
   def censusFoldBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val toks = graft.operators.TextOps.surprisalToks(Tables.documents(s, dir))
-    // Per-batch term partials from ONE tokenization pass (q45's replay-
-    // harness rule; the full-outer-add fold and its per-batch
-    // materialization are unchanged) — the previous shape re-tokenized the
-    // corpus once per batch, and tokenization is the expensive side here.
+    // Per-batch term partials from ONE tokenization pass — tokenization is
+    // the expensive side here, so the corpus is never re-tokenized per batch.
     val partials = toks
       .groupBy(pmod($"doc_id", lit(CensusReplayBatches.toLong)).as("b"), $"term")
       .agg(count(lit(1)).as("cnt"))
       .localCheckpoint(true)
-    var census: Option[DataFrame] = None
-    for (b <- 0 until CensusReplayBatches) {
-      val inc = partials.filter($"b" === b.toLong).drop("b")
-      census = Some((census match {
-        case None => inc
-        case Some(st) =>
-          st.as("s").join(inc.as("i"), Seq("term"), "full_outer")
-            .select($"term",
-              (coalesce($"s.cnt", lit(0L)) + coalesce($"i.cnt", lit(0L))).as("cnt"))
-      }).localCheckpoint(true))
-    }
-    graft.operators.TextOps.surprisalReadout(toks, census.get)
+    val census = Fold.replay(CensusReplayBatches)(
+      b => partials.filter($"b" === b.toLong).drop("b"))(fullOuterAdd("term"))
+    graft.operators.TextOps.surprisalReadout(toks, census)
   }
 
   /** s29: the SAME census contract as s26, driven through Spark 4's
@@ -1401,8 +1327,8 @@ object Streams {
   val FillReplayBatches = 3
   def fillFoldBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // Per-batch partials from ONE corpus scan (q45's replay-harness rule;
-    // fold loop unchanged). Counts and DECIMAL sums regroup exactly.
+    // Per-batch partials from ONE corpus scan. Counts and DECIMAL sums
+    // regroup exactly.
     val partials = Tables.events(s, dir)
       .select($"event_type", expr("unix_micros(ts) div 3600000000").as("hb"),
               $"value".cast("decimal(18,6)").as("v"),
@@ -1410,18 +1336,10 @@ object Streams {
       .groupBy($"b", $"event_type", $"hb")
       .agg(count(lit(1)).as("n_events"), sum($"v").as("sum_v"))
       .localCheckpoint(true)
-    var state: Option[DataFrame] = None
-    for (b <- 0 until FillReplayBatches) {
-      val inc = partials.filter($"b" === b.toLong).drop("b")
-      state = Some((state match {
-        case None => inc
-        case Some(st) => st.unionByName(inc)
-          .groupBy($"event_type", $"hb")
-          .agg(sum($"n_events").as("n_events"), sum($"sum_v").as("sum_v"))
-      }).localCheckpoint(true))
-    }
+    val state = Fold.replay(FillReplayBatches)(
+      b => partials.filter($"b" === b.toLong).drop("b"))(sumByKeys("event_type", "hb"))
     graft.operators.Relational.fillFromHourly(
-      state.get.select($"event_type", $"hb", $"n_events",
-                       $"sum_v".cast("double").as("sum_value")))
+      state.select($"event_type", $"hb", $"n_events",
+                   $"sum_v".cast("double").as("sum_value")))
   }
 }
