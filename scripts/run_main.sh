@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Launch a graft main against the compiled classes without sbt's JVM
 # overhead (sbt forks per run and re-resolves the build; a scale sweep
-# launches dozens of JVMs). Mirrors build.sbt's jdk17AddOpens.
+# launches dozens of JVMs). Mirrors build.sbt's jdk17AddOpens; Spark confs
+# come from the graft.Session profile every main builds.
 #
 #   GRAFT_MEM=48g scripts/run_main.sh graft.ScaleGen /root/testdata/sf0.1 /tmp/graft_sf1 10
 set -eu
@@ -16,6 +17,5 @@ ARGS=()
 for p in "${OPENS[@]}"; do ARGS+=("--add-opens" "$p=ALL-UNNAMED"); done
 exec java "${ARGS[@]}" \
   -Xmx"${GRAFT_MEM:-48g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"

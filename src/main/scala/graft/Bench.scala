@@ -13,8 +13,8 @@ object Bench {
     * A failed query must not read as a fast success: any failed round
     * marks the key -1.
     */
-  private def timeRoundRobin(spark: SparkSession, dir: String,
-                             keys: Seq[String], reps: Int): Seq[(String, Double)] = {
+  private[graft] def timeRoundRobin(spark: SparkSession, dir: String,
+                                    keys: Seq[String], reps: Int): Seq[(String, Double)] = {
     // SPARK_GRAFT_BENCH_WARM=0 skips the warm pass: at ScaleGen x100/x1000
     // the per-key wall is seconds-to-minutes, so the ~0.5 s codegen compile
     // the warm pass exists to absorb is noise there, and one pass instead
@@ -44,15 +44,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // NTZ casts are TZ-sensitive
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // see Tables.events
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     // reps=3 is the driver contract at sf0.1; the recorded x1000 full-suite
     // bench runs reps=1 (warm pass + one timed round) to keep a 202-key
@@ -79,9 +71,7 @@ object Bench {
     // graft_sf1, x100 = /tmp/graft_sf10, x1000 = /tmp/graft_sf100 — the dir
     // names carry the legacy sf aliases; the RECORDED artifacts are named by
     // factor: BENCH_x10/x100/x1000_local.json).
-    val sf1Dir = sys.env.get("SPARK_GRAFT_SCALE_DIR")
-      .orElse(sys.env.get("SPARK_GRAFT_SF1_DIR")) // legacy alias
-      .getOrElse("/tmp/graft_sf1")
+    val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_sf1")
     val sf1Json =
       if (!new java.io.File(s"$sf1Dir/lineitem.parquet").exists()) ""
       else {

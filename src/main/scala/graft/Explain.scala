@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: `runMain graft.Explain <sfDir> [queryName ...]` prints the
   * formatted physical plan of each named query (default: all). Used to keep
   * pushdown/broadcast/codegen properties honest while iterating.
@@ -10,13 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // see Tables.events
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"========== $n ==========")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for the sf1 bench spot-check: replicates an existing
@@ -72,15 +72,7 @@ object ScaleGen {
       require(unknown.isEmpty,
         s"unknown table(s) ${unknown.mkString(",")} — valid: ${AllTables.mkString(",")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // NTZ casts are TZ-sensitive
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // see Tables.events
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(out).mkdirs()
 
     def write(name: String, df: => DataFrame): Unit = {

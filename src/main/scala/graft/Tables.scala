@@ -22,7 +22,8 @@ object Tables {
     *
     * ASSUMPTION (deliberate, r14-adjudicated): inputs under a data dir are
     * immutable for the life of the JVM, and every session in the JVM runs
-    * the same parquet-inference confs (all graft mains build one session).
+    * the same parquet-inference confs — [[graft.Session]] is their single
+    * source for every graft main and the spec suite.
     * Regenerating a file in place with a DIFFERENT schema mid-JVM would
     * pin the first-inferred schema; no graft main does that. events.ts'
     * observed-schema branch is unaffected: the memoized schema IS the

@@ -130,7 +130,7 @@ object Dedup {
     */
   val NeighborWindow = 8
 
-  /** Probe seams for [[graft.DedupScaleProbe]] — the measurement loop the
+  /** Probe seams for `graft.Probe dedup-scale` — the measurement loop the
     * band-bucket occupancy analysis (SURVEY §7f) is based on.
     */
   private[graft] def probeSignatures(s: SparkSession, dir: String): DataFrame =

@@ -372,7 +372,7 @@ object Similarity {
   def annPq(s: SparkSession, dir: String): DataFrame =
     annPqAtDepth(s, dir, depthOverride = None)
 
-  /** [[annPq]] with a forced re-rank depth — the RecallProbe seam for
+  /** [[annPq]] with a forced re-rank depth — the `graft.Probe recall` seam for
     * measuring the depth-vs-recall consequence of the [[PqMaxDepth]]
     * constant-budget regime (the cap binds only past 4M vectors, beyond
     * the largest generated dataset, so the binding regime is probed by

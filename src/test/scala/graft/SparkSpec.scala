@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs; sf0.001 data. */
+/** Shared local SparkSession for all specs (the [[Session]] profile at 4
+  * cpus); sf0.001 data. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
   lazy val spark: SparkSession = SparkSpec.session
@@ -43,15 +44,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Session.builder(4)
       .appName("graft-test")
       .config("spark.sql.warehouse.dir",
               java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // see Tables.events
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
