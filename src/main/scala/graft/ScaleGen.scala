@@ -60,6 +60,7 @@ object ScaleGen {
       .withColumn("n_chars", length(col("text")).cast("long"))
 
   def main(args: Array[String]): Unit = {
+    require(args.length >= 3, "usage: graft.ScaleGen <srcSfDir> <outDir> <factor> [mode] [tables]")
     val src = args(0); val out = args(1); val factor = args(2).toInt
     val mode = if (args.length > 3) args(3) else "replica"
     require(mode == "replica" || mode == "realistic", s"unknown mode $mode")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.GraftFunctions._
 
 /** Deduplication for LLM-corpus building — SURVEY.md §2.D.
@@ -186,7 +186,7 @@ object Dedup {
     // shingle+minhash kernel ran twice per doc; materialize the per-doc
     // signatures once (doc_id + NumHashes ints — the d20 persisted-index
     // shape) and band both sides off that
-    val banded = bandSignatures(signatures(s, dir).localCheckpoint(true))
+    val banded = bandSignatures(Materialize(signatures(s, dir)))
     val isEval = $"doc_id" % 7 === 3
     val evalB = banded.filter(isEval)
       .select($"band_id", $"band_key", $"sig".as("eval_sig"))
@@ -521,9 +521,8 @@ object Dedup {
     // the scored projection feeds the cutoff histogram AND the gate join:
     // materialize it once (3 narrow columns) so the regex-heavy quality
     // score runs one pass instead of two
-    val docs = Tables.documents(s, dir)
-      .select($"doc_id", $"source", TextOps.qualityCol.as("quality"))
-      .localCheckpoint(true)
+    val docs = Materialize(Tables.documents(s, dir)
+      .select($"doc_id", $"source", TextOps.qualityCol.as("quality")))
     docs.join(broadcast(histogramQualityCutoffs(docs)), "source")
       .filter($"quality" > $"cutoff")
       .select($"doc_id", $"source", $"quality", $"cutoff")
@@ -569,7 +568,7 @@ object Dedup {
     graft.functions.GraftFunctions.register(s)
     val hashed = Tables.documents(s, dir)
       .select($"doc_id", simhash60(split(lower(trim($"text")), "\\s+")).as("sh"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val banded = hashed.select($"doc_id", $"sh",
         explode(expr("transform(sequence(0, 3), " +
           "b -> struct(b AS band_id, shiftright(sh, b*15) & 32767 AS band_bits))")).as("band"))
@@ -610,7 +609,7 @@ object Dedup {
     val hashed = Tables.documents(s, dir)
       .select($"doc_id", simhashWide120(toks).as("shw"))
       .select($"doc_id", $"shw".getItem(0).as("sh_lo"), $"shw".getItem(1).as("sh_hi"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val banded = hashed.select($"doc_id", $"sh_lo", $"sh_hi",
         explode(expr("transform(sequence(0, 3), b -> struct(b AS band_id, " +
           "CASE WHEN b < 2 THEN shiftright(sh_lo, b*30) & 1073741823 " +
@@ -635,8 +634,8 @@ object Dedup {
     * their own id). d10 is the builder; d22/d26 are consumers that JOIN this
     * table instead of re-running the iterative clustering (re-deriving
     * connected components per downstream report was the round-5/6
-    * scale-killer). Memoized per (session, sfDir) on the materialized
-    * localCheckpoint — the in-session stand-in for what is a persisted
+    * scale-killer). Memoized per (session, sfDir) on the labels
+    * [[graft.Materialize]] returns — the in-session stand-in for a persisted
     * table bucketed by cluster_id at 100 TB (d20's signature-index artifact
     * pattern), where each consumer is one bucketed join, zero rebuild.
     * maxIterations is part of the key so a non-default bound never aliases
@@ -684,8 +683,7 @@ object Dedup {
   private def labelPropagation(pairs0: DataFrame, maxIterations: Int): DataFrame = {
     val s = pairs0.sparkSession
     import s.implicits._
-    val pairs = pairs0.select($"doc_a", $"doc_b")
-      .localCheckpoint(true)
+    val pairs = Materialize(pairs0.select($"doc_a", $"doc_b"))
     val edges = pairs.union(pairs.select($"doc_b".as("doc_a"), $"doc_a".as("doc_b")))
     // Only edge endpoints participate in propagation — in a deduped corpus
     // near-dups are a small fraction, so the iterated tables stay tiny while
@@ -699,7 +697,7 @@ object Dedup {
     var labels = edges
       .select($"doc_a".as("doc_id"), least($"doc_a", $"doc_b").as("cluster_id"))
       .groupBy($"doc_id").agg(min($"cluster_id").as("cluster_id"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIterations) {
@@ -718,7 +716,7 @@ object Dedup {
         .select(pulled("doc_id"),
                 least(pulled("cluster_id"), $"l_cl").as("cluster_id"),
                 (least(pulled("cluster_id"), $"l_cl") =!= pulled("old_cl")).as("changed"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       // fixpoint test reads the just-materialized rows — labels only
       // decrease, so "no row changed this round" is a sound stopping rule,
       // and carrying the flag in the row avoids a per-round two-table join
@@ -966,7 +964,7 @@ object Dedup {
       .select($"doc_id", $"source", TextOps.qualityCol.as("quality"),
         size(expr("filter(split(lower(trim(text)), '\\\\s+'), t -> t <> '')"))
           .cast("long").as("tokens"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val bands = scored.groupBy($"source", $"quality").agg(sum($"tokens").as("band_toks"))
     val wDesc = Window.partitionBy($"source").orderBy($"quality".desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1363,7 +1361,7 @@ object Dedup {
       .select($"doc_id",
         array_distinct(expr("gram_hashes31(split(lower(trim(text)), '\\\\s+'), 3)"))
           .as("hv"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val postings = hv.select($"doc_id", explode($"hv").as("h"))
     val queries = hv.filter($"doc_id" % 7 === 3 && $"doc_id" < BottomkEvalCap)
       .select($"doc_id".as("eval_id"),

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** The flagship composite: the whole reference pipeline as ONE declarative
   * plan — fetch (scan) -> clean -> analyze -> dedup -> render — that
@@ -145,7 +145,7 @@ object EndToEnd {
         fp.as("content_md5"),
         size(expr("filter(split(lower(trim(text)), '\\\\s+'), t -> t <> '')"))
           .cast("long").as("n_toks"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // 1. histogram-calibrated per-source quality gate (d24)
     val gated = scored
       .join(broadcast(Dedup.histogramQualityCutoffs(scored)), "source")
@@ -192,10 +192,8 @@ object EndToEnd {
     // paid them on three separate corpus scans (cutoff histogram, eval
     // fingerprints, main lineage); all three consumers now read the same
     // materialized 4-column frame
-    val scored = docs
-      .select($"doc_id", $"source", TextOps.qualityCol.as("quality"),
-        fp.as("content_md5"))
-      .localCheckpoint(true)
+    val scored = Materialize(docs.select($"doc_id", $"source",
+      TextOps.qualityCol.as("quality"), fp.as("content_md5")))
     val evalFps = scored.filter($"doc_id" % 7 === 3)
       .select($"content_md5".as("eval_md5")).distinct()
     val flagged = scored

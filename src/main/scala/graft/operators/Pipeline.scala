@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Reference-pipeline semantics re-expressed Spark-first — SURVEY.md §2.B.
   *
@@ -319,9 +319,8 @@ object PipelineOps {
         (sum($"dl").as("total_toks") +:
          SearchTerms.indices.map(i =>
            sum(when(col(tfCol(i)) > 0, 1L).otherwise(0L)).as(dfCol(i)))): _*)
-      .localCheckpoint(true)
-    val stats = graft.streaming.Fold.replay(Bm25ReplayBatches)(
-      b => partials.filter($"b" === b.toLong).drop("b"))(graft.streaming.Streams.sumByKeys())
+    val stats = graft.streaming.Fold.replayPartials(Bm25ReplayBatches, partials)(
+      graft.streaming.Streams.sumByKeys())
     tfDisplay(bm25From(base, stats), SearchTerms)
   }
 
@@ -334,14 +333,12 @@ object PipelineOps {
     import s.implicits._
     val docs = Tables.documents(s, dir)
     // The edge projection is consumed once PER LEVEL by the chained BFS
-    // joins below — materialize it once (localCheckpoint of two-long rows)
+    // joins below — materialize it once (two-long rows)
     // so the closure reads the parquet corpus once, not depth (= log2 n)
     // times. At 100 TB this is the difference between one corpus scan and
     // ~25 of them; the reused-DataFrame caching rule applies exactly here.
-    val edges = docs
-      .filter($"doc_id" >= 1)
-      .select($"doc_id".as("child"), expr("(doc_id - 1) div 2").as("parent"))
-      .localCheckpoint(true)
+    val edges = Materialize(docs.filter($"doc_id" >= 1)
+      .select($"doc_id".as("child"), expr("(doc_id - 1) div 2").as("parent")))
     // One metadata-only scalar job bounds the tree depth (parquet aggregate
     // pushdown answers max(doc_id) from file footers — no data scan even at
     // 100 TB); the whole closure is then built lazily (depth chained joins)
@@ -684,8 +681,8 @@ object PipelineOps {
     * `row_number() OVER (ORDER BY ...)` funnels the whole corpus through
     * ONE reducer. The scale-correct shape is two-phase enumeration:
     * range-partition on the canonical key and PIN the placement
-    * (localCheckpoint — the two phases must see the same partitioning, and
-    * a re-planned exchange could legally move boundary rows between runs),
+    * ([[graft.Materialize]] — the two phases must see the same partitioning,
+    * and a re-planned exchange could legally move boundary rows between runs),
     * count rows per partition (a |partitions|-row aggregate), turn the
     * counts into exclusive prefix offsets (driver-side over a few hundred
     * longs — the documented tiny-collect exception: bounded by cluster
@@ -711,12 +708,10 @@ object PipelineOps {
     * The fan-out is NOT a constant: it follows `spark.sql.shuffle.partitions`
     * (32 here, thousands on a real cluster), so the enumeration's
     * parallelism — and the size of the driver-side offset array — scales
-    * with the cluster, never with the data. Placement pinning uses
-    * `localCheckpoint` for this in-session verification shape; the durable
-    * production recipe is the same two phases over a PERSISTED
-    * range-partitioned table (write `repartitionByRange(...).sortWithinPartitions`
-    * parquet once, then count + rank over the stored layout), which survives
-    * executor loss and lets the offsets be recomputed from the table alone.
+    * with the cluster, never with the data. Placement is pinned by
+    * [[graft.Materialize]] (see its single-JVM assumption); a durable
+    * production run would count + rank over a PERSISTED range-partitioned
+    * table instead, so the offsets could be recomputed from the table alone.
     */
   private[graft] def twoPhaseIndex(rows: DataFrame, offset: Long): (DataFrame, Long) = {
     val s = rows.sparkSession
@@ -725,7 +720,7 @@ object PipelineOps {
     val placed = rows
       .repartitionByRange(nParts, $"source", $"doc_id")
       .withColumn("pid", spark_partition_id().cast("long"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val counts = placed.groupBy($"pid").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
     val offsets = counts.map(_._1)

@@ -1009,9 +1009,7 @@ object Relational {
       .groupBy($"b", $"l_returnflag", $"l_linestatus")
       .agg(sum($"qty").as("s_qty"), sum($"price").as("s_price"),
            sum($"disc_price").as("s_disc"), count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val state = graft.streaming.Fold.replay(MvReplayBatches)(
-      b => partials.filter($"b" === b.toLong).drop("b"))(
+    val state = graft.streaming.Fold.replayPartials(MvReplayBatches, partials)(
       graft.streaming.Streams.sumByKeys("l_returnflag", "l_linestatus"))
     state.select($"l_returnflag", $"l_linestatus",
         $"s_qty".cast("double").as("sum_qty"),

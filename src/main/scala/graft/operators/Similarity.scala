@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.GraftFunctions._
 
 /** Similarity search over the embedding column — SURVEY.md §2.D.
@@ -209,7 +209,7 @@ object Similarity {
     * would otherwise make neighbor lists vary run-to-run). The 100 TB
     * shape: per-iteration cost is one corpus scan.
     *
-    * Each iteration's codebook is MATERIALIZED (localCheckpoint of k ≤
+    * Each iteration's codebook is MATERIALIZED ([[graft.Materialize]], k ≤
     * [[IvfMaxCentroids]] rows — driver-bounded by construction): iteration
     * i's plan embeds iteration i-1's whole lineage, and the finished
     * codebook is consumed by SEVERAL subtrees downstream (ivfSearch
@@ -240,7 +240,7 @@ object Similarity {
         .groupBy($"centroid_id")
         .agg(graft.functions.GraftFunctions
           .vecMeanAgg($"embedding", lit(EmbedDim)).as("ce"))
-        .localCheckpoint(true) // k rows; truncates the per-iteration lineage
+        .transform(Materialize(_)) // k rows; truncates the per-iteration lineage
     }
     centroids
   }

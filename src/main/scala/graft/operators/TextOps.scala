@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Text / markup processing — SURVEY.md §2.C.
   *
@@ -627,22 +627,19 @@ object TextOps {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val vocab = bpeVocab(s, dir)
-    var v = vocab.select(expr(bpeCharSplit).as("s"), $"wc")
-      .localCheckpoint(true)
+    var v = Materialize(vocab.select(expr(bpeCharSplit).as("s"), $"wc"))
     val w = Window.orderBy($"freq".desc, $"pair".asc)
     val levels = (1 to BpeLevels).map { lvl =>
       val pairs = bpePairCensus(v)
       val top = pairs.orderBy($"freq".desc, $"pair".asc).limit(BpeTopK)
         .withColumn("rank", row_number().over(w).cast("long"))
         .select(lit(lvl.toLong).as("level"), $"rank", $"pair", $"freq")
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       if (lvl < BpeLevels) {
         val best = top.filter($"rank" === 1)
           .select(expr("element_at(split(pair, chr(31)), 1)").as("a"),
                   expr("element_at(split(pair, chr(31)), 2)").as("b"))
-        v = v.crossJoin(broadcast(best))
-          .select(expr(bpeMergeFold).as("s"), $"wc")
-          .localCheckpoint(true)
+        v = Materialize(v.crossJoin(broadcast(best)).select(expr(bpeMergeFold).as("s"), $"wc"))
       }
       top
     }
@@ -677,16 +674,14 @@ object TextOps {
     // never does. Same lesson as dsirOf: a shared projection must be
     // SMALLER than what it replaces; this one is occurrence-granularity.
     val vocab = bpeVocab(s, dir)
-    var v = vocab.select($"term", expr(bpeCharSplit).as("s"), $"wc")
-      .localCheckpoint(true)
+    var v = Materialize(vocab.select($"term", expr(bpeCharSplit).as("s"), $"wc"))
     for (_ <- 1 to BpeLevels) {
       val best = bpePairCensus(v)
         .orderBy($"freq".desc, $"pair".asc).limit(1)
         .select(expr("element_at(split(pair, chr(31)), 1)").as("a"),
                 expr("element_at(split(pair, chr(31)), 2)").as("b"))
-      v = v.crossJoin(broadcast(best))
-        .select($"term", expr(bpeMergeFold).as("s"), $"wc")
-        .localCheckpoint(true)
+      v = Materialize(v.crossJoin(broadcast(best))
+        .select($"term", expr(bpeMergeFold).as("s"), $"wc"))
     }
     val encoded = v.select($"term",
       length($"term").cast("long").as("n_chr"),
@@ -783,7 +778,7 @@ object TextOps {
     graft.functions.GraftFunctions.register(s)
     // Two lazy passes over the corpus (census + probe), DELIBERATELY not
     // de-duplicated via a materialized shared subtree: an r14 probe that
-    // localCheckpoint'd the tokenized (doc_id, t) projection measured flat
+    // materialized the tokenized (doc_id, t) projection measured flat
     // at sf0.1 (best 0.98 vs 0.99 s, medians equal) — the saved scan +
     // regex split is repaid by the checkpoint's materialize-and-read cost,
     // and at 100 TB storing a corpus-sized token-array copy per run is a
@@ -1234,8 +1229,7 @@ object TextOps {
     // scoring join) and the per-doc scores by two more (the histogram-cutoff
     // path and the final verdict) — materialize each once (vocab-sized and
     // |docs|-sized respectively). Same rows, same math.
-    val model = raw.select($"term", $"cnt_raw", ($"cnt_t" + 1L).as("cnt_tgt"))
-      .localCheckpoint(true)
+    val model = Materialize(raw.select($"term", $"cnt_raw", ($"cnt_t" + 1L).as("cnt_tgt")))
     val totals = model.agg(sum($"cnt_raw").as("total_raw"),
                            sum($"cnt_tgt").as("total_tgt"))
     def bits2(c: Column) = length(bin(c * c))
@@ -1247,7 +1241,7 @@ object TextOps {
       .agg(count(lit(1)).as("n_toks"), sum($"imp").as("imp_halfbits_total"))
       .select($"doc_id", $"source", $"n_toks", $"imp_halfbits_total",
         expr("imp_halfbits_total * 1000 div n_toks").as("mean_imp_milli"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     import org.apache.spark.sql.expressions.Window
     val pool = scored.filter($"source" =!= DsirTarget)
     val hist = pool.groupBy($"mean_imp_milli").agg(count(lit(1)).as("c"))

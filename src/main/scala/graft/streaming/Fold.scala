@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The fold protocol behind all of graft's incremental state: a merge
@@ -8,22 +9,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * materialized between batches. [[replay]] drives it over deterministic
   * batches (the oracled replay keys); [[sink]] drives it per streaming
   * micro-batch against a parquet state path. Both share the merge, so a
-  * replay key's oracle result speaks for its sink.
-  *
-  * Contract:
-  *  - State is EAGERLY materialized after every fold, the first included
-  *    (`localCheckpoint(true)`): a replay key runs its folds while its
-  *    DataFrame is being built, before any action on the result.
-  *  - Lineage is truncated at each fold, so fold n's plan starts from
-  *    fold n-1's materialized rows, never from the chain of earlier merges.
-  *    In [[sink]] the materialized state is what overwrites `statePath`;
-  *    the merge read that same path, and parquet has no transactional swap.
-  *  - Single-JVM assumption: a `localCheckpoint` block lives on the one
-  *    executor that computed it, with no replica and no lineage behind it.
-  *    Losing that executor fails the next fold with
-  *    `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND` (measured on
-  *    `local-cluster[2,1,1024]`); `persist()` would recompute instead.
-  *    This is the one place that policy lives.
+  * replay key's oracle result speaks for its sink. Every fold's state goes
+  * through [[graft.Materialize]]; in [[sink]] that state overwrites the
+  * `statePath` its merge read (parquet has no transactional swap).
   */
 object Fold {
 
@@ -32,8 +20,16 @@ object Fold {
   /** Fold batches `0 until batches` into state; returns the final state. */
   def replay(batches: Int)(batchOf: Int => DataFrame)(merge: Merge): DataFrame =
     (0 until batches).foldLeft(Option.empty[DataFrame]) { (state, b) =>
-      Some(materialize(merge(state, batchOf(b))))
+      Some(graft.Materialize(merge(state, batchOf(b))))
     }.get
+
+  /** [[replay]] over per-batch partials aggregated in ONE scan: `partials`
+    * carries a long batch column `b`, is materialized once, and fold `b`
+    * reads its slice without that column. */
+  def replayPartials(batches: Int, partials: DataFrame)(merge: Merge): DataFrame = {
+    val p = graft.Materialize(partials)
+    replay(batches)(b => p.filter(col("b") === b.toLong).drop("b"))(merge)
+  }
 
   /** Fold each micro-batch of `stream` into the parquet state at `statePath`
     * (absent path = empty state) and overwrite it with the merged state. */
@@ -42,10 +38,8 @@ object Fold {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val s = batch.sparkSession
         val state = if (graft.Fs.exists(s, statePath)) Some(s.read.parquet(statePath)) else None
-        materialize(merge(state, batch)).write.mode("overwrite").parquet(statePath)
+        graft.Materialize(merge(state, batch)).write.mode("overwrite").parquet(statePath)
         ()
       }
       .start()
-
-  private def materialize(state: DataFrame): DataFrame = state.localCheckpoint(true)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** One event row as consumed by the typed sessionizer. */
 case class Event(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
@@ -250,9 +250,7 @@ object Streams {
               pmod($"event_id", lit(AnomalyReplayBatches.toLong)).as("b"))
       .groupBy($"b", $"event_type", $"hb")
       .agg(count(lit(1)).as("n_events"))
-      .localCheckpoint(true)
-    val state = Fold.replay(AnomalyReplayBatches)(
-      b => partials.filter($"b" === b.toLong).drop("b"))(sumByKeys("event_type", "hb"))
+    val state = Fold.replayPartials(AnomalyReplayBatches, partials)(sumByKeys("event_type", "hb"))
     graft.operators.Relational.madFromHourly(state)
   }
 
@@ -534,7 +532,7 @@ object Streams {
     sketches.groupBy(col("event_type")).agg(hll_union_agg(col("sketch")).as("sketch"))
 
   /** s20: multi-batch sketch fold as an oracled key — the [[sketchSink]]
-    * union fold replayed through [[Fold.replay]] over [[SketchFoldBatches]]
+    * union fold replayed through [[Fold.replayPartials]] over [[SketchFoldBatches]]
     * deterministic micro-batches. The readout verdicts the FOLDED estimate
     * against the exact global distinct count: hash-equality proves the
     * incremental sketches reach (within the q24 error gate) the same answer
@@ -554,9 +552,7 @@ object Streams {
     val partials = ev
       .groupBy(pmod($"event_id", lit(SketchFoldBatches.toLong)).as("b"), $"event_type")
       .agg(hll_sketch_agg($"user_id", lit(12)).as("sketch"))
-      .localCheckpoint(true)
-    val state = Fold.replay(SketchFoldBatches)(
-        b => partials.filter($"b" === b.toLong).select($"event_type", $"sketch")) {
+    val state = Fold.replayPartials(SketchFoldBatches, partials) {
       (prior, inc) => prior.fold(inc)(st => sketchUnion(st.unionByName(inc)))
     }
     val exact = ev.groupBy($"event_type")
@@ -896,7 +892,7 @@ object Streams {
       val batch = docs.filter(pmod($"doc_id", lit(IndexReplayBatches.toLong)) === b)
       val (assigned, n) = graft.operators.PipelineOps.twoPhaseIndex(batch, offset)
       offset += n
-      assigned.withColumn("batch_idx", lit(b.toLong)).localCheckpoint(true)
+      Materialize(assigned.withColumn("batch_idx", lit(b.toLong)))
     }
     parts.reduce(_ unionByName _)
       .select($"doc_id", $"source", $"batch_idx", $"global_idx")
@@ -994,7 +990,7 @@ object Streams {
     * First fold: full partitioned write (`partitionBy(pb)`, rows sorted by
     * digest within partitions for parquet min/max locality).
     *
-    * Later folds: (1) aggregate the batch ONCE (localCheckpoint — it feeds
+    * Later folds: (1) aggregate the batch ONCE ([[graft.Materialize]] — it feeds
     * the merge, and the SAME job carries the touched-partition probe as an
     * observed bit_or mask over [[chunkPb]], so no second pass over the
     * batch exists); (2) the touched-pb list decodes from that ≤64-bit mask
@@ -1056,7 +1052,7 @@ object Streams {
       val inc = chunkStoreMerge(None, batchChunks)
         .observe(obs, bit_or(call_function("shiftleft", lit(1L),
           chunkPb($"chunk_hash"))).as("pb_mask"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       val mask = obs.get("pb_mask") match {
         case null => 0L // empty batch: bit_or over zero rows is null
         case m    => m.asInstanceOf[Long]
@@ -1140,8 +1136,7 @@ object Streams {
       .withColumn("batch", pmod($"doc_id", lit(ChunkReplayBatches.toLong)))
     val deleted = pmod($"doc_id", lit(graft.operators.EndToEnd.ErasureMod)) ===
       graft.operators.EndToEnd.ErasureResidue
-    val store = chunkStoreMerge(None, chunks)
-      .select($"chunk_hash", $"n_copies").localCheckpoint(true)
+    val store = Materialize(chunkStoreMerge(None, chunks).select($"chunk_hash", $"n_copies"))
     val tombstones = chunks.filter(deleted)
       .groupBy($"chunk_hash").agg(count(lit(1)).as("n_del"))
     store.join(tombstones, Seq("chunk_hash"), "left")
@@ -1169,9 +1164,7 @@ object Streams {
     // Per-batch partials from ONE scan.
     val partials = graft.operators.Dedup.driftCounts(base,
         extraKeys = Seq("b" -> pmod($"doc_id", lit(DriftReplayBatches.toLong))))
-      .localCheckpoint(true)
-    val state = Fold.replay(DriftReplayBatches)(
-      b => partials.filter($"b" === b.toLong).drop("b"))(fullOuterAdd("dim", "bucket"))
+    val state = Fold.replayPartials(DriftReplayBatches, partials)(fullOuterAdd("dim", "bucket"))
     graft.operators.Dedup.driftReadout(state)
   }
 
@@ -1197,9 +1190,7 @@ object Streams {
     val partials = toks
       .groupBy(pmod($"doc_id", lit(CensusReplayBatches.toLong)).as("b"), $"term")
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
-    val census = Fold.replay(CensusReplayBatches)(
-      b => partials.filter($"b" === b.toLong).drop("b"))(fullOuterAdd("term"))
+    val census = Fold.replayPartials(CensusReplayBatches, partials)(fullOuterAdd("term"))
     graft.operators.TextOps.surprisalReadout(toks, census)
   }
 
@@ -1235,7 +1226,7 @@ object Streams {
         .transformWithState(new TermCensusProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
         .toDF()
-        .localCheckpoint(true)
+        .transform(Materialize(_))
     } finally prev match {
       case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
       case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -1335,9 +1326,7 @@ object Streams {
               pmod($"event_id", lit(FillReplayBatches.toLong)).as("b"))
       .groupBy($"b", $"event_type", $"hb")
       .agg(count(lit(1)).as("n_events"), sum($"v").as("sum_v"))
-      .localCheckpoint(true)
-    val state = Fold.replay(FillReplayBatches)(
-      b => partials.filter($"b" === b.toLong).drop("b"))(sumByKeys("event_type", "hb"))
+    val state = Fold.replayPartials(FillReplayBatches, partials)(sumByKeys("event_type", "hb"))
     graft.operators.Relational.fillFromHourly(
       state.select($"event_type", $"hb", $"n_events",
                    $"sum_v".cast("double").as("sum_value")))

@@ -16,6 +16,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
   }
 
+  /** Jobs `body` ran, counted under job group `group` once the listener bus
+    * has drained (the status tracker is listener-fed). */
+  def jobsRun(group: String)(body: => Any): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    org.apache.spark.graftspec.BusShim.drain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
   /** Physical plan with the AQE wrapper peeled (pre-execution initial plan). */
   def physical(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.SparkPlan =
     df.queryExecution.executedPlan match {

@@ -492,15 +492,8 @@ class StreamingSpec extends SparkSpec {
     val key = "s23_spec_jobcount_store"
     Streams.chunkFold(s, key, chunksOf(s, (0 until 200).map(i => s"jc_$i"), 0L),
       0L, firstFold = true)
-    s.sparkContext.setJobGroup("s23jc", "s23 fold job-count probe")
-    try Streams.chunkFold(s, key,
-      chunksOf(s, (0 until 50).map(i => s"jc_new_$i"), 1L), 1L, firstFold = false)
-    finally s.sparkContext.clearJobGroup()
-    // the status store is listener-fed (async): poll until the count is
-    // stable rather than sleeping a fixed guess
-    def ids = s.sparkContext.statusTracker.getJobIdsForGroup("s23jc").length
-    var prev = -1; var cur = ids; var spins = 0
-    while (cur != prev && spins < 50) { prev = cur; Thread.sleep(100); cur = ids; spins += 1 }
+    val cur = jobsRun("s23jc")(Streams.chunkFold(s, key,
+      chunksOf(s, (0 until 50).map(i => s"jc_new_$i"), 1L), 1L, firstFold = false))
     // measured on this fixture (AQE splits each query into several jobs):
     // r13 shape with the probe = 10 jobs, r14 observe shape = 8. The bound
     // pins the 2-job probe out while tolerating AQE's own job accounting.

@@ -426,13 +426,7 @@ class TextOpsSpec extends SparkSpec {
     // is scanned exactly once (the initial vocab checkpoint); every other
     // job is vocabulary-bounded. Asserting the measured ceiling pins a
     // second corpus scan or a reintroduced per-level probe OUT.
-    val s = spark
-    s.sparkContext.setJobGroup("t23jc", "t23 job-budget probe")
-    try SparkEntry.queries("t23_bpe_pairs")(s, sfDir).count()
-    finally s.sparkContext.clearJobGroup()
-    def ids = s.sparkContext.statusTracker.getJobIdsForGroup("t23jc").length
-    var prev = -1; var cur = ids; var spins = 0
-    while (cur != prev && spins < 50) { prev = cur; Thread.sleep(100); cur = ids; spins += 1 }
+    val cur = jobsRun("t23jc")(SparkEntry.queries("t23_bpe_pairs")(spark, sfDir).count())
     // measured on this fixture: 15 jobs = 8 semantic materializations
     // (1 vocab checkpoint + 3 census checkpoints + 2 winner broadcast
     // collects + 2 fold checkpoints) plus AQE's per-exchange stage jobs
