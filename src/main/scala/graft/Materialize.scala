@@ -20,8 +20,7 @@ import org.apache.spark.sql.DataFrame
   * `Streams.censusTwsBatch` scopes the RocksDB provider conf around it;
   * `PipelineOps.twoPhaseIndex` relies on it to pin range placement between
   * its two phases; `Dedup.clusterLabelCache` memoizes the materialized labels
-  * for the session's lifetime; `streaming.Fold.sink` overwrites the same
-  * path its merge read.
+  * for the session's lifetime.
   */
 object Materialize {
   def apply(df: DataFrame): DataFrame = df.localCheckpoint(true)

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.commons.io.FileUtils
+
 /** Shared lifecycle for the driver-side test-fixture stores (m03's
   * attachment directory, p21's planted jsonl). Production never runs these —
   * the readers point at an existing object-store path — so the helper is
@@ -32,8 +34,7 @@ private[graft] object Fixtures {
         if (!store.exists())
           throw new java.io.IOException(
             s"fixture publish failed: rename $tmp -> $store returned false and no store exists")
-        tmp.listFiles().foreach(_.delete())
-        tmp.delete()
+        FileUtils.deleteQuietly(tmp)
       }
     }
     store
@@ -46,9 +47,6 @@ private[graft] object Fixtures {
     Option(store.getParentFile.listFiles()).getOrElse(Array.empty[java.io.File])
       .filter(f => f.isDirectory && f.getName.startsWith(store.getName + ".build.")
         && f.lastModified() < cutoff)
-      .foreach { d =>
-        Option(d.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(_.delete())
-        d.delete()
-      }
+      .foreach(FileUtils.deleteQuietly)
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -111,7 +112,7 @@ class RenderBatchWrite(path: String, queryId: String, idI: Int, spaceI: Int,
     if (truncate)
       Option(target.listFiles()).getOrElse(Array.empty[java.io.File])
         .filter(f => f.getName.startsWith("space=") || f.getName == "_MANIFEST")
-        .foreach(delete)
+        .foreach(FileUtils.deleteQuietly)
     var published = 0L
     messages.collect { case m: RenderCommitMessage => m }.foreach { m =>
       val attempt = new java.io.File(m.attemptDir)
@@ -133,15 +134,10 @@ class RenderBatchWrite(path: String, queryId: String, idI: Int, spaceI: Int,
     }
     java.nio.file.Files.writeString(new java.io.File(target, "_MANIFEST").toPath,
       s"""{"files": $published, "query_id": "$queryId"}""" + "\n")
-    delete(staging)
+    FileUtils.deleteQuietly(staging)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = delete(staging)
-
-  private def delete(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(delete)
-    f.delete()
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit = FileUtils.deleteQuietly(staging)
 }
 
 class RenderWriterFactory(path: String, queryId: String, idI: Int, spaceI: Int,
@@ -171,13 +167,7 @@ class RenderDataWriter(path: String, queryId: String, partitionId: Int,
 
   override def commit(): WriterCommitMessage = RenderCommitMessage(attemptDir.getPath)
 
-  override def abort(): Unit = {
-    def delete(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(delete)
-      f.delete()
-    }
-    delete(attemptDir)
-  }
+  override def abort(): Unit = FileUtils.deleteQuietly(attemptDir)
 
   override def close(): Unit = ()
 }

@@ -9,9 +9,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * materialized between batches. [[replay]] drives it over deterministic
   * batches (the oracled replay keys); [[sink]] drives it per streaming
   * micro-batch against a parquet state path. Both share the merge, so a
-  * replay key's oracle result speaks for its sink. Every fold's state goes
-  * through [[graft.Materialize]]; in [[sink]] that state overwrites the
-  * `statePath` its merge read (parquet has no transactional swap).
+  * replay key's oracle result speaks for its sink. [[replay]] materializes
+  * every fold's state through [[graft.Materialize]]; [[sink]] commits each
+  * merged state as a new [[StateDir]] version beside the one its merge read.
   */
 object Fold {
 
@@ -31,14 +31,16 @@ object Fold {
     replay(batches)(b => p.filter(col("b") === b.toLong).drop("b"))(merge)
   }
 
-  /** Fold each micro-batch of `stream` into the parquet state at `statePath`
-    * (absent path = empty state) and overwrite it with the merged state. */
+  /** Fold each micro-batch of `stream` into the [[StateDir]] state at
+    * `statePath` (no manifest = empty state); a re-delivered batch of the
+    * same query is a no-op. */
   def sink(stream: DataFrame, statePath: String, outputMode: String)(merge: Merge): StreamingQuery =
     stream.writeStream.outputMode(outputMode)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        val state = if (graft.Fs.exists(s, statePath)) Some(s.read.parquet(statePath)) else None
-        graft.Materialize(merge(state, batch)).write.mode("overwrite").parquet(statePath)
+        StateDir.commit(s, statePath, StateDir.queryWriter(s), batchId) { prior =>
+          StateDir.Version(merge(prior.map(StateDir.read(s, statePath, _)), batch))
+        }
         ()
       }
       .start()

@@ -482,7 +482,7 @@ object Streams {
 
   /** Live (tombstone-filtered) view of a [[cdcSink]] state table. */
   def cdcLiveState(s: SparkSession, statePath: String): DataFrame =
-    s.read.parquet(statePath).filter(col("op") =!= "error")
+    StateDir.read(s, statePath).get.filter(col("op") =!= "error")
 
   /** s17: multi-batch CDC replay as an oracled key — the [[cdcSink]] merge
     * fold (the reference StateManager's persistence loop,
@@ -827,53 +827,38 @@ object Streams {
     * exactly where the previous batch stopped. Inside a batch the
     * assignment is p30's two-phase shape (range-partition, per-partition
     * counts, offsets, partition-parallel rank — NO single-reducer sort);
-    * ACROSS batches the only state is two longs (the next offset and the
-    * last applied batch id), persisted like the s17/s20 sinks. A contiguous
-    * global sequence is inherently serial at the counter — this fold makes
-    * the serial part exactly two longs per batch, never a row. Numbered rows
-    * append per batch; re-numbering never happens, so an example's id is
+    * ACROSS batches the only state is one long (the next offset) riding in
+    * the [[StateDir]] manifest. A contiguous global sequence is inherently
+    * serial at the counter — this fold makes the serial part exactly one
+    * long per batch, never a row. Numbered rows append per batch as one new
+    * live directory; re-numbering never happens, so an example's id is
     * stable for the life of the corpus (what a training-manifest consumer
-    * requires), and indexApply's batch-id guard + per-batch-partition
-    * overwrite keep the fold exactly-once under replay.
+    * requires).
     */
   def indexSink(docs: DataFrame,
                 statePath: String): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        indexApply(batch, batchId, statePath)
+        indexApply(batch, StateDir.queryWriter(batch.sparkSession), batchId, statePath)
       }
       .start()
 
   /** The indexSink fold body, exactly-once under foreachBatch's at-least-once
-    * delivery: state is (next_offset, last_batch), a re-delivered batch
-    * (batchId <= last_batch) is skipped outright, and the row write itself is
-    * idempotent — rows land partitioned by batch_id under dynamic partition
-    * overwrite, so a crash BETWEEN the row write and the offset commit
-    * leaves a partial batch partition that the retry simply overwrites with
-    * identical content (same offset in ⇒ same ids out). Rows committed by
+    * delivery: the batch's rows and the advanced offset publish in ONE
+    * [[StateDir]] commit, so a re-delivered `(writer, batchId)` is a no-op
+    * and a crash before the swap leaves the prior offset, whose retry writes
+    * identical ids (same offset in ⇒ same ids out). Rows committed by
     * earlier batches are never touched, preserving the stable-id contract.
     */
-  private[graft] def indexApply(batch: DataFrame, batchId: Long,
-                                statePath: String): Unit = {
-    val s = batch.sparkSession
-    val (offset, lastBatch) =
-      if (graft.Fs.exists(s, statePath)) {
-        val r = s.read.parquet(statePath).head()
-        (r.getLong(r.fieldIndex("next_offset")), r.getLong(r.fieldIndex("last_batch")))
-      } else (0L, -1L)
-    if (batchId > lastBatch) {
+  private[graft] def indexApply(batch: DataFrame, writer: String, batchId: Long,
+                                statePath: String): Unit =
+    StateDir.commit(batch.sparkSession, statePath, writer, batchId) { prior =>
+      val offset = prior.fold(0L)(_.scalars("next_offset"))
       val (assigned, n) = graft.operators.PipelineOps.twoPhaseIndex(
         batch.select(col("doc_id"), col("source")), offset)
-      assigned.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(statePath + ".rows")
-      s.range(1).select(lit(offset + n).as("next_offset"),
-                        lit(batchId).as("last_batch"))
-        .write.mode("overwrite").parquet(statePath)
+      StateDir.Version(assigned, keep = prior.toSeq.flatMap(_.dirs),
+                       scalars = Map("next_offset" -> (offset + n)))
     }
-  }
 
   /** s22's oracled replay: the indexSink fold over 3 deterministic batches
     * (doc_id mod 3), offset carried between folds exactly as the sink
@@ -913,30 +898,24 @@ object Streams {
     * .chunkRows]]); only batch-distinct digests reach the join, so each
     * fold moves O(batch + store-overlap) rows — d20's incremental-index
     * shape at sub-document granularity. State persists between folds as
-    * ONE table PARTITIONED by a digest-prefix column ([[chunkFold]]): a
-    * fold reads only the partitions its batch touches (partition-pruned
-    * scan) and commits them back under dynamic partition overwrite, so
-    * per-fold WRITE volume is the touched partitions — O(batch + the
-    * store rows co-resident with it) — never O(store). That replaces the
-    * previous per-fold full-store bucketed rewrite, whose O(store) write
-    * IO per batch (quadratic total) was the 100-TB scale-killer; the
-    * trade (SURVEY §6: bucketed `insertInto` is rejected by Spark) is a
+    * [[StateDir]] versions PARTITIONED by a digest-prefix column
+    * ([[chunkFold]]): a fold reads only the partitions its batch touches
+    * (partition-pruned scan) and commits them as a new version that keeps
+    * every untouched partition listed, so per-fold WRITE volume is the
+    * touched partitions — O(batch + the store rows co-resident with it) —
+    * never O(store). The trade against a full-store bucketed rewrite is a
     * touched-rows-only exchange in the merge join instead of the
     * exchange-free bucketed read — exactly the LSM bargain. Reference
     * contract: state_manager.py:84-102's upsert touches only processed
     * pages, never the whole state file.
     */
   val ChunkReplayBatches = 3
-  def chunkStoreMerge(state: Option[DataFrame], batchChunks: DataFrame): DataFrame = {
+  def chunkStoreMerge(batchChunks: DataFrame): DataFrame = {
     val s = batchChunks.sparkSession
     import s.implicits._
-    val inc = batchChunks.groupBy($"chunk_hash").agg(
+    batchChunks.groupBy($"chunk_hash").agg(
       count(lit(1)).as("n_copies"),
       min(struct($"batch", $"doc_id", $"chunk_idx")).as("first"))
-    state match {
-      case None => inc
-      case Some(st) => chunkMergeAgg(st, inc)
-    }
   }
 
   /** Full-outer merge of two aggregated stores (counts add, owner is the
@@ -954,149 +933,63 @@ object Streams {
   /** Digest-prefix partition count of the persisted chunk store. It bounds
     * the rewrite grain: a fold rewrites only the partitions containing its
     * batch's digests. 32 at test scale; in production it scales with store
-    * size (more partitions ⇒ finer-grained overwrites), the same knob as
+    * size (more partitions ⇒ finer-grained rewrites), the same knob as
     * an LSM's level fan-out.
     */
   val ChunkStatePartitions = 32
 
-  private[graft] def chunkStateTableName(key: String): String =
-    s"graft_chunk_store_${java.lang.Integer.toHexString(key.hashCode)}"
-
-  private[graft] def chunkStatePath(tbl: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_state/$tbl"
+  private[graft] def chunkStatePath(key: String): String = sys.props("java.io.tmpdir") +
+    s"/graft_state/graft_chunk_store_${java.lang.Integer.toHexString(key.hashCode)}"
 
   /** Digest-prefix partition id — a pure function of the digest, so both
     * sides of any merge agree on it without exchanging. */
   private[graft] def chunkPb(digest: Column): Column =
     pmod(hash(digest), lit(ChunkStatePartitions))
 
-  /** Reserved partition for the fold-commit marker: one row in
-    * pb = [[ChunkStatePartitions]] (outside chunkPb's 0..P-1 range, so no
-    * real digest can land there) whose n_copies holds the HIGHEST batch id
-    * whose fold has committed; its chunk_hash is a typed NULL (the marker
-    * is identified by its partition alone, which keeps it digest-type-
-    * agnostic — chunk digests are BIGINT in the ingest pipeline, strings
-    * in fixtures). It rides the SAME dynamic-partition-overwrite job as
-    * the fold's data, so "data visible" and "batch recorded" are one
-    * commit — the at-least-once seam (caller dies AFTER the store commit,
-    * BEFORE recording progress, then re-drives the fold) becomes an
-    * idempotent no-op instead of a double-count
-    * (spec: "s23 re-driving a committed fold is a no-op").
-    */
-  private[graft] val ChunkMarkerPb = ChunkStatePartitions
-
-  /** One incremental fold of the persisted chunk store.
+  /** One incremental fold of the persisted chunk store, committed as one
+    * [[StateDir]] version under writer `key`: a re-driven `batchId` is a
+    * no-op, and `firstFold` starts from an empty store.
     *
-    * First fold: full partitioned write (`partitionBy(pb)`, rows sorted by
-    * digest within partitions for parquet min/max locality).
+    * First fold: every `pb` partition written, rows sorted by digest within
+    * partitions for parquet min/max locality.
     *
-    * Later folds: (1) aggregate the batch ONCE ([[graft.Materialize]] — it feeds
-    * the merge, and the SAME job carries the touched-partition probe as an
-    * observed bit_or mask over [[chunkPb]], so no second pass over the
+    * Later folds: (1) aggregate the batch ONCE ([[graft.Materialize]] — it
+    * feeds the merge, and the SAME job carries the touched-partition probe
+    * as an observed bit_or mask over [[chunkPb]], so no second pass over the
     * batch exists); (2) the touched-pb list decodes from that ≤64-bit mask
     * on the driver — bounded metadata, the twoPhaseIndex offsets rule;
-    * (3) read back ONLY the store
-    * partitions the batch touches (partition-pruned scan); (4) merge and
-    * commit under dynamic partition overwrite — untouched partitions'
-    * files are NEVER rewritten (spec-asserted at the file level). The
-    * self-read (the plan scans the table it overwrites) is SAFE and
-    * permitted under dynamic mode: FileCommitProtocol stages all output
-    * under _temporary and replaces touched partitions only at job commit,
-    * after every read task has finished — probe-verified on 4.1.2, and
-    * the spec's merge-correctness check covers the partial rewrite. No
-    * user-level staging copy of the touched rows is paid.
-    *
-    * IDEMPOTENT UNDER RE-DRIVE: every fold commits a one-row batch marker
-    * ([[ChunkMarkerPb]]) in the same job as its data; a later fold first
-    * reads the marker (a pruned single-partition, single-row read) and
-    * returns without writing when `batchId` has already committed — so a
-    * caller that crashes between the store commit and its own progress
-    * record can safely re-drive the fold (exactly-once EFFECT under
-    * at-least-once driving). The atomicity boundary is Spark's job commit
-    * (FileCommitProtocol): a crash inside the commit itself can leave
-    * partially-renamed partitions, the same exposure as every FileSource
-    * write — a transactional table format is the production answer there.
-    * Returns the store WITHOUT the marker partition.
+    * (3) read back ONLY the live `pb` directories the batch touches
+    * (partition-pruned scan); (4) merge and write the touched partitions
+    * as `v=<seq>/pb=<p>` — untouched partitions stay listed from the prior
+    * manifest, their files NEVER rewritten (spec-asserted at the file level).
+    * Returns the whole store as of this commit.
     */
   private[graft] def chunkFold(s: SparkSession, key: String,
                                batchChunks: DataFrame, batchId: Long,
                                firstFold: Boolean): DataFrame = {
     import s.implicits._
-    val tbl = chunkStateTableName(key)
-    def withMarker(merged: DataFrame): DataFrame =
-      merged.unionByName(s.range(1).select(
-        lit(null).cast(merged.schema("chunk_hash").dataType).as("chunk_hash"),
-        lit(batchId).as("n_copies"),
-        lit(null).cast(merged.schema("first").dataType).as("first"),
-        lit(ChunkMarkerPb).as("pb")))
-    val committed = firstFold ||
-      (s.catalog.tableExists(tbl) && {
-        val m = s.table(tbl).filter($"pb" === ChunkMarkerPb)
-          .agg(max($"n_copies")).head.get(0)
-        m != null && m.asInstanceOf[Long] >= batchId
-      })
-    if (firstFold) {
-      withMarker(chunkStoreMerge(None, batchChunks)
-          .withColumn("pb", chunkPb($"chunk_hash")))
-        .repartition($"pb").sortWithinPartitions($"chunk_hash")
-        .write.option("path", chunkStatePath(tbl)).partitionBy("pb")
-        .mode("overwrite").saveAsTable(tbl)
-    } else if (!committed) {
-      // the touched-pb set rides the SAME job that checkpoints inc, as one
-      // observed bit_or mask (ChunkStatePartitions = 32 ≤ 64 bits) — the
-      // previous shape paid a second distinct+collect job over the
-      // checkpointed batch just to learn ≤32 small integers
-      require(ChunkStatePartitions <= 64,
-        "chunkFold: touched-partition mask needs ChunkStatePartitions <= 64")
-      val obs = org.apache.spark.sql.Observation()
-      val inc = chunkStoreMerge(None, batchChunks)
-        .observe(obs, bit_or(call_function("shiftleft", lit(1L),
-          chunkPb($"chunk_hash"))).as("pb_mask"))
-        .transform(Materialize(_))
-      val mask = obs.get("pb_mask") match {
-        case null => 0L // empty batch: bit_or over zero rows is null
-        case m    => m.asInstanceOf[Long]
+    val root = chunkStatePath(key)
+    StateDir.commit(s, root, key, batchId, fresh = firstFold) { prior =>
+      val inc = chunkStoreMerge(batchChunks)
+      val (merged, keep) = prior.fold((inc, Seq.empty[String])) { m =>
+        require(ChunkStatePartitions <= 64, "chunkFold: the pb mask needs <= 64 partitions")
+        val obs = org.apache.spark.sql.Observation()
+        val incM = inc.observe(obs, bit_or(call_function("shiftleft", lit(1L),
+            chunkPb($"chunk_hash"))).as("pb_mask"))
+          .transform(Materialize(_))
+        // an empty batch's bit_or over zero rows is null
+        val mask = Option(obs.get("pb_mask")).fold(0L)(_.asInstanceOf[Long])
+        val touched = (0 until ChunkStatePartitions)
+          .filter(p => (mask & (1L << p)) != 0L).map(p => s"pb=$p").toSet
+        val hit = (d: String) => touched(d.substring(d.indexOf('/') + 1))
+        val st = StateDir.read(s, root, m, hit).select($"chunk_hash", $"n_copies", $"first")
+        (chunkMergeAgg(st, incM), m.dirs.filterNot(hit))
       }
-      val touched = (0 until ChunkStatePartitions).filter(p => (mask & (1L << p)) != 0L)
-      val prior = s.table(tbl)
-        .filter($"pb".isin(touched.toSeq: _*))
-        .select($"chunk_hash", $"n_copies", $"first")
-      val prevMode = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-      try {
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        withMarker(chunkMergeAgg(prior, inc)
-            .withColumn("pb", chunkPb($"chunk_hash")))
-          .repartition($"pb").sortWithinPartitions($"chunk_hash")
-          .write.mode("overwrite").insertInto(tbl)
-      } finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+      StateDir.Version(merged.withColumn("pb", chunkPb($"chunk_hash"))
+          .repartition($"pb").sortWithinPartitions($"chunk_hash"),
+        partitionBy = Some("pb"), keep = keep)
     }
-    s.table(tbl).filter($"pb" =!= ChunkMarkerPb)
-  }
-
-  /** Detection probe for the one seam [[chunkFold]]'s idempotence cannot
-    * cover: a crash INSIDE FileCommitProtocol's job commit. A completed
-    * commit removes the protocol's staging dir from the store path —
-    * `_temporary` for the static first-fold write, `.spark-staging-<jobId>`
-    * for the dynamic-overwrite incremental folds — so a leftover one is the
-    * on-disk signature of an interrupted commit whose partition renames may
-    * be TORN: some touched partitions new, others old, the batch marker
-    * possibly unrecorded, so a re-drive could double-count the
-    * already-renamed partitions. The store stays READABLE regardless
-    * (Spark's file index ignores underscore/dot-prefixed paths,
-    * spec-asserted), which is exactly why detection must be explicit:
-    * nothing else fails, and later folds never touch residue they didn't
-    * stage. Callers should treat a true result as "restore the store from
-    * the previous snapshot / re-fold from scratch"; the production answer
-    * is a transactional table format, whose commit is a single atomic
-    * metadata swap instead of N renames.
-    */
-  private[graft] def chunkStoreTornCommitSuspect(s: SparkSession, key: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(chunkStatePath(chunkStateTableName(key)))
-    val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-    fs.exists(root) && fs.listStatus(root).exists { st =>
-      val n = st.getPath.getName
-      n == "_temporary" || n.startsWith(".spark-staging-")
-    }
+    StateDir.read(s, root).get
   }
 
   def chunkIngestBatch(s: SparkSession, dir: String): DataFrame = {
@@ -1136,7 +1029,7 @@ object Streams {
       .withColumn("batch", pmod($"doc_id", lit(ChunkReplayBatches.toLong)))
     val deleted = pmod($"doc_id", lit(graft.operators.EndToEnd.ErasureMod)) ===
       graft.operators.EndToEnd.ErasureResidue
-    val store = Materialize(chunkStoreMerge(None, chunks).select($"chunk_hash", $"n_copies"))
+    val store = Materialize(chunkStoreMerge(chunks).select($"chunk_hash", $"n_copies"))
     val tombstones = chunks.filter(deleted)
       .groupBy($"chunk_hash").agg(count(lit(1)).as("n_del"))
     store.join(tombstones, Seq("chunk_hash"), "left")

@@ -1,9 +1,10 @@
 package graft
 
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.{Event, Fold, Streams}
+import graft.streaming.{Event, Fold, StateDir, Streams}
 
 class StreamingSpec extends SparkSpec {
 
@@ -303,7 +304,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       input.addData(IndexDoc(8, "a"), IndexDoc(3, "b"))
       q.processAllAvailable()
-      val rows = s.read.parquet(statePath + ".rows")
+      def rows = StateDir.read(s, statePath).get
         .select($"global_idx", $"doc_id", $"source")
         .as[(Long, Long, String)].collect().sortBy(_._1)
       assert(rows.map(_._1).toSeq == (0L until 7L), s"ids not gap-free: ${rows.toSeq}")
@@ -314,36 +315,76 @@ class StreamingSpec extends SparkSpec {
         ("a", 2L), ("b", 1L),                     // batch 2
         ("a", 8L), ("b", 3L)),                    // batch 3
         s"canonical-within-batch order violated: ${rows.toSeq}")
-      val st = s.read.parquet(statePath).head()
-      assert(st.getLong(st.fieldIndex("next_offset")) == 7L,
-        s"state must carry next_offset=7, got $st")
+      val st = StateDir.manifest(s, statePath).get
+      assert(st.scalars == Map("next_offset" -> 7L),
+        s"state must carry next_offset=7, got ${st.scalars}")
       // exactly-once under at-least-once delivery: re-applying the last
       // batch (foreachBatch redelivery after a restart) must be a no-op —
       // no double-appended rows, no moved offset
-      val lastBatch = st.getLong(st.fieldIndex("last_batch"))
       val replay = Seq((8L, "a"), (3L, "b")).toDF("doc_id", "source")
-      graft.streaming.Streams.indexApply(replay, lastBatch, statePath)
-      assert(s.read.parquet(statePath + ".rows").count() == 7L,
-        "re-delivered batch must not double-append rows")
-      assert(s.read.parquet(statePath).head()
-        .getLong(st.fieldIndex("next_offset")) == 7L,
+      Streams.indexApply(replay, st.writer, st.batch, statePath)
+      assert(rows.length == 7, "re-delivered batch must not double-append rows")
+      assert(StateDir.manifest(s, statePath).get.scalars("next_offset") == 7L,
         "re-delivered batch must not advance the offset")
-      // crash-repair: rows written but offset NOT committed → the retry of
-      // the SAME batch id overwrites only that batch's partition, ids equal
-      graft.streaming.Streams.indexApply(replay, lastBatch + 1, statePath)
-      val before = s.read.parquet(statePath + ".rows")
-        .filter($"batch_id" === lastBatch + 1)
-        .select($"global_idx", $"doc_id").as[(Long, Long)].collect().toSet
-      // rewind the state to simulate the offset commit being lost, re-apply
-      s.range(1).select(lit(7L).as("next_offset"), lit(lastBatch).as("last_batch"))
-        .write.mode("overwrite").parquet(statePath)
-      graft.streaming.Streams.indexApply(replay, lastBatch + 1, statePath)
-      val after = s.read.parquet(statePath + ".rows")
-        .filter($"batch_id" === lastBatch + 1)
-        .select($"global_idx", $"doc_id").as[(Long, Long)].collect().toSet
+      // crash-repair: rows written but the manifest swap lost → the retry of
+      // the SAME batch id rewrites that batch's rows with identical ids
+      val priorManifest = new java.io.File(statePath, s"_manifest-${st.seq}")
+      val priorBytes = java.nio.file.Files.readAllBytes(priorManifest.toPath)
+      Streams.indexApply(replay, st.writer, st.batch + 1, statePath)
+      def lastRows = rows.filter(_._1 >= 7L).map(r => (r._1, r._2)).toSet
+      val before = lastRows
+      // simulate the lost commit: drop the newest manifest, the prior one is
+      // newest again and the batch's rows are an orphan version
+      new java.io.File(statePath, s"_manifest-${st.seq + 1}").delete()
+      java.nio.file.Files.write(priorManifest.toPath, priorBytes)
+      assert(rows.length == 7, "an orphan version must be invisible to reads")
+      Streams.indexApply(replay, st.writer, st.batch + 1, statePath)
+      val after = lastRows
       assert(after == before && after.map(_._1) == Set(7L, 8L),
-        s"retry after a lost offset commit must rewrite identical ids: $before vs $after")
+        s"retry after a lost manifest swap must rewrite identical ids: $before vs $after")
+      assert(rows.length == 9, s"the retry must apply exactly once: ${rows.toSeq}")
     } finally q.stop()
+  }
+
+  test("s22 index sink: a second query on one state path continues the ids") {
+    // every new query (no checkpointLocation) restarts batch ids at 0; the
+    // re-drive gate is per query, so q2's batch 0 must fold, not be skipped
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val statePath = java.nio.file.Files.createTempDirectory("graft_gidx2").toString + "/st"
+    import graft.streaming.IndexDoc
+    def run(batches: Seq[Seq[IndexDoc]]): Unit = {
+      val input = MemoryStream[IndexDoc]
+      val q = Streams.indexSink(input.toDF(), statePath)
+      try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+    }
+    run(Seq(Seq(IndexDoc(1, "a"), IndexDoc(2, "a")), Seq(IndexDoc(3, "a"))))
+    run(Seq(Seq(IndexDoc(4, "a"), IndexDoc(5, "a"))))
+    val rows = StateDir.read(s, statePath).get.select($"global_idx", $"doc_id")
+      .as[(Long, Long)].collect().sortBy(_._1).toSeq
+    assert(rows == (0L until 5L).zip(1L to 5L), s"second query lost or renumbered docs: $rows")
+    assert(StateDir.manifest(s, statePath).get.scalars("next_offset") == 5L)
+  }
+
+  test("s07 upsert sink: a second query on one state path folds its batches") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val statePath = java.nio.file.Files.createTempDirectory("graft_state2").toString + "/st"
+    def run(batches: Seq[Seq[Event]]): Unit = {
+      val input = MemoryStream[Event]
+      val q = Streams.upsertSink(input.toDF(), statePath)
+      try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+    }
+    run(Seq(Seq(Event(1, ts(0), 1, "v", 1.0)), Seq(Event(2, ts(0), 2, "v", 1.0))))
+    run(Seq(Seq(Event(3, ts(5), 2, "v", 2.0), Event(4, ts(5), 3, "v", 1.0))))
+    val state = s.read.parquet(statePath).select("key", "version").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toMap
+    assert(state == Map(1L -> 1.0, 2L -> 2.0, 3L -> 1.0),
+      s"second query's batch must fold into the state: $state")
   }
 
   test("s23 chunk ingest: incremental fold equals single merge and t28's copy counts") {
@@ -357,7 +398,7 @@ class StreamingSpec extends SparkSpec {
     val labeled = graft.operators.TextOps
       .chunkRows(Tables.documents(spark, sfDir))
       .withColumn("batch", pmod($"doc_id", lit(Streams.ChunkReplayBatches.toLong)))
-    val oneShot = Streams.chunkStoreMerge(None, labeled)
+    val oneShot = Streams.chunkStoreMerge(labeled)
       .select($"chunk_hash", $"n_copies",
         $"first.batch".as("first_batch"), $"first.doc_id".cast("long").as("first_doc"),
         ($"n_copies" > 1L).as("is_dup"))
@@ -400,7 +441,7 @@ class StreamingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     SparkEntry.queries("s23_chunk_ingest")(s, sfDir).collect()
-    val store = s.table(Streams.chunkStateTableName(sfDir))
+    val store = StateDir.read(s, Streams.chunkStatePath(sfDir)).get
     val nPart = store.select($"pb").distinct().count()
     assert(nPart > 1, "store must span multiple digest-prefix partitions")
     val somePb = store.select($"pb").head.getInt(0)
@@ -427,14 +468,11 @@ class StreamingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val key = "s23_spec_incremental_store"
-    val tbl = Streams.chunkStateTableName(key)
-    val loc = Streams.chunkStatePath(tbl)
+    val loc = Streams.chunkStatePath(key)
     // fold 0: 2000 digests spanning every digest-prefix partition
     val baseHashes = (0 until 2000).map(i => s"digest_$i")
     Streams.chunkFold(s, key, chunksOf(s, baseHashes, 0L), 0L, firstFold = true)
-    // data partitions only — the commit-marker partition (ChunkMarkerPb) is
-    // rewritten by EVERY fold by design and is excluded from the file checks
-    def store = s.table(tbl).filter($"pb" =!= Streams.ChunkMarkerPb)
+    def store = StateDir.read(s, loc).get
     val storeRows = store.count()
     // fold 1's batch confined to ONE pb: 10 overlap digests from that
     // partition plus new digests that hash into the same partition
@@ -445,19 +483,18 @@ class StreamingSpec extends SparkSpec {
       .filter(pmod(hash($"h"), lit(Streams.ChunkStatePartitions)) === targetPb)
       .limit(5).as[String].collect().toSeq
     assert(overlap.size == 10 && fresh.nonEmpty, "fixture must populate both classes")
-    def snapshot(): Map[String, Seq[(String, Long, Long)]] = {
-      val root = new java.io.File(loc)
-      root.listFiles.filter(_.isDirectory).map { d =>
-        d.getName -> d.listFiles.filter(_.getName.endsWith(".parquet"))
-          .map(f => (f.getName, f.length, f.lastModified)).sorted.toSeq
+    // pb=<p> -> its live directory and that directory's parquet files
+    def snapshot(): Map[String, (String, Seq[(String, Long, Long)])] =
+      StateDir.manifest(s, loc).get.dirs.map { d =>
+        d.substring(d.indexOf('/') + 1) -> (d, new java.io.File(loc, d).listFiles
+          .filter(_.getName.endsWith(".parquet"))
+          .map(f => (f.getName, f.length, f.lastModified)).sorted.toSeq)
       }.toMap
-    }
     val before = snapshot()
     Streams.chunkFold(s, key, chunksOf(s, overlap ++ fresh, 1L), 1L, firstFold = false)
     val after = snapshot()
     val touchedDir = s"pb=$targetPb"
-    val markerDir = s"pb=${Streams.ChunkMarkerPb}"
-    assert((before.keySet - touchedDir - markerDir).forall(d => before(d) == after(d)),
+    assert((before.keySet - touchedDir).forall(d => before(d) == after(d)),
       "untouched partitions must keep their exact files (names, sizes, mtimes)")
     assert(before(touchedDir) != after(touchedDir), "the touched partition was rewritten")
     // write volume: the rewritten partition holds ~store/P + batch rows — a
@@ -472,18 +509,18 @@ class StreamingSpec extends SparkSpec {
     assert(merged.filter($"chunk_hash".isin(overlap: _*))
       .filter($"n_copies" =!= 2L).isEmpty, "overlap digests must fold to 2 copies")
     assert(merged.filter($"n_copies" === 1L).count() == storeRows - 10 + fresh.size)
-    // no scratch debris next to the store (the commit stages inside
-    // FileCommitProtocol's _temporary, which it cleans up itself)
+    // no scratch debris next to the store (a commit stages inside its own
+    // version directory)
     val debris = new java.io.File(loc).getParentFile.listFiles
-      .filter(_.getName.startsWith(tbl + "."))
+      .filter(_.getName.startsWith(new java.io.File(loc).getName + "."))
     assert(debris.isEmpty, s"unexpected scratch dirs: ${debris.mkString(",")}")
   }
 
   test("s23 incremental fold runs no separate touched-partition probe job") {
     // r14: the touched-pb set rides the inc-checkpoint job as an observed
-    // bit_or mask, so a non-first fold's job budget is exactly (1) the
-    // committed-marker read, (2) the batch aggregate + checkpoint (carrying
-    // the mask), (3) the merge + dynamic-overwrite commit. The r13 shape
+    // bit_or mask, so a non-first fold's job budget is exactly (1) the batch
+    // aggregate + checkpoint (carrying the mask), (2) the merge + version
+    // write; the re-drive gate reads the manifest on the driver. The r13 shape
     // paid one more: a distinct+collect probe over the checkpointed batch.
     // Asserting the measured ceiling pins the probe job OUT — a regression
     // that reintroduces a per-fold pass over the batch trips this.
@@ -495,95 +532,82 @@ class StreamingSpec extends SparkSpec {
     val cur = jobsRun("s23jc")(Streams.chunkFold(s, key,
       chunksOf(s, (0 until 50).map(i => s"jc_new_$i"), 1L), 1L, firstFold = false))
     // measured on this fixture (AQE splits each query into several jobs):
-    // r13 shape with the probe = 10 jobs, r14 observe shape = 8. The bound
+    // r13 shape with the probe = 10 jobs, r14 observe shape = 8, the
+    // manifest commit (no marker read, no catalog refresh) = 6. The bound
     // pins the 2-job probe out while tolerating AQE's own job accounting.
     assert(cur <= 8, s"non-first fold ran $cur jobs — a probe job is back?")
   }
 
   test("s23 re-driving a committed fold is a no-op (crash between commit and progress record)") {
-    // the at-least-once seam: the fold's dynamic-overwrite job COMMITS, the
-    // caller dies before recording progress, restarts, and re-drives the
-    // same batch. The batch marker (committed in the same job as the data)
-    // must turn the replay into a no-op — file-level identical store, no
-    // double-counted digests — while a LATER batch still folds normally.
+    // the at-least-once seam: the fold's manifest swap COMMITS, the caller
+    // dies before recording progress, restarts, and re-drives the same
+    // batch. The (writer, batch) the manifest records must turn the replay
+    // into a no-op — file-level identical store, no double-counted digests
+    // — while a LATER batch still folds normally.
     val s = spark
     import s.implicits._
     val key = "s23_spec_redrive_store"
-    val tbl = Streams.chunkStateTableName(key)
-    val loc = Streams.chunkStatePath(tbl)
+    val loc = Streams.chunkStatePath(key)
     val base = (0 until 300).map(i => s"rd_base_$i")
     val batch1 = (0 until 40).map(i => s"rd_base_$i") ++ (0 until 30).map(i => s"rd_new_$i")
     Streams.chunkFold(s, key, chunksOf(s, base, 0L), 0L, firstFold = true)
     Streams.chunkFold(s, key, chunksOf(s, batch1, 1L), 1L, firstFold = false)
-    def snapshot(): Map[String, Seq[(String, Long, Long)]] = {
-      val root = new java.io.File(loc)
-      root.listFiles.filter(_.isDirectory).map { d =>
-        d.getName -> d.listFiles.filter(_.getName.endsWith(".parquet"))
-          .map(f => (f.getName, f.length, f.lastModified)).sorted.toSeq
-      }.toMap
+    // every file under the store (data and manifest): path, size, mtime
+    def snapshot(): Seq[(String, Long, Long)] = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(loc))
+      try files.iterator().asScala.map(_.toFile).filter(_.isFile)
+        .map(f => (f.getPath, f.length, f.lastModified)).toSeq.sorted
+      finally files.close()
     }
     val committedState = snapshot()
     // the crash-replay: same batch id, same rows, driven again
     val replayed = Streams.chunkFold(s, key, chunksOf(s, batch1, 1L), 1L, firstFold = false)
     assert(snapshot() == committedState,
-      "re-driving a committed fold must not write a single file (marker included)")
+      "re-driving a committed fold must not write a single file (manifest included)")
     assert(replayed.filter($"chunk_hash".isin(batch1.take(40): _*))
       .filter($"n_copies" =!= 2L).isEmpty,
       "overlap digests must stay at 2 copies after the replay (no double count)")
-    // the marker is monotonic, not sticky: the NEXT batch still folds
+    // the fold's own return holds store rows only (no NULL-digest row)
+    assert(replayed.filter($"chunk_hash".isNull).isEmpty)
+    // the gate is monotonic, not sticky: the NEXT batch still folds
     Streams.chunkFold(s, key, chunksOf(s, Seq("rd_late_0"), 2L), 2L, firstFold = false)
-    val st = s.table(tbl).filter($"pb" =!= Streams.ChunkMarkerPb)
+    val st = StateDir.read(s, loc).get
     assert(st.filter($"chunk_hash" === "rd_late_0").count() == 1L,
       "a later batch must fold normally after a replayed one")
-    // the fold's own return never exposes the marker row (typed-NULL digest
-    // in the reserved partition)
-    assert(replayed.filter($"chunk_hash".isNull).isEmpty)
   }
 
-  test("s23 torn job commit: stray _temporary is tolerated by reads and folds, and detected") {
-    // the residual seam chunkFold's scaladoc names: a crash INSIDE
-    // FileCommitProtocol's commit can leave partially-renamed partitions
-    // plus the protocol's _temporary staging dir. Prove the adjudicated
-    // contract: (a) the store stays readable and a later fold completes
-    // (underscore-prefixed paths are invisible to the file index, and
-    // dynamic overwrite replaces the stray dir's sibling partitions
-    // normally); (b) the torn state is DETECTABLE via the leftover
-    // _temporary, because nothing else fails — silent tolerance without
-    // detection would let a double-count replay pass unnoticed.
+  test("s23 crash before the manifest swap: prior version readable, re-drive converges") {
+    // a fold that dies after writing its version directory but before the
+    // manifest rename leaves an orphan v=<next>. Reads resolve the manifest,
+    // so they never see it; the next fold clears it, commits, and retires
+    // every directory its manifest does not list.
     val s = spark
     import s.implicits._
     val key = "s23_spec_torn_store"
-    val tbl = Streams.chunkStateTableName(key)
-    val loc = Streams.chunkStatePath(tbl)
+    val loc = Streams.chunkStatePath(key)
     Streams.chunkFold(s, key, chunksOf(s, (0 until 200).map(i => s"tc_$i"), 0L), 0L,
       firstFold = true)
-    assert(!Streams.chunkStoreTornCommitSuspect(s, key),
-      "a completed commit must leave no _temporary behind")
-    // simulate the torn commit's observable residue: a dynamic-overwrite
-    // staging dir (with a junk file, as an interrupted rename sequence
-    // would leave — dynamic folds stage under .spark-staging-<jobId>)
-    val stray = new java.io.File(loc, ".spark-staging-torn-spec/pb=3")
-    stray.mkdirs()
+    val orphan = new java.io.File(loc, s"v=${StateDir.manifest(s, loc).get.seq + 1}/pb=3")
+    orphan.mkdirs()
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(stray.getPath, "part-junk.parquet"), Array[Byte](9, 9))
-    assert(Streams.chunkStoreTornCommitSuspect(s, key),
-      "leftover .spark-staging-* must be detected as a torn-commit suspect")
-    // reads ignore the stray dir: counts see only committed rows
-    val before = s.table(tbl).filter($"pb" =!= Streams.ChunkMarkerPb).count()
-    assert(before == 200L, s"stray staging dir leaked into the read: $before rows")
-    // a later fold completes and merges correctly over the torn store
+      java.nio.file.Paths.get(orphan.getPath, "part-junk.parquet"), Array[Byte](9, 9))
+    val before = StateDir.read(s, loc).get.count()
+    assert(before == 200L, s"orphan version leaked into the read: $before rows")
+    // the re-drive completes and merges correctly over the crashed store
     val merged = Streams.chunkFold(s, key,
       chunksOf(s, Seq("tc_0", "tc_1", "tc_new"), 1L), 1L, firstFold = false)
     assert(merged.filter($"chunk_hash" === "tc_0").head.getAs[Long]("n_copies") == 2L)
     assert(merged.filter($"chunk_hash" === "tc_new").count() == 1L)
-    // later folds never touch residue they didn't stage: detection persists
-    // until the OPERATOR acts on it (silent auto-erasure would hide the
-    // double-count exposure the probe exists to surface)
-    assert(Streams.chunkStoreTornCommitSuspect(s, key),
-      "a later fold must not silently erase the torn-commit evidence")
-    org.apache.commons.io.FileUtils.deleteDirectory(stray.getParentFile)
-    assert(!Streams.chunkStoreTornCommitSuspect(s, key),
-      "clearing the residue must clear the suspicion")
+    assert(merged.count() == 201L)
+    // no unlisted directory survives the fold
+    val onDisk = new java.io.File(loc).listFiles.filter(_.getName.startsWith("v="))
+      .flatMap(v => v.listFiles.filter(_.isDirectory).map(p => s"${v.getName}/${p.getName}"))
+      .toSet
+    assert(onDisk == StateDir.manifest(s, loc).get.dirs.toSet,
+      s"unlisted version directories survived: $onDisk")
+    assert(!new java.io.File(orphan, "part-junk.parquet").exists, "the orphan's junk survived")
+    // between completed commits a plain read of the root is exact too
+    assert(s.read.parquet(loc).count() == 201L)
   }
 
   test("s25 erasure fold equals the survivor rebuild; orphaned digests vanish") {
