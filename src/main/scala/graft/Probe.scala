@@ -12,6 +12,8 @@ import org.apache.spark.sql.functions._
   *   recall <sfDir...> [pqDepth...] per-method ANN recall@K values
   *   dedup-scale <sfDir>            LSH band-bucket occupancy + minhash stage
   *                                  timings (SURVEY §7f)
+  *   plans <sfDir> [key...]         each key's formatted physical plan (default:
+  *                                  all keys, sorted), through [[maskPlan]]
   *
   * Every subcommand runs under the [[Session]] profile; an unknown one
   * prints usage and exits 2.
@@ -19,7 +21,7 @@ import org.apache.spark.sql.functions._
 object Probe {
   private val Usage =
     "usage: graft.Probe time <sfDir> <key...> [reps] | margin <sfDir> | " +
-      "recall <sfDir...> [pqDepth...] | dedup-scale <sfDir>"
+      "recall <sfDir...> [pqDepth...] | dedup-scale <sfDir> | plans <sfDir> [key...]"
 
   def main(args: Array[String]): Unit = {
     val run: (SparkSession, Seq[String]) => Unit = args.headOption match {
@@ -27,6 +29,7 @@ object Probe {
       case Some("margin")      => margin
       case Some("recall")      => recall
       case Some("dedup-scale") => dedupScale
+      case Some("plans")       => plans
       case _ =>
         System.err.println(Usage)
         sys.exit(2)
@@ -92,6 +95,34 @@ object Probe {
       exact.unpersist()
     }
   }
+
+  /** Prints `========== <key> ==========` and the key's masked
+    * `.explain("formatted")`, one key at a time: the before/after evidence
+    * that a refactor left every plan as it was. The plans carry the
+    * session's shuffle-partition count, so compare runs at the same
+    * `SPARK_GRAFT_CPUS`. [[graft.Explain]] is this loop on a 4-core session.
+    */
+  private[graft] def plans(spark: SparkSession, args: Seq[String]): Unit = {
+    val dir = args.head
+    val keys = if (args.length > 1) args.tail else SparkEntry.queries.keys.toSeq.sorted
+    for (key <- keys) {
+      println(s"========== $key ==========")
+      println(maskPlan(SparkEntry.queries(key)(spark, dir).queryExecution
+        .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))))
+    }
+  }
+
+  /** Masks what differs between two runs of the same plan: expression ids,
+    * exchange `plan_id`s, Scala lambda object names, RDD ids together with
+    * their `<op> at <File>.scala:<line>` call sites, and the `v=<seq>`
+    * version directories of persisted fold state.
+    */
+  def maskPlan(plan: String): String = plan
+    .replaceAll("#\\d+", "#N")
+    .replaceAll("plan_id=\\d+", "plan_id=N")
+    .replaceAll("\\$Lambda[^@\\s]*@[0-9a-f]+", "\\$Lambda")
+    .replaceAll("RDD\\[\\d+\\] at (\\w+) at ([\\w$.]+\\.scala):\\d+", "RDD[N] at $1 at $2:N")
+    .replaceAll("/v=\\d+/", "/v=N/")
 
   /** Measurement loop behind the d02/m09 band-bucket occupancy analysis
     * (SURVEY §7f): reports the LSH band-bucket size distribution and times

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for the sf1 bench spot-check: replicates an existing
@@ -73,7 +73,10 @@ object ScaleGen {
       require(unknown.isEmpty,
         s"unknown table(s) ${unknown.mkString(",")} — valid: ${AllTables.mkString(",")}")
     }
-    val spark = Session.local()
+    // an in-process caller's session is used as it is and left running;
+    // only a session built here is stopped
+    val callers = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    val spark = callers.getOrElse(Session.local())
     new java.io.File(out).mkdirs()
 
     def write(name: String, df: => DataFrame): Unit = {
@@ -139,6 +142,6 @@ object ScaleGen {
       else d.withColumn("embedding",
         expr(s"CAST(transform(embedding, x -> x + ${0.013 * i}D) AS ARRAY<FLOAT>)")))
 
-    spark.stop()
+    if (callers.isEmpty) spark.stop()
   }
 }

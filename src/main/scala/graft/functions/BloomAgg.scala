@@ -2,9 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -74,7 +73,7 @@ final class BloomBuffer(val numHashes: Int, val numBits: Int) {
   * build as a custom aggregate. The buffer is a fixed-size bit array that
   * partial-aggregates map-side and merges by bitwise OR, so building over
   * N rows ships numBits/8 bytes per partition — never the rows. Pairs with
-  * [[BloomContainsExpr]] for the probe side.
+  * the `bloom_contains` kernel row for the probe side.
   */
 case class BloomAggExpr(
     child: Expression,
@@ -132,22 +131,5 @@ case class BloomAggExpr(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0), bitsExpr = newChildren(1), hashesExpr = newChildren(2))
-  override def prettyName: String = "bloom_agg"
-}
-
-/** bloom_contains(bloom_binary, str) -> boolean: codegen'd probe (one static
-  * call, stays inside whole-stage codegen on the corpus scan).
-  */
-case class BloomContainsExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(left, right), Seq(BinaryType, StringType))
-  override def dataType: DataType = BooleanType
-  override def nullSafeEval(bloomBytes: Any, s: Any): Any =
-    bloom.contains(bloomBytes.asInstanceOf[Array[Byte]], s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, s) => s"graft.functions.bloom.contains($b, $s)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "bloom_contains"
+  override def prettyName: String = GraftFunctions.bloomAgg.name
 }

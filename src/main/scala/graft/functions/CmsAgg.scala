@@ -4,9 +4,8 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -149,22 +148,5 @@ case class CmsAggExpr(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0), weightExpr = newChildren(1),
          depthExpr = newChildren(2), widthExpr = newChildren(3))
-  override def prettyName: String = "cms_agg"
-}
-
-/** cms_query(cms_array, term) -> bigint: codegen'd point estimate (single
-  * static call, stays inside whole-stage codegen on the probe side).
-  */
-case class CmsQueryExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(left, right),
-      Seq(ArrayType(LongType, containsNull = false), StringType))
-  override def dataType: DataType = LongType
-  override def nullSafeEval(arr: Any, s: Any): Any =
-    cms.query(arr.asInstanceOf[ArrayData], s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, s) => s"graft.functions.cms.query($a, $s)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "cms_query"
+  override def prettyName: String = GraftFunctions.cmsAgg.name
 }

@@ -1,155 +1,188 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlShim, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.types._
 
-/** Column-API entry points for the custom Catalyst expressions.
-  *
-  * Registration goes through the session FunctionRegistry (also injectable
-  * via [[GraftExtensions]] for `--conf spark.sql.extensions=` deployments),
-  * and the Column wrappers below use `call_function`, which resolves through
-  * that registry — so the same names work from SQL text and from the
-  * DataFrame API.
+/** One row of [[GraftFunctions]]' table: a custom SQL function under its
+  * name. A row is also its Column-API wrapper — `cosineSim(a, b)` builds
+  * the expression directly, so it resolves on any session without a
+  * FunctionRegistry entry. Both paths check the argument count where the
+  * expression is built, naming the function.
+  */
+sealed abstract class GraftFunction(val name: String, val arity: Int) {
+  /** The registry builder: the Catalyst expression over resolved arguments. */
+  def builder: Seq[Expression] => Expression
+  def apply(args: Column*): Column
+
+  protected def checked(args: Seq[Expression]): Seq[Expression] = {
+    require(args.length == arity, s"$name expects $arity argument(s), got ${args.length}")
+    args
+  }
+}
+
+/** A scalar kernel, evaluated by the generic [[KernelExpr]]: its arity,
+  * input check, result type, the static method codegen calls (`call`,
+  * relative to `graft.functions`) and the typed function interpreted
+  * `eval` calls with the non-null argument values.
+  */
+final class Kernel(name: String, val dataType: DataType, val call: String, arity: Int,
+    val inputs: (String, Seq[Expression]) => TypeCheckResult, val eval: Array[Any] => Any)
+    extends GraftFunction(name, arity) {
+  def builder: Seq[Expression] => Expression = es => KernelExpr(name, checked(es))
+  def apply(args: Column*): Column = GraftSqlShim.column(builder(args.map(GraftSqlShim.expr)))
+}
+
+/** One of the TypedImperativeAggregates (topk, bloom, cms, vec_mean). */
+final class Aggregate(name: String, arity: Int, build: Seq[Expression] => AggregateFunction)
+    extends GraftFunction(name, arity) {
+  def builder: Seq[Expression] => Expression = es => build(checked(es))
+  def apply(args: Column*): Column =
+    GraftSqlShim.column(build(checked(args.map(GraftSqlShim.expr))).toAggregateExpression())
+}
+
+/** graft's custom functions, one table. Each SQL name is written here once,
+  * in its row; [[register]] (programmatic sessions) and [[GraftExtensions]]
+  * (`spark.sql.extensions=` deployments) publish every row to SQL text, and
+  * the rows themselves are the Column API.
   */
 object GraftFunctions {
+  private type Inputs = (String, Seq[Expression]) => TypeCheckResult
+  private def types(expected: DataType*): Inputs = GraftTypeCheck.expect(_, _, expected)
 
-  private val registry: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "cosine_sim"      -> (es => CosineSimilarityExpr(es(0), es(1))),
-    "simhash64"       -> (es => SimHash64Expr(es(0))),
-    "shingle_hashes"  -> (es => ShingleHashesExpr(es(0), es(1))),
-    "minhash_sig"     -> (es => MinHashSignatureExpr(es(0), es(1))),
-    "shingle_strings" -> (es => ShingleStringsExpr(es(0), es(1))),
-    "overlap_marks"   -> (es => OverlapMarksExpr(es(0))),
-    "overlap_marks_mask" -> (es => OverlapMarksMaskExpr(es(0), es(1))),
-    "lsh_buckets"     -> (es => LshBucketsExpr(es(0))),
-    "vec_mean_agg"    -> (es => VecMeanAggExpr(es(0), es(1))),
-    "simhash60"       -> (es => SimHash60Expr(es(0))),
-    "simhash_wide120" -> (es => SimHashWide120Expr(es(0))),
-    "minhash_sig31"   -> (es => MinHashSig31Expr(es(0), es(1))),
-    "gram_hashes31"   -> (es => GramHashes31Expr(es(0), es(1))),
-    "term_counts"     -> (es => TermCountsExpr(es(0), es(1))),
-    "minhash_shingle_sig" -> (es => MinhashShingleSigExpr(es(0), es(1), es(2))),
-    "pq_encode"       -> (es => PqEncodeExpr(es(0), es(1))),
-    "nearest_centroid" -> (es => NearestCentroidExpr(es(0), es(1))),
-    "max_cosine"      -> (es => MaxCosineExpr(es(0), es(1))),
-    "nearest_cosine"  -> (es => NearestCosineExpr(es(0), es(1))),
-    "topk_agg"        -> (es => TopKAggExpr(es(0), es(1))),
-    "bloom_agg"       -> (es => BloomAggExpr(es(0), es(1), es(2))),
-    "bloom_contains"  -> (es => BloomContainsExpr(es(0), es(1))),
-    "nfc_norm"        -> (es => NfcNormalizeExpr(es(0))),
-    "tree_ancestors"  -> (es => TreeAncestorsExpr(es(0))),
-    "cms_agg"         -> (es => CmsAggExpr(es(0), es(1), es(2), es(3))),
-    "cms_query"       -> (es => CmsQueryExpr(es(0), es(1))),
-    "regex_count"     -> (es => RegexCountExpr(es(0), es(1))),
-    "non_alnum_count" -> (es => NonAlnumCountExpr(es(0))),
-    "interleave_bits" -> (es => InterleaveBitsExpr(es(0), es(1))),
-    "hash_embed"      -> (es => HashEmbedExpr(es(0), es(1))),
-  )
-
-  /** Idempotently register all graft functions on a session. */
-  def register(spark: SparkSession): Unit = registry.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+  /** (array<float>, array<struct<long, array<float>>>): a vector against a
+    * broadcast reference row, any field names. */
+  private val vecVsRefs: Inputs = (name, es) => es.map(_.dataType) match {
+    case Seq(ArrayType(FloatType, _), ArrayType(StructType(Array(f0, f1)), _))
+        if f0.dataType == LongType &&
+           (f1.dataType match { case ArrayType(FloatType, _) => true; case _ => false }) =>
+      TypeCheckResult.TypeCheckSuccess
+    case ts => TypeCheckResult.TypeCheckFailure(
+      s"$name expects (array<float>, array<struct<long, array<float>>>), " +
+        s"got (${ts.map(_.simpleString).mkString(", ")})")
   }
 
-  import org.apache.spark.sql.functions.call_function
+  private def k1[A](name: String, out: DataType, call: String, in: Inputs)(f: A => Any) =
+    new Kernel(name, out, call, 1, in, a => f(a(0).asInstanceOf[A]))
+  private def k2[A, B](name: String, out: DataType, call: String, in: Inputs)(f: (A, B) => Any) =
+    new Kernel(name, out, call, 2, in, a => f(a(0).asInstanceOf[A], a(1).asInstanceOf[B]))
+  private def k3[A, B, C](name: String, out: DataType, call: String, in: Inputs)(
+      f: (A, B, C) => Any) =
+    new Kernel(name, out, call, 3, in,
+      a => f(a(0).asInstanceOf[A], a(1).asInstanceOf[B], a(2).asInstanceOf[C]))
 
-  def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
-  def hashEmbed(tokens: Column, dims: Column): Column = call_function("hash_embed", tokens, dims)
-  def simhash64(tokens: Column): Column = call_function("simhash64", tokens)
-  def shingleHashes(tokens: Column, k: Column): Column = call_function("shingle_hashes", tokens, k)
-  def minhashSig(hashes: Column, n: Column): Column = call_function("minhash_sig", hashes, n)
-  def shingleStrings(tokens: Column, k: Column): Column = call_function("shingle_strings", tokens, k)
-  def overlapMarks(srcs: Column): Column = call_function("overlap_marks", srcs)
-  def overlapMarksMask(mask: Column, names: Column): Column =
-    call_function("overlap_marks_mask", mask, names)
-  def lshBuckets(emb: Column): Column = call_function("lsh_buckets", emb)
-  def vecMeanAgg(v: Column, dim: Column): Column = call_function("vec_mean_agg", v, dim)
-  def simhash60(tokens: Column): Column = call_function("simhash60", tokens)
-  def simhashWide120(tokens: Column): Column = call_function("simhash_wide120", tokens)
-  def minhashSig31(grams: Column, n: Column): Column = call_function("minhash_sig31", grams, n)
-  def termCounts(toks: Column, terms: Column): Column = call_function("term_counts", toks, terms)
-  def minhashShingleSig(tokens: Column, k: Column, n: Column): Column =
-    call_function("minhash_shingle_sig", tokens, k, n)
-  def pqEncode(emb: Column, cbs: Column): Column = call_function("pq_encode", emb, cbs)
-  def nearestCentroid(emb: Column, cents: Column): Column =
-    call_function("nearest_centroid", emb, cents)
-  def maxCosine(emb: Column, cents: Column): Column =
-    call_function("max_cosine", emb, cents)
-  def nearestCosine(emb: Column, cents: Column): Column =
-    call_function("nearest_cosine", emb, cents)
-  def topkAgg(v: Column, k: Column): Column = call_function("topk_agg", v, k)
-  def bloomAgg(v: Column, bits: Column, hashes: Column): Column =
-    call_function("bloom_agg", v, bits, hashes)
-  def bloomContains(bloom: Column, v: Column): Column =
-    call_function("bloom_contains", bloom, v)
-  def nfcNorm(v: Column): Column = call_function("nfc_norm", v)
-  def treeAncestors(id: Column): Column = call_function("tree_ancestors", id)
-  def cmsAgg(term: Column, weight: Column, depth: Column, width: Column): Column =
-    call_function("cms_agg", term, weight, depth, width)
-  def cmsQuery(sketch: Column, term: Column): Column = call_function("cms_query", sketch, term)
-  def regexCount(s: Column, pattern: Column): Column = call_function("regex_count", s, pattern)
-  def interleaveBits(x: Column, y: Column): Column = call_function("interleave_bits", x, y)
+  private val Vec = ArrayType(FloatType)
+  private val Toks = ArrayType(StringType)
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val Marks = ArrayType(StructType(Seq(
+    StructField("src_a", StringType, nullable = false),
+    StructField("src_b", StringType, nullable = true))), containsNull = false)
 
-  /** Registry-free regex_count for context-free Column builders (e.g.
-    * TextOps.qualityCol, which has no session to register on): the Column
-    * wraps the expression directly, so it resolves on ANY session.
-    */
-  def regexCountDirect(s: Column, pattern: Column): Column = {
-    import org.apache.spark.sql.GraftSqlShim
-    GraftSqlShim.column(RegexCountExpr(GraftSqlShim.expr(s), GraftSqlShim.expr(pattern)))
-  }
+  val cosineSim = k2("cosine_sim", DoubleType, "kernels.cosineF", types(Vec, Vec))(
+    kernels.cosineF)
+  // feature-hashing text projection: the "text tower" of cross-modal alignment
+  val hashEmbed = k2("hash_embed", ArrayType(FloatType, containsNull = false),
+    "kernels.hashEmbed", types(Toks, IntegerType))(kernels.hashEmbed)
+  val simhash64 = k1("simhash64", LongType, "kernels.simhash64", types(Toks))(kernels.simhash64)
+  val shingleHashes = k2("shingle_hashes", Longs, "kernels.shingleHashes",
+    types(Toks, IntegerType))(kernels.shingleHashes)
+  // poly31 window hashes, oracle-mirrorable (CrossHashSql.poly31 over the
+  // space-joined grams)
+  val gramHashes31 = k2("gram_hashes31", Longs, "crosskernels.gramHashes31",
+    types(Toks, IntegerType))(crosskernels.gramHashes31)
+  // per-query-term tf in one pass over the tokens: the BM25/search kernel
+  val termCounts = k2("term_counts", Longs, "kernels.termCounts", types(Toks, Toks))(
+    kernels.termCounts)
+  val lshBuckets = k1("lsh_buckets", Longs, "kernels.lshBuckets", types(Vec))(kernels.lshBuckets)
+  val overlapMarks = k1("overlap_marks", Marks, "kernels.overlapMarks", types(Toks))(
+    kernels.overlapMarks)
+  // overlap_marks over a bit-mask membership against the sorted source
+  // domain; <=64-source domains only
+  val overlapMarksMask = k2("overlap_marks_mask", Marks, "kernels.overlapMarksMask",
+    types(LongType, Toks))(kernels.overlapMarksMask)
+  val shingleStrings = k2("shingle_strings", ArrayType(StringType, containsNull = false),
+    "crosskernels.shingleStrings", types(Toks, IntegerType))(crosskernels.shingleStrings)
+  val simhash60 = k1("simhash60", LongType, "crosskernels.simhash60", types(Toks))(
+    crosskernels.simhash60)
+  // [lo, hi] = (simhash60(toks), simhash60('w'-prefixed toks)) in one pass
+  val simhashWide120 = k1("simhash_wide120", Longs, "crosskernels.simhashWide120", types(Toks))(
+    crosskernels.simhashWide120)
+  val minhashSig31 = k2("minhash_sig31", Longs, "crosskernels.minhashSig31",
+    types(Toks, IntegerType))(crosskernels.minhashSig31)
+  // minhash_sig31(shingle_strings(tokens, k), n) fused: identical values, no
+  // shingle strings materialized
+  val minhashShingleSig = k3("minhash_shingle_sig", Longs, "crosskernels.minhashShingleSig",
+    types(Toks, IntegerType, IntegerType))(crosskernels.minhashShingleSig)
+  // regexp_count without materializing the matches (Spark's built-in is
+  // size(regexp_extract_all(...))): same java.util.regex find() traversal
+  val regexCount = k2("regex_count", LongType, "kernels.regexCount",
+    types(StringType, StringType))(kernels.regexCount)
+  // Morton/Z-order interleave of the two dimensions' low 16 bits
+  val interleaveBits = k2("interleave_bits", LongType, "kernels.interleaveBits16",
+    types(LongType, LongType))(kernels.interleaveBits16)
+  // the t06 punctuation counter: regexp_count(s, '[^A-Za-z0-9\s]')
+  val nonAlnumCount = k1("non_alnum_count", LongType, "kernels.nonAlnumSpaceCount",
+    types(StringType))(kernels.nonAlnumSpaceCount)
+  // Unicode NFC before hashing; DuckDB mirrors it with nfc_normalize
+  val nfcNorm = k1("nfc_norm", StringType, "crosskernels.nfc", types(StringType))(
+    crosskernels.nfc)
+  // per-subspace argmax-IP codebook assignment: the PQ index build kernel
+  val pqEncode = k2("pq_encode", ArrayType(IntegerType, containsNull = false),
+    "crosskernels.pqEncode", types(Vec, ArrayType(ArrayType(Vec))))(crosskernels.pqEncode)
+  // argmax-cosine codebook assignment: the IVF cell kernel
+  val nearestCentroid = k2("nearest_centroid", LongType, "kernels.nearestCentroid", vecVsRefs)(
+    kernels.nearestCentroid)
+  // max cosine against the reference row: d27's decontamination verdict
+  val maxCosine = k2("max_cosine", DoubleType, "kernels.maxCosine", vecVsRefs)(kernels.maxCosine)
+  // nearest_centroid and max_cosine fused into one pass, bit-identical fields
+  val nearestCosine = k2("nearest_cosine", StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("sim", DoubleType, nullable = false))),
+    "kernels.nearestCosine", vecVsRefs)(kernels.nearestCosine)
+  // [self, parent, ..., root] in the derived balanced tree
+  val treeAncestors = k1("tree_ancestors", Longs, "kernels.treeAncestors", types(LongType))(
+    kernels.treeAncestors)
+  val minhashSig = k2("minhash_sig", Longs, "kernels.minhashSignature",
+    types(ArrayType(LongType), IntegerType))(kernels.minhashSignature)
+  val cmsQuery = k2("cms_query", LongType, "cms.query", types(Longs, StringType))(
+    cms.query)
+  val bloomContains = k2("bloom_contains", BooleanType, "bloom.contains",
+    types(BinaryType, StringType))(bloom.contains)
 
-  /** Registry-free non_alnum_count (see [[kernels.nonAlnumSpaceCount]]). */
-  def nonAlnumCountDirect(s: Column): Column = {
-    import org.apache.spark.sql.GraftSqlShim
-    GraftSqlShim.column(NonAlnumCountExpr(GraftSqlShim.expr(s)))
+  val topkAgg = new Aggregate("topk_agg", 2, es => TopKAggExpr(es(0), es(1)))
+  val bloomAgg = new Aggregate("bloom_agg", 3, es => BloomAggExpr(es(0), es(1), es(2)))
+  val cmsAgg = new Aggregate("cms_agg", 4, es => CmsAggExpr(es(0), es(1), es(2), es(3)))
+  val vecMeanAgg = new Aggregate("vec_mean_agg", 2, es => VecMeanAggExpr(es(0), es(1)))
+
+  /** Every function, in registration order. */
+  val table: Seq[GraftFunction] = Seq(cosineSim, hashEmbed, simhash64, shingleHashes,
+    gramHashes31, termCounts, lshBuckets, overlapMarks, overlapMarksMask, shingleStrings,
+    simhash60, simhashWide120, minhashSig31, minhashShingleSig, regexCount, interleaveBits,
+    nonAlnumCount, nfcNorm, pqEncode, nearestCentroid, maxCosine, nearestCosine, treeAncestors,
+    minhashSig, cmsQuery, bloomContains, topkAgg, bloomAgg, cmsAgg, vecMeanAgg)
+
+  private val kernelsByName: Map[String, Kernel] =
+    table.collect { case k: Kernel => k.name -> k }.toMap
+
+  /** The kernel row a [[KernelExpr]] key names. */
+  def kernel(name: String): Kernel = kernelsByName(name)
+
+  /** Idempotently register all graft functions on a session, for SQL text. */
+  def register(spark: SparkSession): Unit = table.foreach { f =>
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(f.name, f.builder, "built-in")
   }
 }
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` injection point. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    def info(name: String) = new ExpressionInfo("graft.functions", name)
-    ext.injectFunction((FunctionIdentifier("cosine_sim"), info("cosine_sim"),
-      (es: Seq[Expression]) => CosineSimilarityExpr(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("simhash64"), info("simhash64"),
-      (es: Seq[Expression]) => SimHash64Expr(es(0))))
-    ext.injectFunction((FunctionIdentifier("shingle_hashes"), info("shingle_hashes"),
-      (es: Seq[Expression]) => ShingleHashesExpr(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"), info("minhash_sig"),
-      (es: Seq[Expression]) => MinHashSignatureExpr(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("shingle_strings"), info("shingle_strings"),
-      (es: Seq[Expression]) => ShingleStringsExpr(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("simhash60"), info("simhash60"),
-      (es: Seq[Expression]) => SimHash60Expr(es(0))))
-    ext.injectFunction((FunctionIdentifier("simhash_wide120"), info("simhash_wide120"),
-      (es: Seq[Expression]) => SimHashWide120Expr(es(0))))
-    ext.injectFunction((FunctionIdentifier("minhash_sig31"), info("minhash_sig31"),
-      (es: Seq[Expression]) => MinHashSig31Expr(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("minhash_shingle_sig"), info("minhash_shingle_sig"),
-      (es: Seq[Expression]) => MinhashShingleSigExpr(es(0), es(1), es(2))))
-    ext.injectFunction((FunctionIdentifier("pq_encode"), info("pq_encode"),
-      (es: Seq[Expression]) => PqEncodeExpr(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("nearest_centroid"), info("nearest_centroid"),
-      (es: Seq[Expression]) => NearestCentroidExpr(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("nearest_cosine"), info("nearest_cosine"),
-      (es: Seq[Expression]) => NearestCosineExpr(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("topk_agg"), info("topk_agg"),
-      (es: Seq[Expression]) => TopKAggExpr(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("bloom_agg"), info("bloom_agg"),
-      (es: Seq[Expression]) => BloomAggExpr(es(0), es(1), es(2))))
-    ext.injectFunction((FunctionIdentifier("bloom_contains"), info("bloom_contains"),
-      (es: Seq[Expression]) => BloomContainsExpr(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("nfc_norm"), info("nfc_norm"),
-      (es: Seq[Expression]) => NfcNormalizeExpr(es(0))))
-    ext.injectFunction((FunctionIdentifier("tree_ancestors"), info("tree_ancestors"),
-      (es: Seq[Expression]) => TreeAncestorsExpr(es(0))))
-    ext.injectFunction((FunctionIdentifier("cms_agg"), info("cms_agg"),
-      (es: Seq[Expression]) => CmsAggExpr(es(0), es(1), es(2), es(3))))
-    ext.injectFunction((FunctionIdentifier("cms_query"), info("cms_query"),
-      (es: Seq[Expression]) => CmsQueryExpr(es(0), es(1))))
+    GraftFunctions.table.foreach { f =>
+      ext.injectFunction(
+        (FunctionIdentifier(f.name), new ExpressionInfo("graft.functions", f.name), f.builder))
+    }
     // whole-operator extension: plans graft.plans.AsOfJoin into its
     // sort-merge exec for sessions configured with spark.sql.extensions
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

@@ -114,5 +114,5 @@ case class TopKAggExpr(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0), kExpr = newChildren(1))
-  override def prettyName: String = "topk_agg"
+  override def prettyName: String = GraftFunctions.topkAgg.name
 }

@@ -112,5 +112,5 @@ case class VecMeanAggExpr(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0), dimExpr = newChildren(1))
-  override def prettyName: String = "vec_mean_agg"
+  override def prettyName: String = GraftFunctions.vecMeanAgg.name
 }

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.types._
@@ -30,10 +31,6 @@ object GraftTypeCheck {
   }
 }
 
-/** Static kernels shared by interpreted eval and generated code. Keeping the
-  * bodies here means doGenCode emits a single static call — the expression
-  * stays inside whole-stage codegen without us generating the loop by hand.
-  */
 /** Deterministic random-hyperplane constants for the LSH family —
   * splitmix64 -> [-1, 1) floats, the single source of truth shared by the
   * fused [[kernels.lshBuckets]] kernel and the Column-level per-plane
@@ -58,6 +55,11 @@ object lshplanes {
     }
 }
 
+/** Static kernels shared by interpreted eval and generated code. Keeping the
+  * bodies here means [[KernelExpr]] emits a single static call — the
+  * expression stays inside whole-stage codegen without us generating the
+  * loop by hand.
+  */
 object kernels {
 
   /** Cosine similarity over float vectors, accumulated in double. */
@@ -827,441 +829,56 @@ object MinHashParams {
   val B: Array[Long] = Array.tabulate(MaxHashes)(i => splitmix(2L * i + 1))
 }
 
-/** cosine_sim(array<float>, array<float>) -> double, codegen'd. */
-case class CosineSimilarityExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(left, right), Seq(ArrayType(FloatType), ArrayType(FloatType)))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    kernels.cosineF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.kernels.cosineF($a, $b);")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "cosine_sim"
-}
-
-/** hash_embed(array<string>, dims) -> array<float>: feature-hashing text
-  * projection (the deterministic "text tower" for cross-modal alignment).
+/** The one scalar Catalyst expression behind graft's kernel table: `key`
+  * names a [[Kernel]] row of [[GraftFunctions]], which supplies the input
+  * check, the result type and the kernel. It behaves as Spark's
+  * Unary/Binary/TernaryExpression do: a null argument yields null without
+  * calling the kernel, interpreted `eval` calls the row's typed function,
+  * and codegen emits one static call to the row's kernel method, so the
+  * expression stays inside whole-stage codegen. Plans print it as
+  * `key(args)`, and equality is by (key, children).
   */
-case class HashEmbedExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(left, right), Seq(ArrayType(StringType), IntegerType))
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullSafeEval(tokens: Any, dims: Any): Any =
-    kernels.hashEmbed(tokens.asInstanceOf[ArrayData], dims.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, d) => s"graft.functions.kernels.hashEmbed($t, $d)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "hash_embed"
-}
+case class KernelExpr(key: String, children: Seq[Expression]) extends Expression {
+  @transient private lazy val kernel: Kernel = GraftFunctions.kernel(key)
 
-/** simhash64(array<string>) -> long, codegen'd. */
-case class SimHash64Expr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(child), Seq(ArrayType(StringType)))
-  override def dataType: DataType = LongType
-  override def nullSafeEval(tokens: Any): Any =
-    kernels.simhash64(tokens.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.kernels.simhash64($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "simhash64"
-}
+  override def prettyName: String = key
+  override protected def stringArgs: Iterator[Any] = children.iterator
+  override def nullable: Boolean = children.exists(_.nullable)
+  override def foldable: Boolean = children.forall(_.foldable)
+  override def dataType: DataType = kernel.dataType
 
-/** shingle_hashes(array<string>, k) -> array<long>: one-pass k-gram hashes. */
-case class ShingleHashesExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(left, right), Seq(ArrayType(StringType), IntegerType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(tokens: Any, k: Any): Any =
-    kernels.shingleHashes(tokens.asInstanceOf[ArrayData], k.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, k) => s"graft.functions.kernels.shingleHashes($t, $k)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "shingle_hashes"
-}
+    if (children.length != kernel.arity) TypeCheckResult.TypeCheckFailure(
+      s"$key expects ${kernel.arity} argument(s), got ${children.length}")
+    else kernel.inputs(key, children)
 
-/** gram_hashes31(array<string>, k) -> array<long>: poly31 window hashes,
-  * oracle-mirrorable (CrossHashSql.poly31 over the space-joined grams).
-  */
-case class GramHashes31Expr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(left, right), Seq(ArrayType(StringType), IntegerType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(tokens: Any, k: Any): Any =
-    crosskernels.gramHashes31(tokens.asInstanceOf[ArrayData], k.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, k) => s"graft.functions.crosskernels.gramHashes31($t, $k)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "gram_hashes31"
-}
-
-/** term_counts(array<string> toks, array<string> terms) -> array<long>:
-  * per-query-term tf in ONE pass over the token array (hash lookup per
-  * token), |terms|-independent scan cost — the BM25/search kernel.
-  */
-case class TermCountsExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(left, right), Seq(ArrayType(StringType), ArrayType(StringType)))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(t: Any, q: Any): Any =
-    kernels.termCounts(t.asInstanceOf[ArrayData], q.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, q) => s"graft.functions.kernels.termCounts($t, $q)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "term_counts"
-}
-
-/** lsh_buckets(array<float>) -> array<long>: all 8 LSH table bucket ids in
-  * one fused pass (see kernels.lshBuckets).
-  */
-case class LshBucketsExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(child), Seq(ArrayType(FloatType)))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(emb: Any): Any =
-    kernels.lshBuckets(emb.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.kernels.lshBuckets($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "lsh_buckets"
-}
-
-/** overlap_marks(array<string>) -> array<struct<src_a, src_b>>: membership
-  * (src_b null) + ordered-pair markers, codegen'd (see kernels.overlapMarks).
-  */
-case class OverlapMarksExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(child), Seq(ArrayType(StringType)))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("src_a", StringType, nullable = false),
-    StructField("src_b", StringType, nullable = true))), containsNull = false)
-  override def nullSafeEval(srcs: Any): Any =
-    kernels.overlapMarks(srcs.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.kernels.overlapMarks($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "overlap_marks"
-}
-
-/** overlap_marks_mask(bigint, array<string>) -> array<struct<src_a, src_b>>:
-  * [[OverlapMarksExpr]] over a bit-mask membership encoding against the
-  * sorted source-domain array (see kernels.overlapMarksMask for the
-  * equivalence argument). Codegen'd; ≤64-source domains only.
-  */
-case class OverlapMarksMaskExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(left, right), Seq(LongType, ArrayType(StringType)))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("src_a", StringType, nullable = false),
-    StructField("src_b", StringType, nullable = true))), containsNull = false)
-  override def nullSafeEval(mask: Any, names: Any): Any =
-    kernels.overlapMarksMask(mask.asInstanceOf[Long], names.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (m, ns) => s"graft.functions.kernels.overlapMarksMask($m, $ns)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "overlap_marks_mask"
-}
-
-/** shingle_strings(array<string>, k) -> array<string>: k-gram strings. */
-case class ShingleStringsExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(left, right), Seq(ArrayType(StringType), IntegerType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(tokens: Any, k: Any): Any =
-    crosskernels.shingleStrings(tokens.asInstanceOf[ArrayData], k.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, k) => s"graft.functions.crosskernels.shingleStrings($t, $k)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "shingle_strings"
-}
-
-/** simhash60(array<string>) -> long; oracle-mirrorable (see CrossHash). */
-case class SimHash60Expr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(child), Seq(ArrayType(StringType)))
-  override def dataType: DataType = LongType
-  override def nullSafeEval(tokens: Any): Any =
-    crosskernels.simhash60(tokens.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.crosskernels.simhash60($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "simhash60"
-}
-
-/** simhash_wide120(array<string>) -> array<long> [lo, hi]; one-pass fused
-  * form of (simhash60(toks), simhash60('w'-prefixed toks)) — see
-  * crosskernels.simhashWide120.
-  */
-case class SimHashWide120Expr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(child), Seq(ArrayType(StringType)))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(tokens: Any): Any =
-    crosskernels.simhashWide120(tokens.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.crosskernels.simhashWide120($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "simhash_wide120"
-}
-
-/** minhash_sig31(array<string>, numHashes) -> array<long>; oracle-mirrorable. */
-case class MinHashSig31Expr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(left, right), Seq(ArrayType(StringType), IntegerType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(grams: Any, n: Any): Any =
-    crosskernels.minhashSig31(grams.asInstanceOf[ArrayData], n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (g, n) => s"graft.functions.crosskernels.minhashSig31($g, $n)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "minhash_sig31"
-}
-
-/** minhash_shingle_sig(array<string> tokens, k, n) -> array<long>: the fused
-  * form of `minhash_sig31(shingle_strings(tokens, k), n)` — identical values
-  * (KernelPropertySpec holds them bit-equal on arbitrary unicode), no
-  * shingle-string materialization. See [[crosskernels.minhashShingleSig]].
-  */
-case class MinhashShingleSigExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(first, second, third),
-      Seq(ArrayType(StringType), IntegerType, IntegerType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(tokens: Any, k: Any, n: Any): Any =
-    crosskernels.minhashShingleSig(
-      tokens.asInstanceOf[ArrayData], k.asInstanceOf[Int], n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, k, n) => s"graft.functions.crosskernels.minhashShingleSig($t, $k, $n)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-  override def prettyName: String = "minhash_shingle_sig"
-}
-
-/** nfc_norm(string) -> string: Unicode NFC normalization (canonical
-  * composition) via java.text.Normalizer — the canonicalization step text
-  * dedup needs before hashing, since visually-identical strings with
-  * decomposed combining marks hash differently. DuckDB mirrors it with
-  * utf8proc's nfc_normalize, so the result is oracle-checkable.
-  */
-/** regex_count(string, pattern) -> long: non-overlapping match count
-  * WITHOUT materializing the matches. Spark's built-in regexp_count is
-  * RuntimeReplaceable as size(regexp_extract_all(...)), which allocates a
-  * UTF8String per match per row — on punct-heavy corpora that array build
-  * dominates the t06 quality pass (measured ~1.6s of a 1.9s corpus scan at
-  * the 10× SF). Identical count semantics: java.util.regex find() loop,
-  * the same engine and traversal the built-in uses, so every oracle value
-  * is unchanged. Patterns are cached per-JVM (they are plan literals;
-  * the cache never exceeds the handful of distinct patterns in the
-  * codebase).
-  */
-case class RegexCountExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(left, right), Seq(StringType, StringType))
-  override def dataType: DataType = LongType
-  override def nullSafeEval(s: Any, p: Any): Any =
-    kernels.regexCount(s.asInstanceOf[UTF8String], p.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, p) => s"graft.functions.kernels.regexCount($s, $p)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "regex_count"
-}
-
-/** interleave_bits(long, long) -> long: Morton/Z-order interleave of the
-  * two dimensions' low 16 bits ([[kernels.interleaveBits16]]) — the
-  * space-filling-curve clustering key for multi-dimensional data skipping.
-  */
-case class InterleaveBitsExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(left, right), Seq(LongType, LongType))
-  override def dataType: DataType = LongType
-  override def nullSafeEval(x: Any, y: Any): Any =
-    kernels.interleaveBits16(x.asInstanceOf[Long], y.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y) => s"graft.functions.kernels.interleaveBits16($x, $y)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "interleave_bits"
-}
-
-/** non_alnum_count(string) -> long: [[kernels.nonAlnumSpaceCount]] as a
-  * codegen'd expression — the t06 punctuation counter.
-  */
-case class NonAlnumCountExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(child), Seq(StringType))
-  override def dataType: DataType = LongType
-  override def nullSafeEval(s: Any): Any =
-    kernels.nonAlnumSpaceCount(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.kernels.nonAlnumSpaceCount($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "non_alnum_count"
-}
-
-case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(child), Seq(StringType))
-  override def dataType: DataType = StringType
-  override def nullSafeEval(s: Any): Any =
-    crosskernels.nfc(s.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.crosskernels.nfc($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "nfc_norm"
-}
-
-/** pq_encode(array<float>, array<array<array<float>>>) -> array<int>:
-  * per-subspace argmax-IP codebook assignment (the PQ index build kernel).
-  */
-case class PqEncodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(left, right),
-      Seq(ArrayType(FloatType), ArrayType(ArrayType(ArrayType(FloatType)))))
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(emb: Any, cbs: Any): Any =
-    crosskernels.pqEncode(emb.asInstanceOf[ArrayData], cbs.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (e, c) => s"graft.functions.crosskernels.pqEncode($e, $c)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "pq_encode"
-}
-
-/** nearest_centroid(array<float>, array<struct<long, array<float>>>) -> long:
-  * argmax-cosine codebook assignment as a pure projection — the IVF cell
-  * assignment kernel (no per-(vector, centroid) row expansion, no window).
-  */
-case class NearestCentroidExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(StructType(Array(f0, f1)), _))
-        if f0.dataType == LongType &&
-           (f1.dataType match { case ArrayType(FloatType, _) => true; case _ => false }) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (array<float>, array<struct<long, array<float>>>), " +
-        s"got (${l.simpleString}, ${r.simpleString})")
+  override def eval(input: InternalRow): Any = {
+    val args = new Array[Any](children.length)
+    var i = 0
+    while (i < args.length) {
+      args(i) = children(i).eval(input)
+      if (args(i) == null) return null
+      i += 1
+    }
+    kernel.eval(args)
   }
-  override def dataType: DataType = LongType
-  override def nullSafeEval(emb: Any, cents: Any): Any =
-    kernels.nearestCentroid(emb.asInstanceOf[ArrayData], cents.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (e, c) => s"graft.functions.kernels.nearestCentroid($e, $c)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "nearest_centroid"
-}
 
-/** max_cosine(array<float>, array<struct<long, array<float>>>) -> double:
-  * max cosine similarity against a broadcast reference row — the verdict
-  * kernel for embedding-space decontamination (d27): one static call per
-  * corpus row, the |corpus| x |eval| scores never materialize as rows.
-  */
-case class MaxCosineExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(StructType(Array(f0, f1)), _))
-        if f0.dataType == LongType &&
-           (f1.dataType match { case ArrayType(FloatType, _) => true; case _ => false }) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (array<float>, array<struct<long, array<float>>>), " +
-        s"got (${l.simpleString}, ${r.simpleString})")
+  /** defineCodeGen's null propagation over n arguments: each argument is
+    * evaluated only once every argument before it is non-null. */
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val gens = children.map(_.genCode(ctx))
+    val call = s"${ev.value} = graft.functions.${kernel.call}(${gens.map(_.value).mkString(", ")});"
+    val decl = s"${CodeGenerator.javaType(dataType)} ${ev.value} = " +
+      s"${CodeGenerator.defaultValue(dataType)};"
+    if (nullable) {
+      val body = children.zip(gens).foldRight(s"${ev.isNull} = false;\n$call") {
+        case ((c, g), inner) => s"${g.code}\n${ctx.nullSafeExec(c.nullable, g.isNull)(inner)}"
+      }
+      ev.copy(code = code"boolean ${ev.isNull} = true;\n$decl\n$body")
+    } else
+      ev.copy(code = code"${gens.map(_.code).mkString("\n")}\n$decl\n$call", isNull = FalseLiteral)
   }
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(emb: Any, cents: Any): Any =
-    kernels.maxCosine(emb.asInstanceOf[ArrayData], cents.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (e, c) => s"graft.functions.kernels.maxCosine($e, $c)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "max_cosine"
-}
 
-/** nearest_cosine(array<float>, array<struct<long, array<float>>>) ->
-  * struct<id: long, sim: double>: fused argmax id + max score in ONE pass
-  * over the broadcast reference row — the d27 verdict kernel. Iteration
-  * order and tie-break are shared with nearest_centroid/max_cosine, so
-  * projecting both fields from this struct is bit-identical to calling the
-  * two single-output kernels, at half the per-row cost.
-  */
-case class NearestCosineExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(StructType(Array(f0, f1)), _))
-        if f0.dataType == LongType &&
-           (f1.dataType match { case ArrayType(FloatType, _) => true; case _ => false }) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (array<float>, array<struct<long, array<float>>>), " +
-        s"got (${l.simpleString}, ${r.simpleString})")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("sim", DoubleType, nullable = false)))
-  override def nullSafeEval(emb: Any, cents: Any): Any =
-    kernels.nearestCosine(emb.asInstanceOf[ArrayData], cents.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (e, c) => s"graft.functions.kernels.nearestCosine($e, $c)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "nearest_cosine"
-}
-
-/** tree_ancestors(long) -> array<long>: [self, parent, ..., root] for the
-  * derived balanced tree (parent(i) = (i-1) div 2), codegen'd.
-  */
-case class TreeAncestorsExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(child), Seq(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(id: Any): Any =
-    kernels.treeAncestors(id.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.kernels.treeAncestors($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "tree_ancestors"
-}
-
-/** minhash_sig(array<long>, numHashes) -> array<long>. */
-case class MinHashSignatureExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, Seq(left, right), Seq(ArrayType(LongType), IntegerType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(hashes: Any, n: Any): Any =
-    kernels.minhashSignature(hashes.asInstanceOf[ArrayData], n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (h, n) => s"graft.functions.kernels.minhashSignature($h, $n)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "minhash_sig"
+  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
+    copy(children = newChildren)
 }

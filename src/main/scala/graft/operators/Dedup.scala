@@ -90,7 +90,6 @@ object Dedup {
   private[graft] def signaturesOf(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     docs.select($"doc_id",
       minhashShingleSig(
         split(lower(trim($"text")), "\\s+"), lit(ShingleK),
@@ -565,7 +564,6 @@ object Dedup {
     */
   def simhashDedup(s: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val hashed = Tables.documents(s, dir)
       .select($"doc_id", simhash60(split(lower(trim($"text")), "\\s+")).as("sh"))
       .transform(Materialize(_))
@@ -601,7 +599,6 @@ object Dedup {
     */
   def simhashWide(s: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // fused one-pass kernel: value-identical to simhash60(toks) /
     // simhash60('w'-prefixed toks) but decodes each token once and never
     // materializes the prefixed array (KernelPropertySpec pins equality)
@@ -808,7 +805,6 @@ object Dedup {
   val BloomHashes = 5
   def bloomDecontaminate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     import graft.functions.GraftFunctions.{bloomAgg, bloomContains}
     val fp = md5(regexp_replace(lower($"text"), "\\s+", " "))
     val docs = Tables.documents(s, dir).withColumn("content_md5", fp)
@@ -1026,7 +1022,6 @@ object Dedup {
       successorWindow: Option[Int] = Some(NeighborWindow)): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // sig dropped before the bucket window: the pairing needs only ids, so
     // the window sort carries 3 columns, not the 32-long signature array
     val banded = bandSignatures(signaturesOf(docs))
@@ -1040,7 +1035,7 @@ object Dedup {
     // arrays costs more than the second column-pruned scan + rehash here,
     // unlike d39 where FOUR consumers amortize the materialization)
     val grams = docs.select($"doc_id",
-      array_distinct(expr("gram_hashes31(split(lower(trim(text)), '\\\\s+'), 3)"))
+      array_distinct(gramHashes31(split(lower(trim($"text")), "\\s+"), lit(3)))
         .as("hv"))
     val inter = size(array_intersect($"hv_a", $"hv_b")).cast("double")
     def contain(base: org.apache.spark.sql.Column) =
@@ -1059,7 +1054,6 @@ object Dedup {
 
   def ngramJaccard(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val grams = Tables.documents(s, dir)
       .select($"doc_id",
         array_distinct(shingleStrings(split(lower(trim($"text")), "\\s+"), lit(2))).as("grams"))
@@ -1112,14 +1106,13 @@ object Dedup {
   private def overlapMatrix(s: SparkSession, dir: String,
                             withSketch: Boolean): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // gram construction through the codegen'd shingle_strings kernel — an
     // equivalent transform(sequence…concat_ws) higher-order lambda measured
     // 9.9 s vs 0.3 s at sf0.1: Spark evals HOF lambdas interpreted,
     // per element, and that dominated the whole key
     val exploded = Tables.documents(s, dir)
       .select($"source", explode(
-        expr(s"shingle_strings(split(lower(trim(text)), '\\\\s+'), $ShingleK)"))
+        shingleStrings(split(lower(trim($"text")), "\\s+"), lit(ShingleK)))
         .as("shingle"))
     // Source domain, collected once: |sources| rows off a column-pruned
     // scan — the twoPhaseIndex bounded-collect rule; at 100 TB this list is
@@ -1351,7 +1344,6 @@ object Dedup {
   private[graft] def bottomkContainmentOf(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // the gram-hash signature projection feeds FOUR consumers (postings,
     // queries, and both sides of the exact verify) — materialize it once
     // (guide §8: compute the lightweight proxy once, reuse it), instead of
@@ -1359,7 +1351,7 @@ object Dedup {
     // projection IS the persisted index artifact the scaladoc names
     val hv = docs
       .select($"doc_id",
-        array_distinct(expr("gram_hashes31(split(lower(trim(text)), '\\\\s+'), 3)"))
+        array_distinct(gramHashes31(split(lower(trim($"text")), "\\s+"), lit(3)))
           .as("hv"))
       .transform(Materialize(_))
     val postings = hv.select($"doc_id", explode($"hv").as("h"))
@@ -1411,7 +1403,6 @@ object Dedup {
   val LshQualityThresholds: Seq[Long] = Seq(200L, 300L, 500L)
   def lshQuality(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val origs = Tables.documents(s, dir)
       .filter($"doc_id" < LshQualityCap).select($"doc_id", $"text")
     val synth = origs
@@ -1485,7 +1476,6 @@ object Dedup {
   val ContainHostOffset = 200000L
   def containmentRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val origs = Tables.documents(s, dir)
       .filter($"doc_id" < LshQualityCap).select($"doc_id", $"text")
     // host construction: oid kept distinct from the emitted doc_id so both
@@ -1504,7 +1494,7 @@ object Dedup {
             " ")).as("text"))
     val sample = origs.unionByName(hosts)
     val gd = sample.select($"doc_id",
-      array_distinct(expr("gram_hashes31(split(lower(trim(text)), '\\\\s+'), 3)"))
+      array_distinct(gramHashes31(split(lower(trim($"text")), "\\s+"), lit(3)))
         .as("hv"))
     val truth = broadcast(gd.select($"doc_id".as("doc_a"), $"hv".as("ha")))
       .join(gd.select($"doc_id".as("doc_b"), $"hv".as("hb")), $"doc_a" < $"doc_b")

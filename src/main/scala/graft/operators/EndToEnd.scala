@@ -20,7 +20,7 @@ object EndToEnd {
     val cleaned = trim(regexp_replace($"text", "\\s+", " "))
     // 2. analyze: tokens + quality
     val tokens = size(split(cleaned, " ")).cast("long")
-    val stop = graft.functions.GraftFunctions.regexCountDirect(
+    val stop = graft.functions.GraftFunctions.regexCount(
       lower(cleaned), lit("\\b(the|a|and|of|to|in|is)\\b")).cast("double")
     val quality = least(lit(1.0), length(cleaned) / lit(500.0)) * lit(0.6) +
       (stop / (tokens.cast("double") + lit(1.0))) * lit(0.4)
@@ -73,7 +73,7 @@ object EndToEnd {
     val tokens = size(toks).cast("long")
     val rep = floor((lit(1.0) - size(array_distinct(toks)) / size(toks).cast("double"))
       * 10000.0 + 0.5) / 10000.0
-    val stop = graft.functions.GraftFunctions.regexCountDirect(
+    val stop = graft.functions.GraftFunctions.regexCount(
       lower($"cleaned"), lit("\\b(the|a|and|of|to|in|is)\\b")).cast("double")
     val quality = least(lit(1.0), length($"cleaned") / lit(500.0)) * lit(0.6) +
       (stop / (tokens.cast("double") + lit(1.0))) * lit(0.4)

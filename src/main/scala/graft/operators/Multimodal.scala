@@ -154,8 +154,8 @@ object Multimodal {
     // GENERATION — production points the binaryFile reader at an existing
     // object-store directory and no build step runs at all. toLocalIterator
     // bounds driver memory to one partition of (id, text) rows.
-    val store = Fixtures.publishOnce(new java.io.File(
-      s"/tmp/graft_attachments_${dir.replaceAll("[^A-Za-z0-9.]", "_")}_$srcStamp")) { tmp =>
+    val store = Fixtures.publishOnce(new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_attachments_${dir.replaceAll("[^A-Za-z0-9.]", "_")}_$srcStamp")) { tmp =>
       Tables.documents(s, dir).select($"doc_id", $"text").as[(Long, String)]
         .toLocalIterator().forEachRemaining { case (id, text) =>
           java.nio.file.Files.write(
@@ -531,7 +531,6 @@ object Multimodal {
   val AlignDims = 64
   def alignGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     import graft.functions.GraftFunctions.{cosineSim, hashEmbed}
     val txt = Tables.documents(s, dir).select($"doc_id", $"source",
       hashEmbed(split(trim(lower($"text")), "\\s+"), lit(AlignDims)).as("tvec"))

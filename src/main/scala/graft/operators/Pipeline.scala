@@ -112,7 +112,6 @@ object PipelineOps {
   private[graft] def termTfCols(docs: DataFrame, terms: Seq[String]): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val toks = split(lower($"text"), "\\s+")
     docs.select($"doc_id", $"source", size(toks).cast("long").as("dl"),
         graft.functions.GraftFunctions.termCounts(
@@ -384,7 +383,6 @@ object PipelineOps {
     */
   def subtreeRollup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .select(explode(graft.functions.GraftFunctions.treeAncestors($"doc_id"))
                 .as("ancestor_id"),
@@ -832,8 +830,8 @@ object PipelineOps {
   private def jsonlStore(s: SparkSession, dir: String): java.io.File = {
     import s.implicits._
     val srcStamp = new java.io.File(s"$dir/documents.parquet").lastModified()
-    Fixtures.publishOnce(new java.io.File(
-      s"/tmp/graft_jsonl_${dir.replaceAll("[^A-Za-z0-9.]", "_")}_$srcStamp")) { tmp =>
+    Fixtures.publishOnce(new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_jsonl_${dir.replaceAll("[^A-Za-z0-9.]", "_")}_$srcStamp")) { tmp =>
       // Files.newBufferedWriter THROWS on I/O errors (PrintWriter swallows
       // them behind an unchecked error flag — a truncated fixture would be
       // published and mtime-cached forever)

@@ -298,7 +298,6 @@ object Relational {
     */
   def topkAggQuery(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     Tables.events(s, dir)
       .groupBy($"event_type")
       .agg(graft.functions.GraftFunctions.topkAgg($"value", lit(5)).as("topv"))
@@ -950,7 +949,6 @@ object Relational {
     */
   def zorderLayout(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     Tables.events(s, dir)
       .select($"event_id",
         pmod($"user_id", lit(256L)).as("x"),

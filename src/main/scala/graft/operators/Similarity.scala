@@ -30,7 +30,6 @@ object Similarity {
   /** All (query, candidate, cosine) scores — shared by both variants. */
   private def scored(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     Tables.embeddings(s, dir)
       .crossJoin(broadcast(queries(s, dir)))
       .filter($"vec_id" =!= $"query_id")
@@ -97,7 +96,6 @@ object Similarity {
   val NearDupBaselineCap = 1024
   def embedNearDup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val subset = Tables.embeddings(s, dir)
       .filter($"vec_id" % 5 === 0 && $"vec_id" < 5L * NearDupBaselineCap)
       .select($"vec_id", $"embedding")
@@ -151,7 +149,6 @@ object Similarity {
   val IvfMaxCentroids = 4096
   def annIvf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, dir).select($"vec_id", $"embedding")
     ivfSearch(emb, sampledCentroids(emb))
   }
@@ -220,7 +217,6 @@ object Similarity {
     */
   def kmeansCentroids(emb: DataFrame, iters: Int): DataFrame = {
     import emb.sparkSession.implicits._
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     var centroids = sampledCentroids(emb)
     for (_ <- 1 to iters) {
       val assigned = assignCells(emb, collapseCodebook(centroids))
@@ -250,7 +246,6 @@ object Similarity {
     */
   def annIvfTrained(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, dir).select($"vec_id", $"embedding")
     ivfSearch(emb, kmeansCentroids(emb, iters = 3))
   }
@@ -381,7 +376,6 @@ object Similarity {
   private[graft] def annPqAtDepth(s: SparkSession, dir: String,
                                   depthOverride: Option[Long]): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, dir).select($"vec_id", $"embedding")
     // deterministic codebook: hash-sampled vectors (unbiased by id — see
     // sampledCentroids on why a low-id prefix cap goes stale at scale) ->
@@ -524,7 +518,6 @@ object Similarity {
     */
   private[graft] def cohesionMargins(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, dir).select($"vec_id", $"embedding")
     val global = emb.select(posexplode($"embedding"))
       .groupBy($"pos").agg(avg($"col").as("m"))
@@ -612,7 +605,6 @@ object Similarity {
     */
   def semanticDecontaminate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, dir)
     val evalRow = emb
       .filter($"vec_id" % SemEvalEvery === SemEvalResidue && $"vec_id" < SemEvalCap)
@@ -680,7 +672,6 @@ object Similarity {
     * backstops unplanned hot cells.
     */
   def semDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     semDedupOn(Tables.embeddings(s, dir).select($"vec_id", $"embedding"))
   }
@@ -724,7 +715,6 @@ object Similarity {
   val LshFlipMargin = 0.10
   def annLsh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // ONE fused lsh_buckets call per corpus row, posexploded into the
     // (table_id, bucket) rows the band join consumes — the prior shape
     // built the 8-struct array from 8 per-table bucket expressions (32
@@ -792,7 +782,6 @@ object Similarity {
   private[graft] def knnLabelPurityOf(emb: DataFrame): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val q = emb
       .filter($"vec_id" % KnnEvalEvery === KnnEvalResidue && $"vec_id" < KnnEvalCap)
       .select($"vec_id".as("query_id"), $"label".as("q_label"), $"embedding".as("qe"))
@@ -872,7 +861,6 @@ object Similarity {
     */
   def corpusMap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, dir).select($"vec_id", $"embedding")
     val assigned = assignCells(emb, collapseCodebook(sampledCentroids(emb)))
       .select($"vec_id", $"centroid_id")
@@ -928,7 +916,6 @@ object Similarity {
   private[graft] def hardNegativesOf(emb: DataFrame): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val q = emb
       .filter($"vec_id" % KnnEvalEvery === KnnEvalResidue && $"vec_id" < KnnEvalCap)
       .select($"vec_id".as("query_id"), $"label".as("q_label"), $"embedding".as("qe"))

@@ -79,7 +79,7 @@ object TextOps {
       .select(
         $"doc_id",
         size(split(trim($"text"), "\\s+")).cast("long").as("ws_tokens"),
-        graft.functions.GraftFunctions.regexCountDirect(
+        graft.functions.GraftFunctions.regexCount(
           $"text", lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]")).cast("long").as("bpe_tokens"),
         length($"text").cast("long").as("char_len"))
       .orderBy($"doc_id")
@@ -104,7 +104,7 @@ object TextOps {
       "zh" -> "[\\u4e00-\\u9fff]")
     val scored = markers.foldLeft(Tables.documents(s, dir).select($"doc_id", $"text", $"lang")) {
       case (df, (code, pat)) => df.withColumn(s"score_$code",
-        graft.functions.GraftFunctions.regexCountDirect(lower($"text"), lit(pat)))
+        graft.functions.GraftFunctions.regexCount(lower($"text"), lit(pat)))
     }
     val best = markers.map { case (code, _) =>
       struct(col(s"score_$code").as("score"), lit(code).as("code"))
@@ -133,12 +133,12 @@ object TextOps {
     // (same java.util.regex find() traversal). `words` counts separators+1,
     // provably equal to size(split(trim, \s+)) for every input incl. empty
     // and leading/trailing whitespace (split keeps empty edge tokens).
-    import graft.functions.GraftFunctions.{nonAlnumCountDirect, regexCountDirect}
+    import graft.functions.GraftFunctions.{nonAlnumCount, regexCount}
     val text  = col("text")
     val chars = length(text).cast("double")
-    val punct = nonAlnumCountDirect(text).cast("double")
-    val words = (regexCountDirect(trim(text), lit("\\s+")) + lit(1L)).cast("double")
-    val stop  = regexCountDirect(lower(text), lit("\\b(the|a|and|of|to|in|is)\\b")).cast("double")
+    val punct = nonAlnumCount(text).cast("double")
+    val words = (regexCount(trim(text), lit("\\s+")) + lit(1L)).cast("double")
+    val stop  = regexCount(lower(text), lit("\\b(the|a|and|of|to|in|is)\\b")).cast("double")
     val lenScore  = least(lit(1.0), chars / lit(500.0))
     val punctPen  = punct / (chars + lit(1.0))
     val stopRatio = stop / (words + lit(1.0))
@@ -339,8 +339,8 @@ object TextOps {
       .select($"doc_id",
         regexp_replace(regexp_replace(pii, emailPat, "[EMAIL]"), phonePat, "[PHONE]")
           .as("redacted"),
-        graft.functions.GraftFunctions.regexCountDirect(pii, lit(emailPat)).cast("long").as("n_emails"),
-        graft.functions.GraftFunctions.regexCountDirect(pii, lit(phonePat)).cast("long").as("n_phones"))
+        graft.functions.GraftFunctions.regexCount(pii, lit(emailPat)).cast("long").as("n_emails"),
+        graft.functions.GraftFunctions.regexCount(pii, lit(phonePat)).cast("long").as("n_phones"))
       .orderBy($"doc_id")
   }
 
@@ -407,7 +407,6 @@ object TextOps {
     */
   def repetition(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val toks = split(lower(trim($"text")), "\\s+")
     val roundTo4 = (c: org.apache.spark.sql.Column) => floor(c * 10000.0 + 0.5) / 10000.0
     Tables.documents(s, dir)
@@ -428,13 +427,12 @@ object TextOps {
     * hash differently, silently defeating exact dedup across sources that
     * emit different normal forms. Decomposed decorations are injected
     * deterministically (the corpus itself is ASCII), NFC-composed by the
-    * custom codegen'd [[graft.functions.NfcNormalizeExpr]], and the oracle
+    * custom codegen'd `nfc_norm` kernel, and the oracle
     * recomputes the composition with DuckDB's utf8proc nfc_normalize —
     * char counts prove the composition actually shortened the string.
     */
   def unicodeNormalize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // DECOMPOSED forms: "Cafe" + combining acute (U+0301), "A" + combining
     // ring (U+030A) -- NFC composes both to single code points
     val decorated = concat(lit("Cafe\u0301 nr "), $"doc_id", lit(" A\u030A "), $"text")
@@ -472,7 +470,6 @@ object TextOps {
   def cmsHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.GraftFunctions.{cmsAgg, cmsQuery}
-    graft.functions.GraftFunctions.register(s)
     val counts = Tables.documents(s, dir)
       .select(explode(expr("filter(split(lower(trim(text)), '\\\\s+'), t -> t <> '')"))
         .as("term"))
@@ -497,7 +494,6 @@ object TextOps {
     */
   def contaminationScore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val grams = Tables.documents(s, dir)
       .select($"doc_id",
         explode(array_distinct(graft.functions.GraftFunctions.shingleStrings(
@@ -552,7 +548,6 @@ object TextOps {
   private[graft] def crossDocRepetitionOf(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val grams = docs.select($"doc_id", $"source",
       array_distinct(
         graft.functions.GraftFunctions.shingleStrings(
@@ -775,7 +770,6 @@ object TextOps {
     // posexplode supplying the 1-based position — the equivalent
     // transform(sequence…array_join(slice…)) lambda evals interpreted per
     // window and measured ~6x slower corpus-wide (the d36 lesson)
-    graft.functions.GraftFunctions.register(s)
     // Two lazy passes over the corpus (census + probe), DELIBERATELY not
     // de-duplicated via a materialized shared subtree: an r14 probe that
     // materialized the tokenized (doc_id, t) projection measured flat
@@ -788,7 +782,8 @@ object TextOps {
     val wins = docs
       .select($"doc_id", split(lower(trim($"text")), "\\s+").as("t"))
       .filter(size($"t") >= k)
-      .select($"doc_id", posexplode(expr(s"shingle_strings(t, $k)")))
+      .select($"doc_id",
+        posexplode(graft.functions.GraftFunctions.shingleStrings($"t", lit(k))))
       .select($"doc_id", ($"pos" + 1).as("i"), $"col".as("w"))
     // "appears in >= 2 distinct docs" as min != max: countDistinct plans a
     // two-exchange partial-distinct aggregate, while min/max are single-pass
@@ -932,11 +927,10 @@ object TextOps {
   private[graft] def chunkRows(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val base = docs
       .select($"doc_id", split(lower(trim($"text")), "\\s+").as("t"))
       .withColumn("n", size($"t"))
-      .withColumn("hv", expr(s"gram_hashes31(t, $CdcW)"))
+      .withColumn("hv", graft.functions.GraftFunctions.gramHashes31($"t", lit(CdcW)))
       // a 0-based window index i0 with hv ≡ 0 (mod D) cuts after 1-based
       // token i0 + W
       .withColumn("cuts", expr(
@@ -956,8 +950,8 @@ object TextOps {
         $"c.chunk_idx".cast("long").as("chunk_idx"),
         $"c.start_tok".cast("long").as("start_tok"),
         $"c.n_toks".cast("long").as("n_toks"),
-        expr("element_at(gram_hashes31(slice(t, c.start_tok, c.n_toks), c.n_toks), 1)")
-          .as("chunk_hash"))
+        element_at(graft.functions.GraftFunctions.gramHashes31(
+          slice($"t", $"c.start_tok", $"c.n_toks"), $"c.n_toks"), 1).as("chunk_hash"))
   }
 
   /** t29: boilerplate excision at CDC-chunk granularity — the C4-style
@@ -1133,7 +1127,7 @@ object TextOps {
     */
   def markdownExport(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.GraftFunctions.regexCountDirect
+    import graft.functions.GraftFunctions.regexCount
     val md = {
       val m0 = regexp_replace(expr(SectionedMarkup), "<h1>(.*?)</h1>", "# $1\n\n")
       val m1 = regexp_replace(m0, "<h2>(.*?)</h2>", "## $1\n\n")
@@ -1143,11 +1137,11 @@ object TextOps {
     }
     Tables.documents(s, dir)
       .select($"doc_id", md.as("markdown"),
-        (regexCountDirect(expr(SectionedMarkup), lit("<h[12]>")))
+        (regexCount(expr(SectionedMarkup), lit("<h[12]>")))
           .cast("long").as("n_headings"),
-        (regexCountDirect(expr(SectionedMarkup), lit("<a href=")))
+        (regexCount(expr(SectionedMarkup), lit("<a href=")))
           .cast("long").as("n_links"),
-        (regexCountDirect(expr(SectionedMarkup), lit("<b>")))
+        (regexCount(expr(SectionedMarkup), lit("<b>")))
           .cast("long").as("n_bold"))
       .withColumn("md_len", length($"markdown").cast("long"))
       .orderBy($"doc_id")
@@ -1275,12 +1269,12 @@ object TextOps {
     */
   def scriptMix(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.GraftFunctions.regexCountDirect
+    import graft.functions.GraftFunctions.regexCount
     val suffix = when(pmod($"doc_id", lit(4L)) === 1L, " привет мир")
       .when(pmod($"doc_id", lit(4L)) === 2L, " 你好世界天地人和")
       .when(pmod($"doc_id", lit(4L)) === 3L, " مرحبا بالعالم")
       .otherwise("")
-    def cnt(pat: String) = regexCountDirect($"txt", lit(pat)).cast("long")
+    def cnt(pat: String) = regexCount($"txt", lit(pat)).cast("long")
     def ppm(c: String) = expr(s"$c * 1000000 div greatest(n_all, 1L)")
     Tables.documents(s, dir)
       .withColumn("sfx", suffix)

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import graft.functions.NfcNormalizeExpr
+import graft.functions.{GraftFunctions, KernelExpr}
 
 /** Domain algebraic laws applied as an optimizer rule — the fourth
   * extension surface next to the scalar Expressions, the topk/bloom
@@ -18,9 +18,11 @@ import graft.functions.NfcNormalizeExpr
   * deep chains collapse.
   */
 object GraftOptimizations extends Rule[LogicalPlan] {
+  private val Nfc = GraftFunctions.nfcNorm.name
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
     // NFC canonicalization is idempotent: nfc(nfc(x)) = nfc(x)
-    case NfcNormalizeExpr(inner @ NfcNormalizeExpr(_)) => inner
+    case KernelExpr(Nfc, Seq(inner @ KernelExpr(Nfc, _))) => inner
   }
 
   /** Idempotently attach to a session built without extensions. */

@@ -336,7 +336,6 @@ object Streams {
   def topkWindowed(events: DataFrame, k: Int = 3): DataFrame = {
     val s = events.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     events
       .groupBy(window($"ts", "6 hours").as("w"), $"event_type")
       .agg(graft.functions.GraftFunctions.topkAgg($"value", lit(k)).as("topv"))
@@ -366,7 +365,6 @@ object Streams {
   def cmsWindowed(events: DataFrame): DataFrame = {
     val s = events.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     events
       .groupBy(window($"ts", "6 hours").as("w"))
       .agg(graft.functions.GraftFunctions.cmsAgg(
@@ -409,7 +407,6 @@ object Streams {
   def sessionTopkWindowed(events: DataFrame, k: Int = 3): DataFrame = {
     val s = events.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     events
       .groupBy($"user_id", session_window($"ts", "1800000001 microseconds").as("sw"))
       .agg(graft.functions.GraftFunctions.topkAgg($"value", lit(k)).as("topv"))
@@ -759,12 +756,12 @@ object Streams {
     */
   def budgetAdmissionBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.GraftFunctions.regexCountDirect
+    import graft.functions.GraftFunctions.regexCount
     val wPrev = Window.partitionBy($"source").orderBy($"doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     Tables.documents(s, dir)
       .select($"doc_id", $"source",
-              (regexCountDirect(trim($"text"), lit("\\s+")) + lit(1L))
+              (regexCount(trim($"text"), lit("\\s+")) + lit(1L))
                 .cast("long").as("n_tokens"))
       .withColumn("admitted",
         coalesce(sum($"n_tokens").over(wPrev), lit(0L)) < lit(SourceTokenBudget))

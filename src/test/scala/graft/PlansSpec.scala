@@ -150,7 +150,7 @@ class PlansSpec extends SparkSpec {
     def countNfc(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int = {
       var n = 0
       p.foreach(_.expressions.foreach(_.foreach {
-        case _: functions.NfcNormalizeExpr => n += 1
+        case e: functions.KernelExpr if e.key == nfcNorm.name => n += 1
         case _ => ()
       }))
       n

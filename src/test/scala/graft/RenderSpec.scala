@@ -97,7 +97,7 @@ class RenderSpec extends SparkSpec {
     // many small files pack into few partitions, and shrinking it (or
     // growing maxPartitionBytes) packs MORE files per partition. Prove the
     // knob bites on the real fixture store.
-    val store = "/tmp/graft_attachments_" +
+    val store = sys.props("java.io.tmpdir") + "/graft_attachments_" +
       "_root_testdata_sf0.001_".replaceAll("[^A-Za-z0-9.]", "_") +
       new java.io.File(s"$sfDir/documents.parquet").lastModified()
     SparkEntry.queries("m03_binary_ingest")(spark, sfDir).count() // builds fixture

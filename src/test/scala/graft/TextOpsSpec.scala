@@ -360,7 +360,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("regex_count/non_alnum_count kernels equal the builtin on corpus and edge strings") {
     import spark.implicits._
-    import graft.functions.GraftFunctions.{nonAlnumCountDirect, regexCountDirect}
+    import graft.functions.GraftFunctions.{nonAlnumCount, regexCount}
     // edge strings: empty, whitespace variants, all-punct, unicode incl. a
     // surrogate-pair emoji (ONE code point -> one match), CJK, mixed
     val edges = Seq("", " ", "\t\n\f\r", "!!!...###", "a,b;c:d",
@@ -374,16 +374,16 @@ class TextOpsSpec extends SparkSpec {
       "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]")
     for (p <- pats) {
       val diff = df.filter(
-        regexCountDirect($"text", lit(p)) =!= regexp_count($"text", lit(p)))
+        regexCount($"text", lit(p)) =!= regexp_count($"text", lit(p)))
       assert(diff.isEmpty, s"kernel count diverges from builtin for pattern $p")
     }
     val diffNa = df.filter(
-      nonAlnumCountDirect($"text") =!= regexp_count($"text", lit("[^A-Za-z0-9\\s]")))
+      nonAlnumCount($"text") =!= regexp_count($"text", lit("[^A-Za-z0-9\\s]")))
     assert(diffNa.isEmpty,
       "non_alnum_count must equal regexp_count('[^A-Za-z0-9\\s]') on every string")
     // the words identity qualityCol relies on: separators+1 == size(split)
     val diffW = df.filter(
-      regexCountDirect(trim($"text"), lit("\\s+")) + 1 =!=
+      regexCount(trim($"text"), lit("\\s+")) + 1 =!=
         size(split(trim($"text"), "\\s+")))
     assert(diffW.isEmpty, "separator+1 word count must equal size(split)")
   }
@@ -629,7 +629,7 @@ class TextOpsSpec extends SparkSpec {
       assert(joined.filter(!$"markdown".startsWith(concat(lit("# "), $"source"))).isEmpty)
       // ## count must equal n_headings - 1 (the h1 is the only # heading)
       assert(df.filter(
-        graft.functions.GraftFunctions.regexCountDirect($"markdown", lit("## "))
+        graft.functions.GraftFunctions.regexCount($"markdown", lit("## "))
           .cast("long") =!= $"n_headings" - 1).isEmpty)
       assert(df.filter($"n_links" =!= 1 || $"n_bold" =!= 1).isEmpty)
       // conversion is total: no tag survives into the markdown
