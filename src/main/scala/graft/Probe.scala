@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev measurement loops, one main: `runMain graft.Probe <subcommand> ...`.
@@ -14,6 +18,8 @@ import org.apache.spark.sql.functions._
   *                                  timings (SURVEY §7f)
   *   plans <sfDir> [key...]         each key's formatted physical plan (default:
   *                                  all keys, sorted), through [[maskPlan]]
+  *   jobs <sfDir> [key...]          each key's job, stage and task counts as
+  *                                  one JSON line (default: all keys, sorted)
   *
   * Every subcommand runs under the [[Session]] profile; an unknown one
   * prints usage and exits 2.
@@ -21,7 +27,8 @@ import org.apache.spark.sql.functions._
 object Probe {
   private val Usage =
     "usage: graft.Probe time <sfDir> <key...> [reps] | margin <sfDir> | " +
-      "recall <sfDir...> [pqDepth...] | dedup-scale <sfDir> | plans <sfDir> [key...]"
+      "recall <sfDir...> [pqDepth...] | dedup-scale <sfDir> | plans <sfDir> [key...] | " +
+      "jobs <sfDir> [key...]"
 
   def main(args: Array[String]): Unit = {
     val run: (SparkSession, Seq[String]) => Unit = args.headOption match {
@@ -30,6 +37,7 @@ object Probe {
       case Some("recall")      => recall
       case Some("dedup-scale") => dedupScale
       case Some("plans")       => plans
+      case Some("jobs")        => jobs
       case _ =>
         System.err.println(Usage)
         sys.exit(2)
@@ -109,6 +117,40 @@ object Probe {
       println(s"========== $key ==========")
       println(maskPlan(SparkEntry.queries(key)(spark, dir).queryExecution
         .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))))
+    }
+  }
+
+  /** Prints, per key, `{"key", "build_jobs", "jobs", "stages", "tasks"}` on
+    * one line: the jobs run while the DataFrame is built, then the jobs,
+    * completed stages and ended tasks of build plus a `noop`-sink consume.
+    * The listener bus is drained before each read. Keys run one at a time,
+    * so every event between two reads belongs to the key in between. With
+    * [[plans]], the before/after evidence that a refactor left the work
+    * each key does as it was.
+    */
+  private def jobs(spark: SparkSession, args: Seq[String]): Unit = {
+    val dir = args.head
+    val keys = if (args.length > 1) args.tail else SparkEntry.queries.keys.toSeq.sorted
+    val sc = spark.sparkContext
+    val (jobN, stageN, taskN) = (new AtomicLong, new AtomicLong, new AtomicLong)
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobN.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stageN.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = taskN.incrementAndGet()
+    })
+    def counts: (Long, Long, Long) = {
+      GraftSqlShim.drainListenerBus(sc)
+      (jobN.get, stageN.get, taskN.get)
+    }
+    for (key <- keys) {
+      val (j0, s0, t0) = counts
+      val df = SparkEntry.queries(key)(spark, dir)
+      val built = counts._1
+      df.write.format("noop").mode("overwrite").save()
+      val (j1, s1, t1) = counts
+      println(s"""{"key": "$key", "build_jobs": ${built - j0}, "jobs": ${j1 - j0}, """ +
+        s""""stages": ${s1 - s0}, "tasks": ${t1 - t0}}""")
     }
   }
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, GraftSqlShim, SparkSession, SparkSessionExt
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.types._
 
 /** One row of [[GraftFunctions]]' table: a custom SQL function under its
@@ -36,12 +35,23 @@ final class Kernel(name: String, val dataType: DataType, val call: String, arity
   def apply(args: Column*): Column = GraftSqlShim.column(builder(args.map(GraftSqlShim.expr)))
 }
 
-/** One of the TypedImperativeAggregates (topk, bloom, cms, vec_mean). */
-final class Aggregate(name: String, arity: Int, build: Seq[Expression] => AggregateFunction)
-    extends GraftFunction(name, arity) {
-  def builder: Seq[Expression] => Expression = es => build(checked(es))
+/** A literal Int argument of an [[Aggregate]]: its position, its name in
+  * messages, and its range, which analysis reports as `<name> must be
+  * <rule>, got <value>`.
+  */
+final case class Param(pos: Int, name: String, rule: String, ok: Int => Boolean)
+
+/** A custom aggregate, evaluated by the generic [[KernelAgg]]: its input
+  * types, its literal parameters, its result type, and its buffer class —
+  * built from the parameter values, or read back from its bytes.
+  */
+final class Aggregate(name: String, val dataType: DataType, val inputs: Seq[DataType],
+    val params: Seq[Param], val create: Seq[Int] => AggBuffer, val read: Array[Byte] => AggBuffer)
+    extends GraftFunction(name, inputs.length) {
+  def builder: Seq[Expression] => Expression = es => KernelAgg(name, checked(es))
   def apply(args: Column*): Column =
-    GraftSqlShim.column(build(checked(args.map(GraftSqlShim.expr))).toAggregateExpression())
+    GraftSqlShim.column(
+      KernelAgg(name, checked(args.map(GraftSqlShim.expr))).toAggregateExpression())
 }
 
 /** graft's custom functions, one table. Each SQL name is written here once,
@@ -86,9 +96,6 @@ object GraftFunctions {
   // feature-hashing text projection: the "text tower" of cross-modal alignment
   val hashEmbed = k2("hash_embed", ArrayType(FloatType, containsNull = false),
     "kernels.hashEmbed", types(Toks, IntegerType))(kernels.hashEmbed)
-  val simhash64 = k1("simhash64", LongType, "kernels.simhash64", types(Toks))(kernels.simhash64)
-  val shingleHashes = k2("shingle_hashes", Longs, "kernels.shingleHashes",
-    types(Toks, IntegerType))(kernels.shingleHashes)
   // poly31 window hashes, oracle-mirrorable (CrossHashSql.poly31 over the
   // space-joined grams)
   val gramHashes31 = k2("gram_hashes31", Longs, "crosskernels.gramHashes31",
@@ -135,9 +142,8 @@ object GraftFunctions {
   // argmax-cosine codebook assignment: the IVF cell kernel
   val nearestCentroid = k2("nearest_centroid", LongType, "kernels.nearestCentroid", vecVsRefs)(
     kernels.nearestCentroid)
-  // max cosine against the reference row: d27's decontamination verdict
-  val maxCosine = k2("max_cosine", DoubleType, "kernels.maxCosine", vecVsRefs)(kernels.maxCosine)
-  // nearest_centroid and max_cosine fused into one pass, bit-identical fields
+  // nearest_centroid and the max cosine in one pass: d27's decontamination
+  // verdict
   val nearestCosine = k2("nearest_cosine", StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("sim", DoubleType, nullable = false))),
@@ -145,30 +151,43 @@ object GraftFunctions {
   // [self, parent, ..., root] in the derived balanced tree
   val treeAncestors = k1("tree_ancestors", Longs, "kernels.treeAncestors", types(LongType))(
     kernels.treeAncestors)
-  val minhashSig = k2("minhash_sig", Longs, "kernels.minhashSignature",
-    types(ArrayType(LongType), IntegerType))(kernels.minhashSignature)
   val cmsQuery = k2("cms_query", LongType, "cms.query", types(Longs, StringType))(
     cms.query)
   val bloomContains = k2("bloom_contains", BooleanType, "bloom.contains",
     types(BinaryType, StringType))(bloom.contains)
 
-  val topkAgg = new Aggregate("topk_agg", 2, es => TopKAggExpr(es(0), es(1)))
-  val bloomAgg = new Aggregate("bloom_agg", 3, es => BloomAggExpr(es(0), es(1), es(2)))
-  val cmsAgg = new Aggregate("cms_agg", 4, es => CmsAggExpr(es(0), es(1), es(2), es(3)))
-  val vecMeanAgg = new Aggregate("vec_mean_agg", 2, es => VecMeanAggExpr(es(0), es(1)))
+  // the k largest values, sorted descending
+  val topkAgg = new Aggregate("topk_agg", ArrayType(DoubleType, containsNull = false),
+    Seq(DoubleType, IntegerType), Seq(Param(1, "k", ">= 1", _ >= 1)),
+    p => new TopKBuffer(p(0)), TopKBuffer.read)
+  // (str, numBits, numHashes): a Bloom filter, probed by bloom_contains
+  val bloomAgg = new Aggregate("bloom_agg", BinaryType, Seq(StringType, IntegerType, IntegerType),
+    Seq(Param(1, "numBits", "a positive multiple of 8", b => b > 0 && b % 8 == 0),
+      Param(2, "numHashes", ">= 1", _ >= 1)),
+    p => new BloomBuffer(p(1), p(0)), BloomBuffer.read)
+  // (term, weight, depth, width): a Count-Min Sketch, probed by cms_query
+  val cmsAgg = new Aggregate("cms_agg", ArrayType(LongType, containsNull = false),
+    Seq(StringType, LongType, IntegerType, IntegerType),
+    Seq(Param(2, "depth", s"in [1, ${CrossHash.MaxHashes}]",
+        d => d > 0 && d <= CrossHash.MaxHashes),
+      Param(3, "width", "positive", _ > 0)),
+    p => new CmsBuffer(p(0), p(1)), CmsBuffer.read)
+  // (vector, dim): the element-wise mean
+  val vecMeanAgg = new Aggregate("vec_mean_agg", ArrayType(FloatType, containsNull = false),
+    Seq(ArrayType(FloatType), IntegerType), Seq(Param(1, "dim", "positive", _ > 0)),
+    p => new VecSumBuffer(p(0)), VecSumBuffer.read)
 
   /** Every function, in registration order. */
-  val table: Seq[GraftFunction] = Seq(cosineSim, hashEmbed, simhash64, shingleHashes,
-    gramHashes31, termCounts, lshBuckets, overlapMarks, overlapMarksMask, shingleStrings,
-    simhash60, simhashWide120, minhashSig31, minhashShingleSig, regexCount, interleaveBits,
-    nonAlnumCount, nfcNorm, pqEncode, nearestCentroid, maxCosine, nearestCosine, treeAncestors,
-    minhashSig, cmsQuery, bloomContains, topkAgg, bloomAgg, cmsAgg, vecMeanAgg)
+  val table: Seq[GraftFunction] = Seq(cosineSim, hashEmbed, gramHashes31, termCounts,
+    lshBuckets, overlapMarks, overlapMarksMask, shingleStrings, simhash60, simhashWide120,
+    minhashSig31, minhashShingleSig, regexCount, interleaveBits, nonAlnumCount, nfcNorm, pqEncode,
+    nearestCentroid, nearestCosine, treeAncestors, cmsQuery, bloomContains, topkAgg, bloomAgg,
+    cmsAgg, vecMeanAgg)
 
-  private val kernelsByName: Map[String, Kernel] =
-    table.collect { case k: Kernel => k.name -> k }.toMap
+  private val byName: Map[String, GraftFunction] = table.map(f => f.name -> f).toMap
 
-  /** The kernel row a [[KernelExpr]] key names. */
-  def kernel(name: String): Kernel = kernelsByName(name)
+  /** The row a [[KernelExpr]] or [[KernelAgg]] key names. */
+  def row[F <: GraftFunction](name: String): F = byName(name).asInstanceOf[F]
 
   /** Idempotently register all graft functions on a session, for SQL text. */
   def register(spark: SparkSession): Unit = table.foreach { f =>

@@ -95,27 +95,6 @@ object kernels {
     new GenericArrayData(acc)
   }
 
-  /** 64-bit simhash over a token array: per-token 64-bit hash votes on each
-    * bit position; the sign of the tally sets the output bit.
-    */
-  def simhash64(tokens: ArrayData): Long = {
-    val counts = new Array[Int](64)
-    val n = tokens.numElements()
-    var i = 0
-    while (i < n) {
-      val h = fnv1a64(tokens.getUTF8String(i))
-      var bit = 0
-      while (bit < 64) {
-        if (((h >>> bit) & 1L) == 1L) counts(bit) += 1 else counts(bit) -= 1
-        bit += 1
-      }
-      i += 1
-    }
-    var out = 0L; var bit = 0
-    while (bit < 64) { if (counts(bit) > 0) out |= (1L << bit); bit += 1 }
-    out
-  }
-
   /** One-pass per-term token counts: out(j) = |{i : tokens(i) == terms(j)}|.
     * The token array (corpus-length) is scanned ONCE regardless of |terms|;
     * the term list (query-length, tiny) is hashed up front so each token is
@@ -156,36 +135,6 @@ object kernels {
         if (p != null && p != j) out(j) = out(p)
       }
       j += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** FNV-1a over UTF8 bytes — stable, allocation-free token hash. */
-  def fnv1a64(s: UTF8String): Long = {
-    val bytes = s.getBytes
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < bytes.length) { h ^= (bytes(i) & 0xffL); h *= 0x100000001b3L; i += 1 }
-    h
-  }
-
-  /** Hashes of all k-word shingles in one pass over the token array
-    * (order-sensitive combination of per-token hashes).
-    */
-  def shingleHashes(tokens: ArrayData, k: Int): ArrayData = {
-    val n = tokens.numElements()
-    if (n < k) return new GenericArrayData(Array.empty[Long])
-    val th = new Array[Long](n)
-    var i = 0
-    while (i < n) { th(i) = fnv1a64(tokens.getUTF8String(i)); i += 1 }
-    val out = new Array[Long](n - k + 1)
-    i = 0
-    while (i <= n - k) {
-      var h = 0xcbf29ce484222325L
-      var j = 0
-      while (j < k) { h ^= th(i + j); h = h * 0x100000001b3L + j; j += 1 }
-      out(i) = h
-      i += 1
     }
     new GenericArrayData(out)
   }
@@ -233,34 +182,12 @@ object kernels {
     best
   }
 
-  /** Max cosine similarity against a codebook-shaped reference row — the
-    * value companion to [[nearestCentroid]]'s argmax (same iteration order,
-    * same cosineF accumulation, so thresholding this and naming that id are
-    * mutually consistent). Empty reference set is rejected identically.
-    */
-  def maxCosine(emb: ArrayData, cents: ArrayData): Double = {
-    val n = cents.numElements()
-    if (n == 0)
-      throw new IllegalArgumentException(
-        "max_cosine: empty reference set — the max over no vectors is " +
-          "undefined; check the reference-set predicate")
-    var bestSim = Double.NegativeInfinity
-    var j = 0
-    while (j < n) {
-      val c = cents.getStruct(j, 2)
-      val sim = cosineF(emb, c.getArray(1))
-      if (sim > bestSim) bestSim = sim
-      j += 1
-    }
-    bestSim
-  }
-
   /** Fused argmax + max: one pass over the reference row returning
-    * struct<id: long, sim: double> — [[nearestCentroid]] and [[maxCosine]]
-    * in a single scan of the broadcast array (same iteration order, same
-    * strict-`>` lowest-id tie-break, same cosineF accumulation), so a
-    * consumer that needs both the verdict score and the argmax id pays the
-    * dominant |eval|-length loop once per corpus row instead of twice.
+    * struct<id: long, sim: double> — [[nearestCentroid]]'s id and the max
+    * cosine itself in a single scan of the broadcast array (same iteration
+    * order, same strict-`>` lowest-id tie-break, same cosineF
+    * accumulation), so a consumer that needs both the verdict score and the
+    * argmax id pays the dominant |eval|-length loop once per corpus row.
     */
   def nearestCosine(emb: ArrayData, cents: ArrayData): InternalRow = {
     val n = cents.numElements()
@@ -393,29 +320,6 @@ object kernels {
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  /** MinHash signature: sig(i) = min over shingle hashes h of a_i*h+b_i
-    * (mod 2^64 arithmetic; universal-ish family from a splitmix64 stream).
-    */
-  def minhashSignature(hashes: ArrayData, numHashes: Int): ArrayData = {
-    val n = hashes.numElements()
-    val sig = new Array[Long](numHashes)
-    var i = 0
-    while (i < numHashes) {
-      val a = MinHashParams.A(i); val b = MinHashParams.B(i)
-      var best = -1L // unsigned max: every 64-bit value compares below it
-      var j = 0
-      while (j < n) {
-        val v = a * hashes.getLong(j) + b
-        // unsigned comparison so the full 64-bit range is usable
-        if (v + Long.MinValue < best + Long.MinValue) best = v
-        j += 1
-      }
-      sig(i) = if (n == 0) 0L else best
-      i += 1
-    }
-    new GenericArrayData(sig)
   }
 
   /** Code points outside [A-Za-z0-9\s] — the t06 punctuation count.
@@ -816,19 +720,6 @@ object crosskernels {
   }
 }
 
-/** Deterministic affine parameters for the minhash family (splitmix64). */
-object MinHashParams {
-  private def splitmix(seed: Long): Long = {
-    var z = seed + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-  val MaxHashes = 64
-  val A: Array[Long] = Array.tabulate(MaxHashes)(i => splitmix(2L * i) | 1L)
-  val B: Array[Long] = Array.tabulate(MaxHashes)(i => splitmix(2L * i + 1))
-}
-
 /** The one scalar Catalyst expression behind graft's kernel table: `key`
   * names a [[Kernel]] row of [[GraftFunctions]], which supplies the input
   * check, the result type and the kernel. It behaves as Spark's
@@ -839,7 +730,7 @@ object MinHashParams {
   * `key(args)`, and equality is by (key, children).
   */
 case class KernelExpr(key: String, children: Seq[Expression]) extends Expression {
-  @transient private lazy val kernel: Kernel = GraftFunctions.kernel(key)
+  @transient private lazy val kernel: Kernel = GraftFunctions.row[Kernel](key)
 
   override def prettyName: String = key
   override protected def stringArgs: Iterator[Any] = children.iterator

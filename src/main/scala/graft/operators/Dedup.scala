@@ -792,7 +792,7 @@ object Dedup {
 
   /** Bloom-accelerated decontamination: the d09 contract on the 100-TB plan.
     * The eval fingerprint set aggregates into ONE Bloom filter row (custom
-    * [[graft.functions.BloomAggExpr]]: fixed bit-array buffer, map-side
+    * bloom_agg, [[graft.functions.BloomBuffer]]: fixed bit-array, map-side
     * partial build, bitwise-OR merge — numBits/8 bytes per partition cross
     * the wire), the corpus is prefiltered by a codegen'd bloom_contains
     * probe inside the scan stage, and the exact anti-join runs only on the

@@ -289,8 +289,8 @@ object Relational {
       .orderBy($"event_type")
   }
 
-  /** Per-group top-k values through the custom [[graft.functions.TopKAggExpr]]
-    * aggregate: a k-capped min-heap buffer that partial-aggregates map-side,
+  /** Per-group top-k values through the custom topk_agg aggregate
+    * ([[graft.functions.TopKBuffer]]): a k-capped min-heap buffer that partial-aggregates map-side,
     * so each partition ships at most k doubles — where groupBy + rank would
     * shuffle every row of the group. Multiset-over-values semantics make the
     * result deterministic under any partitioning, so it hash-oracles

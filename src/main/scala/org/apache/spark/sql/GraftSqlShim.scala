@@ -1,13 +1,14 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The one `private[sql]` doorway graft needs: turning a hand-built
-  * [[LogicalPlan]] into a DataFrame. `Dataset.ofRows` is the blessed
-  * entry point every Spark-native library uses for custom logical
-  * operators; it has no public equivalent, so this shim lives in the
-  * `org.apache.spark.sql` package to reach it. Nothing else in graft
-  * touches non-public Spark API.
+/** graft's one doorway to non-public Spark API, in the
+  * `org.apache.spark.sql` package so it can reach `private[sql]` and
+  * `private[spark]` members. It opens two: turning a hand-built
+  * [[LogicalPlan]] into a DataFrame (`Dataset.ofRows`, the entry point every
+  * Spark-native library uses for custom logical operators), and draining
+  * the listener bus. Nothing else in graft touches non-public Spark API.
   */
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -25,4 +26,10 @@ object GraftSqlShim {
     */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** Listener events arrive asynchronously: blocks until every event posted
+    * so far has reached every listener, so counters fed by a listener (the
+    * status tracker's included) have seen every job already run.
+    */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

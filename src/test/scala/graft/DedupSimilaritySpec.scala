@@ -39,8 +39,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val far = (100 to 160).map(i => s"v$i").mkString(" ")
     val docs = Seq((0L, base), (1L, nearDup), (2L, far)).toDF("doc_id", "text")
     val sigs = docs.select($"doc_id",
-      GraftFunctions.minhashSig(
-        GraftFunctions.shingleHashes(split(lower($"text"), "\\s+"), lit(3)), lit(32)).as("sig"))
+      GraftFunctions.minhashShingleSig(split(lower($"text"), "\\s+"), lit(3), lit(32)).as("sig"))
     val a = sigs.select($"doc_id".as("da"), $"sig".as("sig_a"))
     val b = sigs.select($"doc_id".as("db"), $"sig".as("sig_b"))
     val est = a.join(b, $"da" < $"db")
@@ -125,7 +124,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val near = (1 to 78).map(i => s"tok$i").mkString(" ") + " zz1 zz2"
     val far = (500 to 580).map(i => s"q$i").mkString(" ")
     val df = Seq((0L, base), (1L, near), (2L, far)).toDF("id", "text")
-      .select($"id", GraftFunctions.simhash64(split($"text", " ")).as("sh"))
+      .select($"id", GraftFunctions.simhash60(split($"text", " ")).as("sh"))
     val m = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(java.lang.Long.bitCount(m(0L) ^ m(1L)) <= 12)
     assert(java.lang.Long.bitCount(m(0L) ^ m(2L)) >= 20)
@@ -817,8 +816,8 @@ class DedupSimilaritySpec extends SparkSpec {
     val rows = spark.sql(
       """SELECT vec_id,
         |       cosine_sim(embedding, embedding) AS self_sim,
-        |       simhash64(array('a','b','c')) AS sh,
-        |       size(minhash_sig(shingle_hashes(array('a','b','c','d'), 2), 16)) AS sig_len
+        |       simhash60(array('a','b','c')) AS sh,
+        |       size(minhash_shingle_sig(array('a','b','c','d'), 2, 16)) AS sig_len
         |FROM emb_sql ORDER BY vec_id LIMIT 5""".stripMargin).collect()
     assert(rows.length == 5)
     rows.foreach { r =>

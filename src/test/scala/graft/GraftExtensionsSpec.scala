@@ -17,8 +17,6 @@ class GraftExtensionsSpec extends SparkSpec {
   private val queries: Map[String, String] = Map(
     "cosine_sim" -> s"SELECT cosine_sim($vec, $vec)",
     "hash_embed" -> s"SELECT hash_embed($toks, 8)",
-    "simhash64" -> s"SELECT simhash64($toks)",
-    "shingle_hashes" -> s"SELECT shingle_hashes($toks, 2)",
     "gram_hashes31" -> s"SELECT gram_hashes31($toks, 2)",
     "term_counts" -> s"SELECT term_counts($toks, array('a', 'z'))",
     "lsh_buckets" -> s"SELECT lsh_buckets($vec64)",
@@ -35,10 +33,8 @@ class GraftExtensionsSpec extends SparkSpec {
     "nfc_norm" -> "SELECT nfc_norm('Cafe')",
     "pq_encode" -> s"SELECT pq_encode($vec, array(array($vec, $vec)))",
     "nearest_centroid" -> s"SELECT nearest_centroid($vec, $refs)",
-    "max_cosine" -> s"SELECT max_cosine($vec, $refs)",
     "nearest_cosine" -> s"SELECT nearest_cosine($vec, $refs)",
     "tree_ancestors" -> "SELECT tree_ancestors(5L)",
-    "minhash_sig" -> "SELECT minhash_sig(array(1L, 2L, 3L), 4)",
     "cms_query" -> "SELECT cms_query(cms_agg(t, 1L, 2, 16), 'a') FROM VALUES ('a') AS v(t)",
     "bloom_contains" ->
       "SELECT bloom_contains(bloom_agg(t, 64, 3), 'a') FROM VALUES ('a'), ('b') AS v(t)",

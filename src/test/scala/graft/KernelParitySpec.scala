@@ -40,8 +40,6 @@ class KernelParitySpec extends SparkSpec {
   private val cases: Map[String, (Seq[DataType], () => Seq[Any])] = Map(
     "cosine_sim" -> (Seq(Vec, Vec), () => Seq(vec(), vec())),
     "hash_embed" -> (Seq(Toks, IntegerType), () => Seq(toks(), small(16))),
-    "simhash64" -> (Seq(Toks), () => Seq(toks())),
-    "shingle_hashes" -> (Seq(Toks, IntegerType), () => Seq(toks(), small(3))),
     "gram_hashes31" -> (Seq(Toks, IntegerType), () => Seq(toks(), small(3))),
     "term_counts" -> (Seq(Toks, Toks), () => Seq(toks(), toks())),
     "lsh_buckets" -> (Seq(Vec), () => Seq(vec())),
@@ -61,11 +59,8 @@ class KernelParitySpec extends SparkSpec {
     "pq_encode" -> (Seq(Vec, ArrayType(ArrayType(Vec))),
       () => Seq(vec(), arr(Seq.fill(8)(arr(Seq.fill(4)(vec(8))))))),
     "nearest_centroid" -> (Seq(Vec, Refs), () => Seq(vec(), refs())),
-    "max_cosine" -> (Seq(Vec, Refs), () => Seq(vec(), refs())),
     "nearest_cosine" -> (Seq(Vec, Refs), () => Seq(vec(), refs())),
     "tree_ancestors" -> (Seq(LongType), () => Seq(rng.nextInt(1 << 20).toLong)),
-    "minhash_sig" -> (Seq(ArrayType(LongType), IntegerType),
-      () => Seq(arr(Seq.fill(rng.nextInt(9))(rng.nextLong())), small(64))),
     "cms_query" -> (Seq(ArrayType(LongType, containsNull = false), StringType), () => {
       val depth = small(4)
       Seq(arr(depth.toLong +: Seq.fill(depth * small(16))(rng.nextInt(100).toLong)), str())

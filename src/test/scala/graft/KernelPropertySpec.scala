@@ -16,35 +16,12 @@ class KernelPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
   private def randTokens(n: Int): List[String] =
     List.fill(n)("w" + rng.nextInt(500))
 
-  test("minhash signature agreement approximates true shingle jaccard") {
-    (1 to 50).foreach { _ =>
-      val a = randTokens(40)
-      val edit = rng.nextInt(36)
-      val b = a.take(edit) ++ a.drop(edit).map(_ + "x")
-      val sa = (0 to a.length - 3).map(i => a.slice(i, i + 3)).toSet
-      val sb = (0 to b.length - 3).map(i => b.slice(i, i + 3)).toSet
-      val trueJ = (sa & sb).size.toDouble / (sa | sb).size
-      val sigA = kernels.minhashSignature(kernels.shingleHashes(arr(a), 3), 64)
-      val sigB = kernels.minhashSignature(kernels.shingleHashes(arr(b), 3), 64)
-      val est = (0 until 64).count(i => sigA.getLong(i) == sigB.getLong(i)) / 64.0
-      assert(math.abs(est - trueJ) <= 0.35, s"est=$est true=$trueJ")
-    }
-  }
-
-  test("simhash is token-order insensitive") {
-    (1 to 50).foreach { _ =>
-      val tokens = randTokens(40)
-      val h1 = kernels.simhash64(arr(tokens))
-      val h2 = kernels.simhash64(arr(rng.shuffle(tokens)))
-      assert(h1 == h2)
-    }
-  }
-
   test("shingle hashes are shift-consistent: shared windows hash equal") {
+    import graft.functions.crosskernels
     (1 to 50).foreach { _ =>
       val tokens = randTokens(4 + rng.nextInt(40))
-      val full = kernels.shingleHashes(arr(tokens), 3)
-      val tail = kernels.shingleHashes(arr(tokens.drop(1)), 3)
+      val full = crosskernels.gramHashes31(arr(tokens), 3)
+      val tail = crosskernels.gramHashes31(arr(tokens.drop(1)), 3)
       (0 until tail.numElements()).foreach { i =>
         assert(full.getLong(i + 1) == tail.getLong(i))
       }
@@ -176,10 +153,9 @@ class KernelPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("topk buffer: serde round-trips and merge order never changes the result") {
-    import graft.functions.TopKBuffer
-    val agg = graft.functions.TopKAggExpr(
-      org.apache.spark.sql.catalyst.expressions.Literal(0.0),
-      org.apache.spark.sql.catalyst.expressions.Literal(5))
+    import graft.functions.{GraftFunctions, KernelAgg, TopKBuffer}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val agg = KernelAgg(GraftFunctions.topkAgg.name, Seq(Literal(0.0), Literal(5)))
     (1 to 30).foreach { _ =>
       val values = Array.fill(rng.nextInt(40) + 1)(rng.nextInt(20).toDouble)
       val expected = values.sorted.reverse.take(5).toSeq
@@ -189,8 +165,8 @@ class KernelPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
         val b = new TopKBuffer(5); vs.foreach(b.add); b
       }
       val (l, r) = values.splitAt(cut)
-      val m1 = bufOf(l); m1.mergeFrom(agg.deserialize(agg.serialize(bufOf(r))))
-      val m2 = bufOf(r); m2.mergeFrom(agg.deserialize(agg.serialize(bufOf(l))))
+      val m1 = bufOf(l); m1.merge(agg.deserialize(agg.serialize(bufOf(r))))
+      val m2 = bufOf(r); m2.merge(agg.deserialize(agg.serialize(bufOf(l))))
       assert(m1.sortedDesc.toSeq == expected, "left-into-right merge")
       assert(m2.sortedDesc.toSeq == expected, "right-into-left merge")
     }
@@ -401,7 +377,7 @@ class KernelPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("vec_mean_agg fails loudly on malformed input instead of reading garbage") {
-    import graft.functions.{VecMeanAggExpr, VecSumBuffer}
+    import graft.functions.{GraftFunctions, KernelAgg, VecSumBuffer}
     // a shorter-than-dim vector: UnsafeArrayData.getFloat has no bounds
     // check, so silent acceptance would yield garbage sums
     val b = new VecSumBuffer(8)
@@ -410,10 +386,10 @@ class KernelPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     }
     // an all-null group reaches eval with n = 0: the mean is undefined and
     // must not silently emit NaNs through a nullable=false column
-    val agg = VecMeanAggExpr(
+    val agg = KernelAgg(GraftFunctions.vecMeanAgg.name, Seq(
       org.apache.spark.sql.catalyst.expressions.Literal(null,
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)),
-      org.apache.spark.sql.catalyst.expressions.Literal(8))
+      org.apache.spark.sql.catalyst.expressions.Literal(8)))
     intercept[IllegalArgumentException] { agg.eval(new VecSumBuffer(8)) }
   }
 

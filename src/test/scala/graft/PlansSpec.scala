@@ -172,6 +172,19 @@ class PlansSpec extends SparkSpec {
       spark.sql("SELECT topk_agg(v, 0) FROM tk_guard").collect()
     }
     assert(e.getMessage.contains("k must be >= 1"), e.getMessage)
+    // one invalid literal per aggregate row, each an analysis error with
+    // that row's message (numHashes = 0 would build a filter that
+    // contains every string)
+    Seq((1.0, "s", 0.5f)).toDF("v", "s", "x").selectExpr("v", "s", "array(x, x) AS e")
+      .createOrReplaceTempView("agg_guard")
+    for ((call, msg) <- Seq(
+        "bloom_agg(s, 1024, 0)" -> "bloom_agg: numHashes must be >= 1, got 0",
+        "cms_agg(s, 1L, 0, 512)" -> "cms_agg: depth must be in [1, 64]",
+        "vec_mean_agg(e, 0)" -> "vec_mean_agg: dim must be positive")) {
+      val err = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $call FROM agg_guard"))
+      assert(err.getMessage.contains(msg), err.getMessage)
+    }
     // Double.compare's total order ranks NaN above everything — it occupies
     // one slot but later larger values still displace the true minimum
     val top = Seq(Double.NaN, 5.0, 3.0, 4.0).toDF("v")

@@ -22,7 +22,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try body finally sc.clearJobGroup()
-    org.apache.spark.graftspec.BusShim.drain(sc)
+    org.apache.spark.sql.GraftSqlShim.drainListenerBus(sc)
     sc.statusTracker.getJobIdsForGroup(group).length
   }
 
