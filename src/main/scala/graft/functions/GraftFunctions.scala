@@ -117,10 +117,8 @@ object GraftFunctions {
   // [lo, hi] = (simhash60(toks), simhash60('w'-prefixed toks)) in one pass
   val simhashWide120 = k1("simhash_wide120", Longs, "crosskernels.simhashWide120", types(Toks))(
     crosskernels.simhashWide120)
-  val minhashSig31 = k2("minhash_sig31", Longs, "crosskernels.minhashSig31",
-    types(Toks, IntegerType))(crosskernels.minhashSig31)
-  // minhash_sig31(shingle_strings(tokens, k), n) fused: identical values, no
-  // shingle strings materialized
+  // crosskernels.minhashSig31(shingle_strings(tokens, k), n) fused: identical
+  // values, no shingle strings materialized
   val minhashShingleSig = k3("minhash_shingle_sig", Longs, "crosskernels.minhashShingleSig",
     types(Toks, IntegerType, IntegerType))(crosskernels.minhashShingleSig)
   // regexp_count without materializing the matches (Spark's built-in is
@@ -180,7 +178,7 @@ object GraftFunctions {
   /** Every function, in registration order. */
   val table: Seq[GraftFunction] = Seq(cosineSim, hashEmbed, gramHashes31, termCounts,
     lshBuckets, overlapMarks, overlapMarksMask, shingleStrings, simhash60, simhashWide120,
-    minhashSig31, minhashShingleSig, regexCount, interleaveBits, nonAlnumCount, nfcNorm, pqEncode,
+    minhashShingleSig, regexCount, interleaveBits, nonAlnumCount, nfcNorm, pqEncode,
     nearestCentroid, nearestCosine, treeAncestors, cmsQuery, bloomContains, topkAgg, bloomAgg,
     cmsAgg, vecMeanAgg)
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Materialize, Tables}
@@ -17,10 +17,9 @@ object Dedup {
   /** Exact dedup: normalized-content hash, min-id survivor per group. */
   def exactDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val fp = md5(regexp_replace(lower($"text"), "\\s+", " "))
     val w = Window.partitionBy($"content_md5")
     Tables.documents(s, dir)
-      .withColumn("content_md5", fp)
+      .withColumn("content_md5", TextOps.contentFp)
       .withColumn("keeper_id", min($"doc_id").over(w))
       .select($"doc_id", $"content_md5", $"keeper_id",
               ($"doc_id" === $"keeper_id").as("is_survivor"))
@@ -84,8 +83,9 @@ object Dedup {
   /** Signature form over any (doc_id, text) frame — the streaming index
     * sink (s14) signs micro-batches through the same kernel. Uses the fused
     * minhash_shingle_sig kernel: value-identical to
-    * minhash_sig31(shingle_strings(...)) (the oracle recomputes the string
-    * form), with no shingle-string materialization — one character scan.
+    * crosskernels.minhashSig31(shingle_strings(...)) (the oracle
+    * recomputes the string form), with no shingle-string materialization —
+    * one character scan.
     */
   private[graft] def signaturesOf(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
@@ -186,7 +186,6 @@ object Dedup {
     // signatures once (doc_id + NumHashes ints — the d20 persisted-index
     // shape) and band both sides off that
     val banded = bandSignatures(Materialize(signatures(s, dir)))
-    val isEval = $"doc_id" % 7 === 3
     val evalB = banded.filter(isEval)
       .select($"band_id", $"band_key", $"sig".as("eval_sig"))
     val corpusB = banded.filter(!isEval)
@@ -522,8 +521,8 @@ object Dedup {
     // score runs one pass instead of two
     val docs = Materialize(Tables.documents(s, dir)
       .select($"doc_id", $"source", TextOps.qualityCol.as("quality")))
-    docs.join(broadcast(histogramQualityCutoffs(docs)), "source")
-      .filter($"quality" > $"cutoff")
+    withQualityCutoffs(docs, histogramQualityCutoffs(docs))
+      .filter(qualityAdmits)
       .select($"doc_id", $"source", $"quality", $"cutoff")
       .orderBy($"doc_id")
   }
@@ -553,6 +552,28 @@ object Dedup {
       .filter($"cum" >= ceil(lit(0.25) * $"n"))
       .groupBy($"source").agg(min($"quality").as("cutoff"))
   }
+
+  /** The quality gate's join (d24, p27, p33, both s16 twins): each scored
+    * (source, quality) row meets its source's broadcast cutoff, null for
+    * an uncalibrated source; [[qualityAdmits]] is the verdict. */
+  private[graft] def withQualityCutoffs(scored: DataFrame, cutoffs: DataFrame): DataFrame =
+    scored.join(broadcast(cutoffs), Seq("source"), "left")
+
+  /** A doc passes strictly above its source's cutoff; an uncalibrated
+    * source passes uncut (refusing a new feed until someone recalibrates
+    * would be an outage, not a gate). Cutoffs calibrated on the gated frame
+    * cover every source, so there the null arm never fires. */
+  private[graft] def qualityAdmits: Column =
+    col("cutoff").isNull || col("quality") > col("cutoff")
+
+  /** The eval set every decontamination key holds out (a benchmark's docs). */
+  private[graft] def isEval: Column = col("doc_id") % 7 === 3
+
+  /** The eval set's distinct `fp` — the blocklist d09, d16, p27, p33 and
+    * s13 decontaminate against. */
+  private[graft] def evalFingerprints(docs: DataFrame,
+      fp: Column = col("content_md5").as("eval_md5")): DataFrame =
+    docs.filter(isEval).select(fp).distinct()
 
   /** SimHash near-dup: 60-bit cross-engine fingerprints, 15-bit hamming
     * bands, exact hamming verify. At the default maxHamming = 3 the result
@@ -781,10 +802,8 @@ object Dedup {
     */
   def decontaminate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val fp = md5(regexp_replace(lower($"text"), "\\s+", " "))
-    val docs = Tables.documents(s, dir).withColumn("content_md5", fp)
-    val evalFps = docs.filter($"doc_id" % 7 === 3)
-      .select($"content_md5".as("eval_md5")).distinct()
+    val docs = Tables.documents(s, dir).withColumn("content_md5", TextOps.contentFp)
+    val evalFps = evalFingerprints(docs)
     docs.join(broadcast(evalFps), $"content_md5" === $"eval_md5", "left_anti")
       .select($"doc_id", $"source", $"content_md5")
       .orderBy($"doc_id")
@@ -806,10 +825,8 @@ object Dedup {
   def bloomDecontaminate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.GraftFunctions.{bloomAgg, bloomContains}
-    val fp = md5(regexp_replace(lower($"text"), "\\s+", " "))
-    val docs = Tables.documents(s, dir).withColumn("content_md5", fp)
-    val evalFps = docs.filter($"doc_id" % 7 === 3)
-      .select($"content_md5".as("eval_md5")).distinct()
+    val docs = Tables.documents(s, dir).withColumn("content_md5", TextOps.contentFp)
+    val evalFps = evalFingerprints(docs)
     val evalBloom = evalFps
       .agg(bloomAgg($"eval_md5", lit(BloomBits), lit(BloomHashes)).as("bloom"))
     // ONE corpus scan: flag each row with its Bloom verdict, then a single
@@ -1355,7 +1372,7 @@ object Dedup {
           .as("hv"))
       .transform(Materialize(_))
     val postings = hv.select($"doc_id", explode($"hv").as("h"))
-    val queries = hv.filter($"doc_id" % 7 === 3 && $"doc_id" < BottomkEvalCap)
+    val queries = hv.filter(isEval && $"doc_id" < BottomkEvalCap)
       .select($"doc_id".as("eval_id"),
         slice(array_sort($"hv"), 1, BottomK).as("bk"),
         least(size($"hv"), lit(BottomK)).cast("long").as("k_eff"))

@@ -67,7 +67,6 @@ object EndToEnd {
     import s.implicits._
     val docs = Tables.documents(s, dir)
     val cleaned = trim(regexp_replace($"text", "\\s+", " "))
-    val isEval = $"doc_id" % 7 === 3
     // per-row analysis on the cleaned text (single-spaced, so split on ' ')
     val toks = split(lower($"cleaned"), " ")
     val tokens = size(toks).cast("long")
@@ -81,7 +80,7 @@ object EndToEnd {
     // surprisal and drop with the inner join
     val entropy = TextOps.entropyScoreRaw(s, dir)
       .select($"doc_id", $"bits_per_token")
-    val gated = docs.filter(!isEval)
+    val gated = docs.filter(!Dedup.isEval)
       .select($"doc_id", $"source", cleaned.as("cleaned"))
       .select($"doc_id", $"source", tokens.as("tokens"),
               md5(lower($"cleaned")).as("content_md5"),
@@ -95,7 +94,7 @@ object EndToEnd {
     val deduped = gated.withColumn("keeper_id", keeper)
       .filter($"doc_id" === $"keeper_id")
     // decontaminate against the (tiny, broadcast) eval fingerprint set
-    val evalMd5 = docs.filter(isEval)
+    val evalMd5 = docs.filter(Dedup.isEval)
       .select(md5(lower(trim(regexp_replace($"text", "\\s+", " ")))).as("eval_md5"))
       .distinct()
     val clean = deduped.join(broadcast(evalMd5),
@@ -132,7 +131,6 @@ object EndToEnd {
     */
   def curatedPacking(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val fp = md5(regexp_replace(lower($"text"), "\\s+", " "))
     // ONE per-row pass computes every heavy text derivation the pipeline
     // needs (quality regexes, fingerprint, token count) and drops text; the
     // cutoff histogram, the eval blocklist, and the main curated lineage all
@@ -142,18 +140,16 @@ object EndToEnd {
     // packing law), so nothing wide is stored.
     val scored = Tables.documents(s, dir)
       .select($"doc_id", $"source", TextOps.qualityCol.as("quality"),
-        fp.as("content_md5"),
+        TextOps.contentFp.as("content_md5"),
         size(expr("filter(split(lower(trim(text)), '\\\\s+'), t -> t <> '')"))
           .cast("long").as("n_toks"))
       .transform(Materialize(_))
     // 1. histogram-calibrated per-source quality gate (d24)
-    val gated = scored
-      .join(broadcast(Dedup.histogramQualityCutoffs(scored)), "source")
-      .filter($"quality" > $"cutoff")
+    val gated = Dedup.withQualityCutoffs(scored, Dedup.histogramQualityCutoffs(scored))
+      .filter(Dedup.qualityAdmits)
     // 2. decontaminate against the broadcast eval blocklist (d09), then
     //    exact-dedup survivors on the same fingerprint (d01)
-    val evalFps = scored.filter($"doc_id" % 7 === 3)
-      .select($"content_md5".as("eval_md5")).distinct()
+    val evalFps = Dedup.evalFingerprints(scored)
     val wFp = Window.partitionBy($"content_md5").orderBy($"doc_id")
     val curated = gated
       .join(broadcast(evalFps), $"content_md5" === $"eval_md5", "left_anti")
@@ -186,21 +182,17 @@ object EndToEnd {
   def attritionFunnel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val fp = md5(regexp_replace(lower($"text"), "\\s+", " "))
     // ONE narrow projection (no text) carries everything the audit needs —
     // quality and fingerprint are the per-row heavy steps and the r13 shape
     // paid them on three separate corpus scans (cutoff histogram, eval
     // fingerprints, main lineage); all three consumers now read the same
     // materialized 4-column frame
     val scored = Materialize(docs.select($"doc_id", $"source",
-      TextOps.qualityCol.as("quality"), fp.as("content_md5")))
-    val evalFps = scored.filter($"doc_id" % 7 === 3)
-      .select($"content_md5".as("eval_md5")).distinct()
-    val flagged = scored
-      .join(broadcast(Dedup.histogramQualityCutoffs(scored)), "source")
-      .join(broadcast(evalFps), $"content_md5" === $"eval_md5", "left")
+      TextOps.qualityCol.as("quality"), TextOps.contentFp.as("content_md5")))
+    val flagged = Dedup.withQualityCutoffs(scored, Dedup.histogramQualityCutoffs(scored))
+      .join(broadcast(Dedup.evalFingerprints(scored)), $"content_md5" === $"eval_md5", "left")
       .select($"doc_id", $"source", $"quality", $"content_md5",
-              ($"quality" <= $"cutoff").as("q_fail"),
+              (!Dedup.qualityAdmits).as("q_fail"),
               $"eval_md5".isNotNull.as("contam"))
     // dedup keeper elected only among stage-1/2 survivors of the group
     val keeper = min(when(!$"q_fail" && !$"contam", $"doc_id"))
@@ -254,9 +246,8 @@ object EndToEnd {
     val chunkRow = report("chunks",
       TextOps.chunkRows(docs)
         .groupBy($"chunk_hash").agg(max(del($"doc_id")).as("hit")))
-    val fp = md5(regexp_replace(lower($"text"), "\\s+", " "))
     val dupRow = report("dup_groups",
-      docs.select($"doc_id", fp.as("fp"))
+      docs.select($"doc_id", TextOps.contentFp.as("fp"))
         .groupBy($"fp")
         .agg(count(lit(1)).as("n"), max(del($"doc_id")).as("hit"))
         .filter($"n" >= 2))

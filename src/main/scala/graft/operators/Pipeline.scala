@@ -868,9 +868,8 @@ object PipelineOps {
     import s.implicits._
     val docs = Tables.documents(s, dir)
     val toks = size(split(lower(trim($"text")), "\\s+")).cast("long")
-    val fp = md5(regexp_replace(lower($"text"), "\\s+", " "))
     val base = docs.select($"lang", $"source", $"n_chars", toks.as("n_toks"),
-      fp.as("fp"),
+      TextOps.contentFp.as("fp"),
       floor(TextOps.qualityCol * lit(10000d) + lit(0.5d)).cast("long").as("q_e4"))
     val g = base.agg(
       count(lit(1)).as("n_docs"), sum($"n_toks").as("n_tokens"),

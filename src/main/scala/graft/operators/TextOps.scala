@@ -146,6 +146,10 @@ object TextOps {
     floor(raw * lit(10000.0) + lit(0.5)) / lit(10000.0)
   }
 
+  /** The content fingerprint: md5 of whitespace-normalized lowercase text,
+    * the one exact-dedup, decontamination and erasure key. */
+  private[graft] def contentFp: Column = md5(regexp_replace(lower(col("text")), "\\s+", " "))
+
   def qualityScore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)
@@ -452,8 +456,7 @@ object TextOps {
   def fingerprint(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)
-      .select($"doc_id",
-        md5(regexp_replace(lower($"text"), "\\s+", " ")).as("content_md5"))
+      .select($"doc_id", contentFp.as("content_md5"))
       .orderBy($"doc_id")
   }
 
@@ -498,10 +501,9 @@ object TextOps {
       .select($"doc_id",
         explode(array_distinct(graft.functions.GraftFunctions.shingleStrings(
           split(lower(trim($"text")), "\\s+"), lit(8)))).as("g"))
-    val isEval = $"doc_id" % 7 === 3
-    val evalGrams = grams.filter(isEval).select($"g").distinct()
+    val evalGrams = grams.filter(Dedup.isEval).select($"g").distinct()
       .withColumn("hit", lit(1L))
-    grams.filter(!isEval)
+    grams.filter(!Dedup.isEval)
       .join(evalGrams, Seq("g"), "left")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_grams"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.{Materialize, Tables}
+import graft.operators.{Dedup, TextOps}
 
 /** One event row as consumed by the typed sessionizer. */
 case class Event(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
@@ -14,8 +15,9 @@ case class Event(event_id: Long, ts: Timestamp, user_id: Long, event_type: Strin
 case class Session(user_id: Long, session_start: Timestamp, session_end: Timestamp,
                    n_events: Long, total_value: Double)
 
-/** Accumulating per-user session state. */
-case class SessionState(start: Long, last: Long, n: Long, total: Double)
+/** Accumulating per-user session state: event times in microseconds, the
+  * value total unscaled at scale 6 (the batch twin's exact decimal(18,6)). */
+case class SessionState(start: Long, last: Long, n: Long, total: Long)
 
 /** One document as consumed by the s18 budget-admission fold. */
 case class BudgetDoc(doc_id: Long, source: String, n_tokens: Long)
@@ -57,13 +59,7 @@ class TypeCensusProcessor
   override def handleInputRows(key: String, rows: Iterator[Event],
                                timerValues: TimerValues): Iterator[TypeCensus] = {
     var st = Option(state.get()).getOrElse(TypeCensus(key, 0L, 0L))
-    rows.foreach { e =>
-      // True microseconds: getTime() is MILLIS (would zero sub-ms digits if
-      // scaled by 1000); whole seconds from getTime, intra-second from
-      // getNanos, matching unix_micros(ts) exactly.
-      val micros = Math.floorDiv(e.ts.getTime, 1000L) * 1000000L + e.ts.getNanos / 1000L
-      st = TypeCensus(key, st.n_events + 1L, st.sum_micros + micros)
-    }
+    rows.foreach(e => st = TypeCensus(key, st.n_events + 1L, st.sum_micros + Streams.microsOf(e.ts)))
     state.update(st)
     Iterator.single(st)
   }
@@ -97,26 +93,61 @@ class TermCensusProcessor
 
 /** Streaming operators — SURVEY.md §2.E.
   *
-  * Each transform is written against an input DataFrame, not a source, so the
-  * SAME code path serves batch (Verify/Bench, DuckDB-oracled) and streaming
+  * Each transform is written against an input DataFrame, not a source, so
+  * one body serves batch (Verify/Bench, DuckDB-oracled) and streaming
   * (readStream/MemoryStream in the specs). This is the streaming analogue of
   * the reference's incremental state pipeline: watermarks bound lateness the
   * way the state file bounds reprocessing.
+  *
+  * Both twins call each row rule's one home: [[byWindow]] (s01, s06, s09,
+  * s15), [[SessionGapMicros]] (s02, s11, s12), [[attributionStream]] (s21's
+  * key too: Catalyst drops `withWatermark` on a batch frame), the admission
+  * summary (s13, s16), and `TextOps.contentFp`, `Dedup.isEval`/
+  * `evalFingerprints` and `Dedup.withQualityCutoffs`/`qualityAdmits`.
+  * Two forms stay on purpose, proven equal on the reference tables: s02,
+  * s18 and s19's typed `flatMapGroupsWithState` fold is the only form that
+  * runs on a stream, their window pass the one that scales in batch; s03's
+  * stream keeps the first arrival, its key the least `(ts, user_id)`, which
+  * agree whenever `event_id` is unique (every reference table).
   */
 object Streams {
 
-  val SessionGapMs: Long = 30 * 60 * 1000L
+  /** s02's session gap: an event more than 30 min after the last opens a new session. */
+  val SessionGapMicros: Long = 30L * 60 * 1000000
 
-  /** Tumbling 6-hour windows per event type. Works on batch and streams;
-    * callers add `withWatermark` on the streaming side.
-    */
+  /** session_window merges gaps STRICTLY below its duration, s02 keeps
+    * `diff <= gap`: the gap widened by one microsecond (the granularity). */
+  private val SessionWindow = s"${SessionGapMicros + 1} microseconds"
+
+  /** `unix_micros(ts)`: getTime is millis, so the sub-second part comes from getNanos. */
+  private[graft] def microsOf(ts: Timestamp): Long =
+    Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
+
+  private def timestampOf(micros: Long): Timestamp = {
+    val t = new Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
+    t.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
+    t
+  }
+
+  /** `CAST(v AS decimal(18,6))`, unscaled: Double.toString rounded half-up. */
+  private def unscaled6(v: Double): Long =
+    new java.math.BigDecimal(java.lang.Double.toString(v))
+      .setScale(6, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
+
+  /** The 6-hour tumbling window: aggregates `events` per window and `keys`,
+    * the window named by its `window_start`. Streaming callers add the
+    * watermark. */
+  private def byWindow(events: DataFrame, keys: Column*)(aggs: Column*): DataFrame = {
+    val g = events.groupBy(window(col("ts"), "6 hours").as("w") +: keys: _*)
+      .agg(aggs.head, aggs.tail: _*)
+    g.select(col("w.start").as("window_start") +: g.columns.toSeq.tail.map(col): _*)
+  }
+
+  /** Tumbling 6-hour windows per event type. */
   def windowedCounts(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    events
-      .groupBy(window($"ts", "6 hours").as("w"), $"event_type")
-      .agg(count(lit(1)).as("event_count"),
-           sum($"value".cast("decimal(18,6)")).cast("double").as("sum_value"))
-      .select($"w.start".as("window_start"), $"event_type", $"event_count", $"sum_value")
+    byWindow(events, $"event_type")(count(lit(1)).as("event_count"),
+      sum($"value".cast("decimal(18,6)")).cast("double").as("sum_value"))
   }
 
   /** Batch window query (driver contract key s01_window_agg). */
@@ -136,7 +167,7 @@ object Streams {
       .withColumn("prev_ts", lag($"ts", 1).over(byUser))
       .withColumn("new_session",
         when($"prev_ts".isNull ||
-             (unix_micros($"ts") - unix_micros($"prev_ts")) > SessionGapMs * 1000L, 1L)
+             (unix_micros($"ts") - unix_micros($"prev_ts")) > SessionGapMicros, 1L)
           .otherwise(0L))
       .withColumn("session_seq", sum($"new_session").over(byUser))
       .groupBy($"user_id", $"session_seq")
@@ -148,18 +179,15 @@ object Streams {
 
   /** Sessionization through Spark's NATIVE session_window operator — the
     * second physical strategy for s02's contract (the p13/p15 pattern: one
-    * semantic, two executions). session_window merges events whose gap is
-    * STRICTLY below the window length, while the composed form (and the
-    * oracle) keeps `diff <= 30min` in one session — so the native gap is
-    * widened by exactly one microsecond (the timestamp granularity),
-    * making the two definitions coincide. The session assignment happens
-    * inside the aggregate itself (no lag/cumsum window chain), which is
-    * also the form that runs under a streaming watermark.
+    * semantic, two executions), over the same gap ([[SessionWindow]]). The
+    * session assignment happens inside the aggregate itself (no lag/cumsum
+    * window chain), which is also the form that runs under a streaming
+    * watermark.
     */
   def sessionizeNative(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val grouped = Tables.events(s, dir)
-      .groupBy($"user_id", session_window($"ts", "1800000001 microseconds").as("sw"))
+      .groupBy($"user_id", session_window($"ts", SessionWindow).as("sw"))
       .agg(min($"ts").as("session_start"), max($"ts").as("session_end"),
            count(lit(1)).as("n_events"),
            sum($"value".cast("decimal(18,6)")).cast("double").as("total_value"))
@@ -176,7 +204,8 @@ object Streams {
     * flatMapGroupsWithState. Emits a Session whenever an in-stream gap closes
     * one; EventTimeTimeout (watermark-driven, so fully deterministic — no
     * wall clock) flushes sessions whose gap window has provably passed.
-    * Callers must set `withWatermark("ts", ...)` on the input.
+    * Times stay in microseconds and totals sum exactly at scale 6, as in
+    * s02's key. Callers must set `withWatermark("ts", ...)` on the input.
     */
   def sessionizeStream(events: Dataset[Event]): Dataset[Session] = {
     import events.sparkSession.implicits._
@@ -185,27 +214,28 @@ object Streams {
       .flatMapGroupsWithState[SessionState, Session](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
+          def session(st: SessionState) = Session(userId, timestampOf(st.start),
+            timestampOf(st.last), st.n, java.math.BigDecimal.valueOf(st.total, 6).doubleValue)
           if (state.hasTimedOut) {
-            val out = state.getOption.map(st =>
-              Session(userId, new Timestamp(st.start), new Timestamp(st.last), st.n, st.total))
+            val out = state.getOption.map(session)
             state.remove()
             out.iterator
           } else {
-            val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
+            val sorted = rows.map(e => (microsOf(e.ts), e)).toSeq.sortBy(p => (p._1, p._2.event_id))
             val closed = Seq.newBuilder[Session]
             var st = state.getOption.orNull
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              if (st == null) st = SessionState(t, t, 1L, e.value)
-              else if (t - st.last > SessionGapMs) {
-                closed += Session(userId, new Timestamp(st.start), new Timestamp(st.last), st.n, st.total)
-                st = SessionState(t, t, 1L, e.value)
-              } else st = st.copy(last = math.max(st.last, t), n = st.n + 1, total = st.total + e.value)
+            sorted.foreach { case (t, e) =>
+              val v = unscaled6(e.value)
+              if (st == null) st = SessionState(t, t, 1L, v)
+              else if (t - st.last > SessionGapMicros) {
+                closed += session(st)
+                st = SessionState(t, t, 1L, v)
+              } else st = st.copy(last = math.max(st.last, t), n = st.n + 1, total = st.total + v)
             }
             if (st != null) {
               state.update(st)
-              // flush once the watermark passes the session's gap horizon
-              val horizon = st.last + SessionGapMs
+              // flush once the watermark (millis) passes the session's gap horizon
+              val horizon = Math.floorDiv(st.last + SessionGapMicros, 1000L)
               if (horizon > state.getCurrentWatermarkMs())
                 state.setTimeoutTimestamp(horizon)
             }
@@ -263,28 +293,6 @@ object Streams {
         OutputMode.Update())
   }
 
-  /** Stream-static enrichment: join a live stream against a broadcast
-    * dimension table (the "space metadata" lookup of the reference pipeline).
-    * The static side is broadcast once per trigger, so the stream side never
-    * shuffles — the per-batch plan is identical to the batch broadcast join.
-    */
-  def enrichStream(events: DataFrame, dim: DataFrame): DataFrame =
-    events.join(broadcast(dim), Seq("event_type"), "left")
-
-  /** Stream-stream interval join: for each error event, the purchases by the
-    * same user in the preceding hour. Both sides carry watermarks and the
-    * join condition bounds event time on both, so state is provably evictable
-    * — the shape Structured Streaming requires for unbounded inputs.
-    */
-  def correlateStreams(errors: DataFrame, purchases: DataFrame): DataFrame = {
-    val e = errors.select(col("event_id").as("e_id"), col("user_id").as("e_user"),
-                          col("ts").as("e_ts"))
-    val p = purchases.select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-                             col("ts").as("p_ts"))
-    e.join(p, expr(
-      "e_user = p_user AND p_ts >= e_ts - INTERVAL 1 HOUR AND p_ts <= e_ts"))
-  }
-
   /** Watermarked exactly-once-per-key dedup; batch callers get plain
     * first-per-key semantics from the same call.
     */
@@ -301,10 +309,7 @@ object Streams {
     */
   def distinctUsersWindowed(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    events
-      .groupBy(window($"ts", "6 hours").as("w"), $"event_type")
-      .agg(approx_count_distinct($"user_id", 0.02).as("approx_users"))
-      .select($"w.start".as("window_start"), $"event_type", $"approx_users")
+    byWindow(events, $"event_type")(approx_count_distinct($"user_id", 0.02).as("approx_users"))
   }
 
   /** Batch form (driver contract key s06_stream_distinct): the sketch next
@@ -315,10 +320,7 @@ object Streams {
     import s.implicits._
     val ev = Tables.events(s, dir)
     val approx = distinctUsersWindowed(ev)
-    val exact = ev
-      .groupBy(window($"ts", "6 hours").as("w"), $"event_type")
-      .agg(countDistinct($"user_id").as("exact_users"))
-      .select($"w.start".as("window_start"), $"event_type", $"exact_users")
+    val exact = byWindow(ev, $"event_type")(countDistinct($"user_id").as("exact_users"))
     exact.join(approx, Seq("window_start", "event_type"))
       .select($"window_start", $"event_type", $"exact_users",
         (abs($"approx_users" - $"exact_users") <=
@@ -336,10 +338,8 @@ object Streams {
   def topkWindowed(events: DataFrame, k: Int = 3): DataFrame = {
     val s = events.sparkSession
     import s.implicits._
-    events
-      .groupBy(window($"ts", "6 hours").as("w"), $"event_type")
-      .agg(graft.functions.GraftFunctions.topkAgg($"value", lit(k)).as("topv"))
-      .select($"w.start".as("window_start"), $"event_type", $"topv")
+    byWindow(events, $"event_type")(
+      graft.functions.GraftFunctions.topkAgg($"value", lit(k)).as("topv"))
   }
 
   /** Batch form (driver contract key s09_stream_topk): the array explodes
@@ -365,11 +365,8 @@ object Streams {
   def cmsWindowed(events: DataFrame): DataFrame = {
     val s = events.sparkSession
     import s.implicits._
-    events
-      .groupBy(window($"ts", "6 hours").as("w"))
-      .agg(graft.functions.GraftFunctions.cmsAgg(
-        $"user_id".cast("string"), lit(1L), lit(4), lit(512)).as("cms"))
-      .select($"w.start".as("window_start"), $"cms")
+    byWindow(events)(graft.functions.GraftFunctions.cmsAgg(
+      $"user_id".cast("string"), lit(1L), lit(4), lit(512)).as("cms"))
   }
 
   /** Batch twin (driver key s15_window_heavy_hitters): each window's exact
@@ -380,10 +377,7 @@ object Streams {
   def windowHeavyHittersBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, dir)
-    val counts = ev
-      .groupBy(window($"ts", "6 hours").as("w"), $"user_id")
-      .agg(count(lit(1)).as("true_n"))
-      .select($"w.start".as("window_start"), $"user_id", $"true_n")
+    val counts = byWindow(ev, $"user_id")(count(lit(1)).as("true_n"))
     val wRank = Window.partitionBy($"window_start").orderBy($"true_n".desc, $"user_id")
     val top = counts
       .withColumn("rank", row_number().over(wRank).cast("long"))
@@ -408,7 +402,7 @@ object Streams {
     val s = events.sparkSession
     import s.implicits._
     events
-      .groupBy($"user_id", session_window($"ts", "1800000001 microseconds").as("sw"))
+      .groupBy($"user_id", session_window($"ts", SessionWindow).as("sw"))
       .agg(graft.functions.GraftFunctions.topkAgg($"value", lit(k)).as("topv"))
       .select($"user_id", $"sw.start".as("session_start"), $"topv")
   }
@@ -573,8 +567,9 @@ object Streams {
     * lets two 100-TB/day streams correlate without unbounded state. Rows
     * co-partition on user_id (one exchange per side); inner-join results
     * emit as matches arrive (watermarks govern state eviction, not
-    * emission). The batch twin below is the oracled key; the spec drives
-    * identical rows through both and proves set equality.
+    * emission). The oracled batch key below calls this same join; the
+    * spec replays the reference table through the stream and proves set
+    * equality.
     */
   def attributionStream(clicks: DataFrame, purchases: DataFrame): DataFrame = {
     val c = clicks.withWatermark("ts", "1 hour")
@@ -591,21 +586,13 @@ object Streams {
                 .as("lag_s"))
   }
 
-  /** s21 batch twin (driver key s21_stream_join): the same co-partitioned
-    * interval join over the static events table. */
+  /** s21 batch twin (key s21_stream_join): [[attributionStream]]
+    * over the static events table, whose watermarks Catalyst drops on a
+    * batch frame. */
   def attributionJoinBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, dir)
-    val c = ev.filter($"event_type" === "click")
-      .select($"event_id".as("click_id"), $"user_id", $"ts".as("click_ts"))
-    val p = ev.filter($"event_type" === "purchase")
-      .select($"event_id".as("purchase_id"), $"user_id", $"ts".as("purchase_ts"))
-    c.join(p, Seq("user_id"))
-      .filter($"purchase_ts" >= $"click_ts" &&
-              $"purchase_ts" <= $"click_ts" + expr("INTERVAL 1 HOUR"))
-      .select($"user_id", $"click_id", $"purchase_id",
-        expr("(unix_micros(purchase_ts) - unix_micros(click_ts)) div 1000000")
-          .as("lag_s"))
+    attributionStream(ev.filter($"event_type" === "click"), ev.filter($"event_type" === "purchase"))
       .orderBy($"click_id", $"purchase_id")
   }
 
@@ -632,11 +619,7 @@ object Streams {
     */
   def signatureIndexSink(docs: DataFrame,
                          statePath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    Fold.sink(docs, statePath, "append")(graft.operators.Dedup.signatureIndexMerge(_, _))
-
-  /** d09's content fingerprint, shared by the s13 batch twin and stream. */
-  private[graft] def contentFp(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    md5(regexp_replace(lower(c), "\\s+", " "))
+    Fold.sink(docs, statePath, "append")(Dedup.signatureIndexMerge(_, _))
 
   /** s13 stream transform: decontaminate documents AT INGEST — fingerprint
     * each incoming doc and anti-join against the static eval-fingerprint
@@ -647,44 +630,42 @@ object Streams {
     * docs are refused entry to the corpus instead of being swept later.
     */
   def decontaminateStream(docs: DataFrame, blockFps: DataFrame): DataFrame =
-    docs.withColumn("fp", contentFp(col("text")))
+    docs.withColumn("fp", TextOps.contentFp)
       .join(broadcast(blockFps), Seq("fp"), "left_anti")
+
+  /** s13's and s16's per-source summary: docs a gate admits vs blocks. */
+  private def admissionSummary(docs: DataFrame, blocked: Column): DataFrame =
+    docs.groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"),
+           sum(when(blocked, 0L).otherwise(1L)).as("n_admitted"),
+           sum(when(blocked, 1L).otherwise(0L)).as("n_blocked"))
+      .orderBy(col("source"))
 
   /** Batch twin (driver key s13_stream_decontaminate): per-source admission
     * summary — how many incoming docs the gate admits vs blocks. Blocked =
-    * the doc's fingerprint appears in the eval set (doc_id % 7 == 3, the
-    * d09 convention; eval rows block themselves by construction).
+    * the doc's fingerprint appears in the eval set (`Dedup.isEval`; eval
+    * rows block themselves by construction).
     */
   def streamDeconBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-      .select($"doc_id", $"source", contentFp($"text").as("fp"))
-    val block = docs.filter($"doc_id" % 7 === 3).select($"fp").distinct()
-    docs
-      .join(broadcast(block.withColumn("blocked", lit(true))), Seq("fp"), "left")
-      .groupBy($"source")
-      .agg(count(lit(1)).as("n_docs"),
-           sum(when($"blocked", 0L).otherwise(1L)).as("n_admitted"),
-           sum(when($"blocked", 1L).otherwise(0L)).as("n_blocked"))
-      .orderBy($"source")
+      .select($"doc_id", $"source", TextOps.contentFp.as("fp"))
+    val block = Dedup.evalFingerprints(docs, $"fp").withColumn("blocked", lit(true))
+    admissionSummary(docs.join(broadcast(block), Seq("fp"), "left"), $"blocked")
   }
 
   /** s16: quality gating at INGEST — d24's per-source calibrated cutoffs
     * (a tiny static table, computed offline over the reference corpus)
     * broadcast-joined to the live stream; a doc at or below its source's
     * cutoff is refused before it ever lands. Stateless like s13 (append
-    * mode, zero state-store rows): gate throughput = scan rate. A source
-    * with no calibration row passes uncut — refusing everything from a
-    * new feed until someone recalibrates would be an outage, not a gate.
+    * mode, zero state-store rows): gate throughput = scan rate. The gate is
+    * d24's own ([[Dedup.qualityAdmits]]), so a source with no calibration
+    * row passes uncut.
     */
-  def qualityGateStream(stream: DataFrame, cutoffs: DataFrame): DataFrame = {
-    val quality = graft.operators.TextOps.qualityCol
-    stream
-      .withColumn("quality", quality)
-      .join(broadcast(cutoffs), Seq("source"), "left")
-      .filter(col("cutoff").isNull || col("quality") > col("cutoff"))
+  def qualityGateStream(stream: DataFrame, cutoffs: DataFrame): DataFrame =
+    Dedup.withQualityCutoffs(stream.withColumn("quality", TextOps.qualityCol), cutoffs)
+      .filter(Dedup.qualityAdmits)
       .select(col("doc_id"), col("source"), col("quality"))
-  }
 
   /** s16's batch twin: per-source admission summary under the SAME d24
     * cutoffs — what the gate would do to the whole corpus, as one
@@ -694,14 +675,9 @@ object Streams {
   def streamQualityBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val scored = Tables.documents(s, dir)
-      .select($"doc_id", $"source", graft.operators.TextOps.qualityCol.as("quality"))
-    val cutoffs = graft.operators.Dedup.histogramQualityCutoffs(scored)
-    scored.join(broadcast(cutoffs), Seq("source"), "left")
-      .groupBy($"source")
-      .agg(count(lit(1)).as("n_docs"),
-           sum(when($"quality" > $"cutoff", 1L).otherwise(0L)).as("n_admitted"),
-           sum(when($"quality" > $"cutoff", 0L).otherwise(1L)).as("n_blocked"))
-      .orderBy($"source")
+      .select($"doc_id", $"source", TextOps.qualityCol.as("quality"))
+    admissionSummary(Dedup.withQualityCutoffs(scored, Dedup.histogramQualityCutoffs(scored)),
+      !Dedup.qualityAdmits)
   }
 
   /** s18: per-source token budget for the admission window (soft cap —
@@ -991,8 +967,7 @@ object Streams {
 
   def chunkIngestBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val chunks = graft.operators.TextOps
-      .chunkRows(Tables.documents(s, dir))
+    val chunks = TextOps.chunkRows(Tables.documents(s, dir))
       .withColumn("batch", pmod($"doc_id", lit(ChunkReplayBatches.toLong)))
     (0 until ChunkReplayBatches).map { b =>
       chunkFold(s, dir, chunks.filter($"batch" === b.toLong), b.toLong, firstFold = b == 0)
@@ -1021,8 +996,7 @@ object Streams {
     */
   def erasureFoldBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val chunks = graft.operators.TextOps
-      .chunkRows(Tables.documents(s, dir))
+    val chunks = TextOps.chunkRows(Tables.documents(s, dir))
       .withColumn("batch", pmod($"doc_id", lit(ChunkReplayBatches.toLong)))
     val deleted = pmod($"doc_id", lit(graft.operators.EndToEnd.ErasureMod)) ===
       graft.operators.EndToEnd.ErasureResidue
@@ -1050,12 +1024,12 @@ object Streams {
   val DriftReplayBatches = 4
   def driftFoldBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = graft.operators.Dedup.driftBase(s, dir)
+    val base = Dedup.driftBase(s, dir)
     // Per-batch partials from ONE scan.
-    val partials = graft.operators.Dedup.driftCounts(base,
+    val partials = Dedup.driftCounts(base,
         extraKeys = Seq("b" -> pmod($"doc_id", lit(DriftReplayBatches.toLong))))
     val state = Fold.replayPartials(DriftReplayBatches, partials)(fullOuterAdd("dim", "bucket"))
-    graft.operators.Dedup.driftReadout(state)
+    Dedup.driftReadout(state)
   }
 
   /** s26: t30's unigram census maintained at INGEST — the language-model
@@ -1074,14 +1048,14 @@ object Streams {
   val CensusReplayBatches = 3
   def censusFoldBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toks = graft.operators.TextOps.surprisalToks(Tables.documents(s, dir))
+    val toks = TextOps.surprisalToks(Tables.documents(s, dir))
     // Per-batch term partials from ONE tokenization pass — tokenization is
     // the expensive side here, so the corpus is never re-tokenized per batch.
     val partials = toks
       .groupBy(pmod($"doc_id", lit(CensusReplayBatches.toLong)).as("b"), $"term")
       .agg(count(lit(1)).as("cnt"))
     val census = Fold.replayPartials(CensusReplayBatches, partials)(fullOuterAdd("term"))
-    graft.operators.TextOps.surprisalReadout(toks, census)
+    TextOps.surprisalReadout(toks, census)
   }
 
   /** s29: the SAME census contract as s26, driven through Spark 4's
@@ -1105,7 +1079,7 @@ object Streams {
     */
   def censusTwsBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toks = graft.operators.TextOps.surprisalToks(Tables.documents(s, dir))
+    val toks = TextOps.surprisalToks(Tables.documents(s, dir))
     val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     val census = try {
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -1121,7 +1095,7 @@ object Streams {
       case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
       case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
-    graft.operators.TextOps.surprisalReadout(toks, census)
+    TextOps.surprisalReadout(toks, census)
   }
 
   /** Batch `transformWithState` loads per-partition state stores that

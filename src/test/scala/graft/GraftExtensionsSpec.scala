@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import graft.functions.{GraftFunction, GraftFunctions}
 
@@ -25,7 +27,6 @@ class GraftExtensionsSpec extends SparkSpec {
     "shingle_strings" -> s"SELECT shingle_strings($toks, 2)",
     "simhash60" -> s"SELECT simhash60($toks)",
     "simhash_wide120" -> s"SELECT simhash_wide120($toks)",
-    "minhash_sig31" -> s"SELECT minhash_sig31($toks, 4)",
     "minhash_shingle_sig" -> s"SELECT minhash_shingle_sig($toks, 2, 4)",
     "regex_count" -> "SELECT regex_count('a b c', ' ')",
     "interleave_bits" -> "SELECT interleave_bits(3L, 5L)",
@@ -43,12 +44,26 @@ class GraftExtensionsSpec extends SparkSpec {
     "cms_agg" -> "SELECT cms_agg(t, 1L, 2, 16) FROM VALUES ('a') AS v(t)",
     "vec_mean_agg" -> s"SELECT vec_mean_agg(e, 2) FROM (SELECT $vec AS e)")
 
+  /** (Scala val, SQL name) of every GraftFunction val of GraftFunctions. */
+  private val rowVals: Seq[(String, String)] = GraftFunctions.getClass.getMethods.toSeq
+    .filter(m => m.getParameterCount == 0 && classOf[GraftFunction].isAssignableFrom(m.getReturnType))
+    .map(m => m.getName -> m.invoke(GraftFunctions).asInstanceOf[GraftFunction].name)
+
   test("every GraftFunctions row is in the table, and every table row has a query") {
-    val rows = GraftFunctions.getClass.getMethods.toSeq
-      .filter(m => m.getParameterCount == 0 && classOf[GraftFunction].isAssignableFrom(m.getReturnType))
-      .map(_.invoke(GraftFunctions).asInstanceOf[GraftFunction].name)
-    assert(rows.toSet == GraftFunctions.table.map(_.name).toSet)
+    assert(rowVals.map(_._2).toSet == GraftFunctions.table.map(_.name).toSet)
     assert(GraftFunctions.table.map(_.name).toSet == queries.keySet)
+  }
+
+  test("every table row is called from graft.operators or graft.streaming") {
+    val callers = Seq("operators", "streaming").flatMap { d =>
+      val stream = Files.list(Paths.get(s"src/main/scala/graft/$d"))
+      try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).map(Files.readString).toList
+      finally stream.close()
+    }
+    val uncalled = rowVals.filterNot { case (v, _) =>
+      callers.exists(src => s"\\b$v\\(".r.findFirstIn(src).isDefined)
+    }.map(_._2)
+    assert(uncalled.isEmpty, s"rows no operator calls: ${uncalled.mkString(", ")}")
   }
 
   test("an extensions-only session resolves every table name from SQL text") {

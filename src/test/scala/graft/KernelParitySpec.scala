@@ -48,7 +48,6 @@ class KernelParitySpec extends SparkSpec {
     "shingle_strings" -> (Seq(Toks, IntegerType), () => Seq(toks(), small(3))),
     "simhash60" -> (Seq(Toks), () => Seq(toks())),
     "simhash_wide120" -> (Seq(Toks), () => Seq(toks())),
-    "minhash_sig31" -> (Seq(Toks, IntegerType), () => Seq(toks(), small(64))),
     "minhash_shingle_sig" -> (Seq(Toks, IntegerType, IntegerType),
       () => Seq(toks(), small(3), small(64))),
     "regex_count" -> (Seq(StringType, StringType), () => Seq(str(),

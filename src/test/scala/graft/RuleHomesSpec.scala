@@ -1,0 +1,29 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Pins each streaming and curation row rule to its one home: a batch key
+  * and its stream twin call the rule, so a second copy is a second
+  * definition free to drift from the first.
+  */
+class RuleHomesSpec extends AnyFunSuite {
+
+  test("each streaming and curation rule is written once in src/main") {
+    val stream = Files.walk(Paths.get("src/main/scala"))
+    val sources = try stream.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p.getFileName.toString -> Files.readString(p)).toList
+      finally stream.close()
+    def count(text: String, rule: String) =
+      text.split(java.util.regex.Pattern.quote(rule), -1).length - 1
+    def total(rule: String) = sources.map(f => count(f._2, rule)).sum
+    val fp = "md5(regexp_replace(lower("
+    assert(sources.filter(_._2.contains(fp)).map(_._1) == List("TextOps.scala"),
+      "the content fingerprint is TextOps.contentFp")
+    assert(total("% 7 === 3") == 1, "the eval set is Dedup.isEval")
+    assert(count(sources.toMap.apply("Streams.scala"), "\"6 hours\"") == 1,
+      "the 6-hour window is Streams.byWindow")
+    assert(total("1800000001") == 0, "the session window derives from Streams.SessionGapMicros")
+  }
+}

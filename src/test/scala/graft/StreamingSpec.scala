@@ -10,6 +10,31 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(minute: Int): Timestamp = new Timestamp(1700000000000L + minute * 60000L)
 
+  /** sf0.001's events in arrival order, (ts, event_id). */
+  private lazy val arrivals: Seq[Event] = {
+    val s = spark
+    import s.implicits._
+    Tables.events(s, sfDir).select($"event_id", $"ts", $"user_id", $"event_type", $"value")
+      .as[Event].collect().toSeq.sortBy(e => (Streams.microsOf(e.ts), e.event_id))
+  }
+
+  /** The reference-table replay: `rows`, already in arrival order, reach
+    * `q` in 3 deterministic micro-batches; `add` feeds one batch to the
+    * query's source(s), and each batch drains before the next, so no row
+    * arrives behind the watermark of an earlier one.
+    */
+  private def replay[T](q: org.apache.spark.sql.streaming.StreamingQuery, rows: Seq[T])(
+      add: Seq[T] => Unit): Unit =
+    rows.grouped((rows.length + 2) / 3).foreach { b => add(b); q.processAllAvailable() }
+
+  /** A doc stream's admitted count per source, next to a batch twin's
+    * non-zero `n_admitted` per source. */
+  private def admittedPerSource(streamed: org.apache.spark.sql.DataFrame,
+      twin: org.apache.spark.sql.DataFrame): (Map[String, Long], Map[String, Long]) =
+    (streamed.groupBy("source").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
+     twin.filter(col("n_admitted") > 0).collect()
+       .map(r => r.getAs[String]("source") -> r.getAs[Long]("n_admitted")).toMap)
+
   test("s01 streaming windowed agg equals the batch transform on same data") {
     val s = spark
     import s.implicits._
@@ -67,6 +92,19 @@ class StreamingSpec extends SparkSpec {
         // update mode emitted one row per (type, trigger) it saw
         assert(s.table("tws_census").count() >= folded.size)
       } finally q.stop()
+      // the reference table: no key computes this census, so the batch
+      // aggregate over the same events is the twin
+      val ref = MemoryStream[Event]
+      val rq = Streams.censusStateStream(ref.toDS())
+        .writeStream.format("memory").queryName("tws_census_ref").outputMode("update").start()
+      try {
+        replay(rq, arrivals)(b => ref.addData(b: _*))
+        val folded = s.table("tws_census_ref").groupBy($"event_type")
+          .agg(max($"n_events"), max($"sum_micros")).as[(String, Long, Long)].collect().toSet
+        val batch = Tables.events(s, sfDir).groupBy($"event_type")
+          .agg(count(lit(1)), sum(expr("unix_micros(ts)"))).as[(String, Long, Long)].collect().toSet
+        assert(folded == batch)
+      } finally rq.stop()
     } finally prev match {
       case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
       case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -111,6 +149,23 @@ class StreamingSpec extends SparkSpec {
       assert(flushedUsers == Set(1L, 2L), s"got $flushedUsers")
       assert(all.length == 3) // user1 x2 (gap + flush), user2 x1; user3 still open
     } finally q.stop()
+    // the reference table, then a far-future sentinel that flushes every
+    // open session: the stream's sessions are the s02 key's, to the
+    // microsecond and the exact decimal total
+    val ref = MemoryStream[Event]
+    val rq = Streams.sessionizeStream(ref.toDS().withWatermark("ts", "1 hour"))
+      .writeStream.format("memory").queryName("s02_ref").outputMode("append").start()
+    val cols = Seq("user_id", "session_start", "session_end", "n_events", "total_value").map(col)
+    try {
+      replay(rq, arrivals)(b => ref.addData(b: _*))
+      ref.addData(Event(-1, ts(10000000), -1, "view", 0.0))
+      rq.processAllAvailable()
+      val streamed = s.table("s02_ref").select(cols: _*).collect().map(_.toSeq).toSet
+      val key = SparkEntry.queries("s02_sessionize")(s, sfDir).select(cols: _*)
+        .collect().map(_.toSeq).toSet
+      assert(streamed == key,
+        s"stream-only ${(streamed -- key).take(3)}, key-only ${(key -- streamed).take(3)}")
+    } finally rq.stop()
   }
 
   test("s03 watermarked streaming dedup drops in-stream duplicates") {
@@ -128,49 +183,18 @@ class StreamingSpec extends SparkSpec {
       val ids = s.table("s03_out").select("event_id").collect().map(_.getLong(0)).sorted
       assert(ids.toSeq == Seq(1L, 2L))
     } finally q.stop()
-  }
-
-  test("s04 stream-static broadcast join enriches without shuffling the stream") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val input = MemoryStream[Event]
-    input.addData(Event(1, ts(0), 1, "purchase", 5.0), Event(2, ts(1), 2, "error", 1.0),
-                  Event(3, ts(2), 3, "mystery", 0.0))
-    val dim = Seq(("purchase", "revenue"), ("error", "oncall")).toDF("event_type", "team")
-    val q = Streams.enrichStream(input.toDF(), dim)
-      .writeStream.format("memory").queryName("s04_out").outputMode("append").start()
+    // the reference table: the stream keeps exactly the s03 key's rows
+    val ref = MemoryStream[Event]
+    val rq = Streams.dedupEvents(ref.toDF(), watermark = Some("1 hour"))
+      .writeStream.format("memory").queryName("s03_ref").outputMode("append").start()
+    val cols = Seq("event_id", "ts", "user_id", "event_type").map(col)
     try {
-      q.processAllAvailable()
-      val rows = s.table("s04_out").select("event_id", "team")
-        .collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSet
-      assert(rows == Set((1L, Some("revenue")), (2L, Some("oncall")), (3L, None)))
-      // the executed per-batch plan must broadcast the dim, not sort-merge
-      val progress = q.lastProgress
-      assert(progress.numInputRows == 3)
-    } finally q.stop()
-  }
-
-  test("s05 stream-stream interval join pairs errors with preceding purchases") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val errors = MemoryStream[Event]
-    val purchases = MemoryStream[Event]
-    purchases.addData(Event(10, ts(0), 1, "purchase", 9.0),   // 30 min before err -> match
-                      Event(11, ts(-90), 1, "purchase", 8.0), // 2h before -> outside window
-                      Event(12, ts(5), 2, "purchase", 7.0))   // other user, after err
-    errors.addData(Event(1, ts(30), 1, "error", 0.0), Event(2, ts(0), 2, "error", 0.0))
-    val q = Streams.correlateStreams(
-        errors.toDF().withWatermark("ts", "1 hour"),
-        purchases.toDF().withWatermark("ts", "2 hours"))
-      .writeStream.format("memory").queryName("s05_out").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val pairs = s.table("s05_out").select("e_id", "p_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(pairs == Set((1L, 10L)), s"got $pairs")
-    } finally q.stop()
+      replay(rq, arrivals)(b => ref.addData(b: _*))
+      val streamed = s.table("s03_ref").select(cols: _*).collect().map(_.toSeq).toSet
+      val key = SparkEntry.queries("s03_stream_dedup")(s, sfDir).select(cols: _*)
+        .collect().map(_.toSeq).toSet
+      assert(streamed.size == arrivals.size && streamed == key)
+    } finally rq.stop()
   }
 
   test("s06 streaming approx-distinct merges sketch state across batches") {
@@ -714,10 +738,26 @@ class StreamingSpec extends SparkSpec {
       assert(got == Set((1L, 1L, 10L, 1800L), (2L, 2L, 13L, 3600L)),
         s"stream join emitted $got")
     } finally q.stop()
-    // batch twin on the real corpus: canonical pairs, lag within [0, 3600]
-    val df = SparkEntry.queries("s21_stream_join")(spark, sfDir)
-    assert(df.filter($"lag_s" < 0 || $"lag_s" > 3600).isEmpty,
-      "every attributed pair must convert within the window")
+    // the reference table through two watermarked streams: the stream
+    // emits exactly the s21 key's pairs, every lag within [0, 3600]
+    val refClicks = MemoryStream[Event]
+    val refPurchases = MemoryStream[Event]
+    val rq = Streams.attributionStream(refClicks.toDF(), refPurchases.toDF())
+      .writeStream.format("memory").queryName("s21_ref").outputMode("append").start()
+    try {
+      replay(rq, arrivals) { b =>
+        refClicks.addData(b.filter(_.event_type == "click"): _*)
+        refPurchases.addData(b.filter(_.event_type == "purchase"): _*)
+      }
+      val streamed = s.table("s21_ref")
+        .select($"user_id", $"click_id", $"purchase_id", $"lag_s")
+        .as[(Long, Long, Long, Long)].collect().toSet
+      val key = SparkEntry.queries("s21_stream_join")(spark, sfDir)
+        .as[(Long, Long, Long, Long)].collect().toSet
+      assert(key.nonEmpty && streamed == key)
+      assert(key.forall(p => p._4 >= 0 && p._4 <= 3600),
+        "every attributed pair must convert within the window")
+    } finally rq.stop()
   }
 
   test("s08 custom topk_agg merges through the streaming state store") {
@@ -787,7 +827,7 @@ class StreamingSpec extends SparkSpec {
     // blocklist = fingerprints of two known texts
     val blockTexts = Seq("leaked eval question one", "another held out prompt")
     val blockFps = blockTexts.toDF("text")
-      .select(Streams.contentFp(col("text")).as("fp"))
+      .select(graft.operators.TextOps.contentFp.as("fp"))
     val input = MemoryStream[(Long, String, String)]
     input.addData(
       (1L, "srcA", "a perfectly clean document"),
@@ -814,10 +854,24 @@ class StreamingSpec extends SparkSpec {
         "stream-static anti-join must hold no streaming state")
     } finally q.stop()
     // batch twin invariants: admissions + blocks partition each source's docs
-    val twin = SparkEntry.queries("s13_stream_decontaminate")(spark, sfDir)
+    val twin = SparkEntry.queries("s13_stream_decontaminate")(spark, sfDir).cache()
     assert(twin.filter(col("n_admitted") + col("n_blocked") =!= col("n_docs")).isEmpty)
     // eval-convention rows guarantee at least one block overall
     assert(twin.agg(sum("n_blocked")).head().getLong(0) >= 1)
+    // the reference table against its own eval blocklist: the stream admits
+    // exactly the twin's count per source
+    val docs = Tables.documents(s, sfDir).select($"doc_id", $"source", $"text")
+      .as[(Long, String, String)].collect().toSeq.sortBy(_._1)
+    val refBlock = graft.operators.Dedup.evalFingerprints(
+      Tables.documents(s, sfDir).withColumn("fp", graft.operators.TextOps.contentFp), $"fp")
+    val ref = MemoryStream[(Long, String, String)]
+    val rq = Streams.decontaminateStream(ref.toDF().toDF("doc_id", "source", "text"), refBlock)
+      .writeStream.format("memory").queryName("s13_ref").outputMode("append").start()
+    try {
+      replay(rq, docs)(b => ref.addData(b: _*))
+      val (streamed, batch) = admittedPerSource(s.table("s13_ref"), twin)
+      assert(streamed == batch)
+    } finally { rq.stop(); twin.unpersist() }
   }
 
   test("s16 stream quality gate refuses below-cutoff docs statelessly, passes uncalibrated sources") {
@@ -863,6 +917,20 @@ class StreamingSpec extends SparkSpec {
     assert(twin.join(d24PerSource, "source")
       .filter(col("n_admitted") =!= col("n24")).isEmpty,
       "the gate's admissions must equal d24's survivors per source")
+    // the reference table under its own d24 cutoffs: the stream admits
+    // exactly the twin's count per source
+    val docs = Tables.documents(s, sfDir).select($"doc_id", $"source", $"text")
+      .as[(Long, String, String)].collect().toSeq.sortBy(_._1)
+    val refCutoffs = graft.operators.Dedup.histogramQualityCutoffs(Tables.documents(s, sfDir)
+      .select($"source", graft.operators.TextOps.qualityCol.as("quality")))
+    val ref = MemoryStream[(Long, String, String)]
+    val rq = Streams.qualityGateStream(ref.toDF().toDF("doc_id", "source", "text"), refCutoffs)
+      .writeStream.format("memory").queryName("s16_ref").outputMode("append").start()
+    try {
+      replay(rq, docs)(b => ref.addData(b: _*))
+      val (streamed, batch) = admittedPerSource(s.table("s16_ref"), twin)
+      assert(streamed == batch)
+    } finally rq.stop()
   }
 
   test("s15 windowed CMS merges sketch state across batches and never undercounts") {
@@ -970,10 +1038,7 @@ class StreamingSpec extends SparkSpec {
     try {
       // 3 micro-batches in doc_id order — the deterministic arrival order
       // the oracle replays; state must carry spent across the batch cuts
-      docs.grouped((docs.length + 2) / 3).foreach { chunk =>
-        input.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
+      replay(q, docs.toSeq)(b => input.addData(b: _*))
       val streamed = s.table("s18_out").as[BudgetVerdict].collect()
         .map(v => (v.doc_id, v.source, v.n_tokens, v.spent_before, v.admitted)).toSet
       val fromBatch = batch.collect()
@@ -997,10 +1062,7 @@ class StreamingSpec extends SparkSpec {
     val q = Streams.shardAssignStream(input.toDS())
       .writeStream.format("memory").queryName("s19_out").outputMode("append").start()
     try {
-      docs.grouped((docs.length + 2) / 3).foreach { chunk =>
-        input.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
-      }
+      replay(q, docs.toSeq)(b => input.addData(b: _*))
       val streamed = s.table("s19_out").as[ShardAssign].collect()
         .map(v => (v.doc_id, v.source, v.byte_len, v.shard_idx)).toSet
       val fromBatch = batch.collect()
