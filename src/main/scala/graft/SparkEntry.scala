@@ -85,7 +85,7 @@ object SparkEntry {
     "p08_dedup_latest"          -> (PipelineOps.dedupLatest _),
     "p09_run_summary"           -> (PipelineOps.runSummary _),
     "p10_partition_stats"       -> (PipelineOps.partitionStats _),
-    "p11_html_render"           -> (Render.htmlRender _),
+    "p11_html_render"           -> ((s, d) => Render.htmlRender(s, d).orderBy("doc_id")),
     "p12_attachment_embed"      -> (Render.attachmentEmbed _),
     "p13_asof_join"             -> (AsOf.asofJoin _),
     "p15_asof_native"           -> (AsOf.asofJoinNative _),

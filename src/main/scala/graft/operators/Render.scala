@@ -10,10 +10,6 @@ import graft.Tables
   */
 object Render {
 
-  /** Full HTML document per page, mirroring the reference template's
-    * structure (/root/reference/output_generator/html_generator.py:102-200):
-    * doctype, head with charset/viewport/title/style, h1 + content div.
-    */
   /** The rendered page as a column over `documents` rows. */
   private def htmlCol = {
     val title = concat(col("source"), lit("/doc-"), col("doc_id"))
@@ -28,11 +24,15 @@ object Render {
       col("text"), lit("\n</div>\n</body>\n</html>"))
   }
 
+  /** Full HTML document per page, mirroring the reference template's
+    * structure (output_generator/html_generator.py:102-200): doctype, head
+    * with charset/viewport/title/style, h1 + content div. One row per page,
+    * unordered: a sink that writes one file per row (RenderSink) needs no
+    * order, and a caller that needs one sorts at its edge, as p11 does.
+    */
   def htmlRender(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, dir)
-      .select($"doc_id", htmlCol.as("html"))
-      .orderBy($"doc_id")
+    Tables.documents(s, dir).select($"doc_id", htmlCol.as("html"))
   }
 
   /** HTML→PDF conversion analogue: the deterministic render manifest

@@ -484,6 +484,50 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
+  test("RenderSink publishes htmlRender without a global sort; p11 sorts at its edge") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // every node of an executed plan, through AQE wrappers and query stages
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val dir = Files.createTempDirectory("graft_rsink_unsorted").toString + "/out"
+    val pages = operators.Render.htmlRender(spark, sfDir)
+      .select(col("doc_id"), concat(lit("space-"), col("doc_id") % 8).as("space"), col("html"))
+    val written = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = written.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val jobs = try jobsRun("render_sink_unsorted") {
+      pages.write.format("graft.sources.RenderSink").option("path", dir).mode("overwrite").save()
+    } finally spark.listenerManager.unregister(listener)
+    assert(jobs == 1, s"an unordered publish is one write job, ran $jobs")
+    assert(written.size == 1, s"one write command, saw ${written.size}")
+    val ops = nodes(written.peek())
+    assert(!ops.exists(p => p.isInstanceOf[Exchange] || p.isInstanceOf[SortExec]),
+      "the publish plan must carry no Exchange and no Sort:\n" + written.peek().treeString)
+    assert(new java.io.File(dir).listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles()).count(_.getName.endsWith(".html")) == pages.count())
+
+    // the registry key keeps its order: a global sort on doc_id (sf0.001's
+    // documents file is stored in doc_id order, so the collected order
+    // alone cannot tell a sort from a lucky scan)
+    val p11 = SparkEntry.queries("p11_html_render")(spark, sfDir)
+    val ids = p11.select("doc_id").collect().map(_.getAs[Number](0).longValue).toSeq
+    assert(ids.nonEmpty && ids == ids.sorted, "p11 must collect in doc_id order")
+    val globalSort = physical(p11).collectFirst { case s: SortExec if s.global => s.sortOrder }
+    assert(globalSort.exists(_.map(_.child.toString).mkString.contains("doc_id")),
+      s"p11 must carry a global sort on doc_id, found $globalSort")
+  }
+
   test("fixture publishOnce sweeps stale crashed .build. dirs, spares live ones") {
     val base = Files.createTempDirectory("graft_fixture_spec").toFile
     val store = new java.io.File(base, "store")
