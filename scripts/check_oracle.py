@@ -24,10 +24,9 @@ con = duckdb.connect()
 con.execute(f"SET memory_limit='{os.environ.get('GRAFT_DUCKDB_MEM', '24GB')}'")
 # DuckDB defaults to every core — the right call for a standalone/serial
 # gate on an otherwise-idle box, so only bound threads when the caller asks
-# (the trailing/parallel gates export GRAFT_DUCKDB_THREADS because they
-# share the box with a live Spark dump; an unconditional default here
-# halved the serial scale_gate.sh path's parallelism under the same 600s
-# timeout).
+# (export GRAFT_DUCKDB_THREADS when the gate shares the box with a live
+# Spark dump; an unconditional default here halved the serial scale_gate.sh
+# path's parallelism under the same 600s timeout).
 if "GRAFT_DUCKDB_THREADS" in os.environ:
     con.execute(f"SET threads={os.environ['GRAFT_DUCKDB_THREADS']}")
 con.execute("SET temp_directory='.tmp'")

@@ -27,7 +27,7 @@ Step 1 has two modes:
     reach's MIN(dst) GROUP BY src (reach's base row keeps singletons).
     The pointer jump makes convergence O(log diameter) rounds. The heavy
     simhash signature build is staged to its own parquet first (the
-    simhash_gate/memo_gate pattern) so each DuckDB statement stays small.
+    memo_gate pattern) so each DuckDB statement stays small.
 
   monolithic (GRAFT_CLOSURE_MONO=1) — the original single recursive CTE,
     kept as the cross-check path: both modes must hash-match the same
@@ -150,7 +150,7 @@ for k in closure_keys:
 
 # 3. standard compare over symlinked dumps. Recreate links unconditionally:
 #    a stale link from a previous run with a different <verifyOutDir> would
-#    compare against the OLD dump (the simhash_gate wrong-PASS class).
+#    compare against the OLD dump (a wrong PASS).
 for k in rewritten:
     dst = f"{work}/{k}"
     if os.path.islink(dst):

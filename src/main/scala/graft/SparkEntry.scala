@@ -152,8 +152,8 @@ object SparkEntry {
     // D. Dedup / similarity / multimodal
     "d01_exact_dedup"   -> (Dedup.exactDedup _),
     "d02_minhash_lsh"   -> ((s, d) => Dedup.minhashLsh(s, d)),
-    "d03_simhash"       -> ((s, d) => Dedup.simhashDedup(s, d)),
-    "d43_simhash_wide"  -> ((s, d) => Dedup.simhashWide(s, d)),
+    "d03_simhash"       -> ((s, d) => Dedup.simhashDedup(s, d).orderBy("doc_a", "doc_b")),
+    "d43_simhash_wide"  -> ((s, d) => Dedup.simhashWide(s, d).orderBy("doc_a", "doc_b")),
     "d44_neardup_clusters_wide" -> ((s, d) => Dedup.neardupClustersWide(s, d)),
     "d04_ngram_jaccard" -> (Dedup.ngramJaccard _),
     "d09_decontaminate" -> (Dedup.decontaminate _),

@@ -582,6 +582,8 @@ object Dedup {
     * (pigeonhole) and is guaranteed to surface as a candidate. The whole
     * chain — tokenize, fingerprint, band, verify — is replicated by the
     * DuckDB oracle, so candidate semantics are hash-checked, not just spec'd.
+    * Pairs come unordered: [[labelPropagation]] materializes them, which
+    * keeps no order, and the d03 key sorts at its edge.
     */
   def simhashDedup(s: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
     import s.implicits._
@@ -599,7 +601,6 @@ object Dedup {
       .select($"doc_a", $"doc_b", bit_count($"sh_a".bitwiseXOR($"sh_b")).cast("long").as("hamming"))
       .distinct()
       .filter($"hamming" <= maxHamming)
-      .orderBy($"doc_a", $"doc_b")
   }
 
   /** d43: [[simhashDedup]]'s near-dup contract with a WIDE signature so the
@@ -617,6 +618,7 @@ object Dedup {
     * |corpus|/2^30 (~0.005 at 5M docs): collisions are dominated by true
     * near-dups at any realistic corpus size, the pair view stays linear,
     * and the key gates at the ×1000 point (§7l) where d03 cannot.
+    * Unordered, as [[simhashDedup]]; the d43 key sorts.
     */
   def simhashWide(s: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
     import s.implicits._
@@ -644,7 +646,6 @@ object Dedup {
           bit_count($"hi_a".bitwiseXOR($"hi_b"))).cast("long").as("hamming"))
       .distinct()
       .filter($"hamming" <= maxHamming)
-      .orderBy($"doc_a", $"doc_b")
   }
 
   /** The materialized near-dup cluster artifact: (doc_id, cluster_id) for
