@@ -111,7 +111,7 @@ object ScaleGen {
     // realistic mode's injectivity precondition (see realisticDocTweak)
     if (mode == "realistic" && only.forall(_.contains("documents"))) {
       val aliasable = Tables.table(spark, src, "documents")
-        .select(explode(split(lower(trim(col("text"))), "\\s+")).as("t"))
+        .select(explode(graft.operators.TextOps.words(col("text"))).as("t"))
         .filter(col("t").rlike("x\\d+$")).count()
       require(aliasable == 0,
         s"realistic mode: $aliasable base token(s) end in x<digits> — the replica " +

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -51,27 +51,8 @@ object AsOf {
     * errors at equal ts so ">=" includes simultaneous matches. Oracle =
     * DuckDB ASOF LEFT JOIN with the inequality flipped.
     */
-  def asofJoinForward(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = Tables.events(s, dir)
-    val purchases = ev.filter($"event_type" === "purchase")
-      .groupBy($"user_id", $"ts")
-      .agg(max($"event_id").as("p_id"))
-      .select($"user_id", $"ts", $"p_id", lit(0).as("tag"),
-              lit(null).cast("long").as("e_id"))
-    val errors = ev.filter($"event_type" === "error")
-      .select($"user_id", $"ts", lit(null).cast("long").as("p_id"), lit(1).as("tag"),
-              $"event_id".as("e_id"))
-    val w = Window.partitionBy($"user_id").orderBy($"ts".desc, $"tag")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    purchases.union(errors)
-      .withColumn("next_p",
-        last(when($"tag" === 0, struct($"ts".as("p_ts"), $"p_id")), ignoreNulls = true).over(w))
-      .filter($"tag" === 1)
-      .select($"e_id", $"user_id", $"ts".as("e_ts"),
-              $"next_p.p_id".as("p_id"), $"next_p.p_ts".as("p_ts"))
-      .orderBy($"e_id")
-  }
+  def asofJoinForward(s: SparkSession, dir: String): DataFrame =
+    oneSided(Tables.events(s, dir), forward = true, "next_p")
 
   /** p29: NEAREST as-of — for every 'error' event, the closest 'purchase'
     * by the same user in EITHER direction (|Δt| minimized, ties to the
@@ -92,22 +73,9 @@ object AsOf {
   private[graft] def asofJoinNearestOf(ev: DataFrame): DataFrame = {
     val s = ev.sparkSession
     import s.implicits._
-    val purchases = ev.filter($"event_type" === "purchase")
-      .groupBy($"user_id", $"ts")
-      .agg(max($"event_id").as("p_id"))
-      .select($"user_id", $"ts", $"p_id", lit(0).as("tag"),
-              lit(null).cast("long").as("e_id"))
-    val errors = ev.filter($"event_type" === "error")
-      .select($"user_id", $"ts", lit(null).cast("long").as("p_id"), lit(1).as("tag"),
-              $"event_id".as("e_id"))
-    val wb = Window.partitionBy($"user_id").orderBy($"ts", $"tag")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wf = Window.partitionBy($"user_id").orderBy($"ts".desc, $"tag")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pStruct = when($"tag" === 0, struct($"ts".as("p_ts"), $"p_id"))
-    val both = purchases.union(errors)
-      .withColumn("prev_p", last(pStruct, ignoreNulls = true).over(wb))
-      .withColumn("next_p", last(pStruct, ignoreNulls = true).over(wf))
+    val both = tagged(ev)
+      .withColumn("prev_p", carry(forward = false))
+      .withColumn("next_p", carry(forward = true))
       .filter($"tag" === 1)
     val dBack = unix_micros($"ts") - unix_micros($"prev_p.p_ts")
     val dFwd  = unix_micros($"next_p.p_ts") - unix_micros($"ts")
@@ -123,11 +91,17 @@ object AsOf {
   /** For every 'error' event, the latest preceding (or simultaneous)
     * 'purchase' by the same user.
     */
-  def asofJoin(s: SparkSession, dir: String): DataFrame = {
+  def asofJoin(s: SparkSession, dir: String): DataFrame =
+    oneSided(Tables.events(s, dir), forward = false, "last_p")
+
+  /** Purchases (tag 0) unioned with errors (tag 1): the one input of every
+    * window as-of join. The purchase side is deduped per (key, ts) so
+    * equal-timestamp ties resolve identically in both engines (max
+    * event_id wins).
+    */
+  private def tagged(ev: DataFrame): DataFrame = {
+    val s = ev.sparkSession
     import s.implicits._
-    val ev = Tables.events(s, dir)
-    // dedupe the right side per (key, ts) so equal-timestamp ties are
-    // resolved identically in both engines (max event_id wins)
     val purchases = ev.filter($"event_type" === "purchase")
       .groupBy($"user_id", $"ts")
       .agg(max($"event_id").as("p_id"))
@@ -136,15 +110,27 @@ object AsOf {
     val errors = ev.filter($"event_type" === "error")
       .select($"user_id", $"ts", lit(null).cast("long").as("p_id"), lit(1).as("tag"),
               $"event_id".as("e_id"))
-    // tag orders purchases before errors at equal ts => "<=" semantics
-    val w = Window.partitionBy($"user_id").orderBy($"ts", $"tag")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     purchases.union(errors)
-      .withColumn("last_p",
-        last(when($"tag" === 0, struct($"ts".as("p_ts"), $"p_id")), ignoreNulls = true).over(w))
-      .filter($"tag" === 1)
-      .select($"e_id", $"user_id", $"ts".as("e_ts"),
-              $"last_p.p_id".as("p_id"), $"last_p.p_ts".as("p_ts"))
-      .orderBy($"e_id")
   }
+
+  /** The carried purchase struct(p_ts, p_id): the last purchase at or
+    * before each row of [[tagged]] in ts order, ascending for backward
+    * as-of, descending for forward. Tag orders purchases before errors at
+    * equal ts, so both directions include simultaneous matches.
+    */
+  private def carry(forward: Boolean): Column = {
+    val ts = if (forward) col("ts").desc else col("ts")
+    val w = Window.partitionBy(col("user_id")).orderBy(ts, col("tag"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    last(when(col("tag") === 0, struct(col("ts").as("p_ts"), col("p_id"))), ignoreNulls = true)
+      .over(w)
+  }
+
+  /** A one-sided as-of join: each error row with its [[carry]] `name`. */
+  private def oneSided(ev: DataFrame, forward: Boolean, name: String): DataFrame =
+    tagged(ev).withColumn(name, carry(forward))
+      .filter(col("tag") === 1)
+      .select(col("e_id"), col("user_id"), col("ts").as("e_ts"),
+              col(s"$name.p_id").as("p_id"), col(s"$name.p_ts").as("p_ts"))
+      .orderBy(col("e_id"))
 }

@@ -92,7 +92,7 @@ object Dedup {
     import s.implicits._
     docs.select($"doc_id",
       minhashShingleSig(
-        split(lower(trim($"text")), "\\s+"), lit(ShingleK),
+        TextOps.words($"text"), lit(ShingleK),
         lit(NumHashes)).as("sig"))
   }
 
@@ -588,7 +588,7 @@ object Dedup {
   def simhashDedup(s: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
     import s.implicits._
     val hashed = Tables.documents(s, dir)
-      .select($"doc_id", simhash60(split(lower(trim($"text")), "\\s+")).as("sh"))
+      .select($"doc_id", simhash60(TextOps.words($"text")).as("sh"))
       .transform(Materialize(_))
     val banded = hashed.select($"doc_id", $"sh",
         explode(expr("transform(sequence(0, 3), " +
@@ -625,7 +625,7 @@ object Dedup {
     // fused one-pass kernel: value-identical to simhash60(toks) /
     // simhash60('w'-prefixed toks) but decodes each token once and never
     // materializes the prefixed array (KernelPropertySpec pins equality)
-    val toks = split(lower(trim($"text")), "\\s+")
+    val toks = TextOps.words($"text")
     val hashed = Tables.documents(s, dir)
       .select($"doc_id", simhashWide120(toks).as("shw"))
       .select($"doc_id", $"shw".getItem(0).as("sh_lo"), $"shw".getItem(1).as("sh_hi"))
@@ -972,12 +972,11 @@ object Dedup {
   def tokenBudgetMix(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // scored feeds the band histogram AND the final keep-join: materialize
-    // the 4 narrow columns once so the quality regexes + token-count lambda
+    // the 4 narrow columns once so the quality regexes + token count
     // (the per-row cost) run one pass instead of two
     val scored = Tables.documents(s, dir)
       .select($"doc_id", $"source", TextOps.qualityCol.as("quality"),
-        size(expr("filter(split(lower(trim(text)), '\\\\s+'), t -> t <> '')"))
-          .cast("long").as("tokens"))
+        size(TextOps.nonEmptyWords($"text")).cast("long").as("tokens"))
       .transform(Materialize(_))
     val bands = scored.groupBy($"source", $"quality").agg(sum($"tokens").as("band_toks"))
     val wDesc = Window.partitionBy($"source").orderBy($"quality".desc)
@@ -1053,7 +1052,7 @@ object Dedup {
     // arrays costs more than the second column-pruned scan + rehash here,
     // unlike d39 where FOUR consumers amortize the materialization)
     val grams = docs.select($"doc_id",
-      array_distinct(gramHashes31(split(lower(trim($"text")), "\\s+"), lit(3)))
+      array_distinct(gramHashes31(TextOps.words($"text"), lit(3)))
         .as("hv"))
     val inter = size(array_intersect($"hv_a", $"hv_b")).cast("double")
     def contain(base: org.apache.spark.sql.Column) =
@@ -1074,7 +1073,7 @@ object Dedup {
     import s.implicits._
     val grams = Tables.documents(s, dir)
       .select($"doc_id",
-        array_distinct(shingleStrings(split(lower(trim($"text")), "\\s+"), lit(2))).as("grams"))
+        array_distinct(shingleStrings(TextOps.words($"text"), lit(2))).as("grams"))
     val half = grams.agg((count(lit(1)) / 2).cast("long").as("half"))
     val a = grams.crossJoin(broadcast(half)).filter($"doc_id" < $"half")
       .select($"doc_id".as("doc_a"), $"grams".as("grams_a"), $"half")
@@ -1130,7 +1129,7 @@ object Dedup {
     // per element, and that dominated the whole key
     val exploded = Tables.documents(s, dir)
       .select($"source", explode(
-        shingleStrings(split(lower(trim($"text")), "\\s+"), lit(ShingleK)))
+        shingleStrings(TextOps.words($"text"), lit(ShingleK)))
         .as("shingle"))
     // Source domain, collected once: |sources| rows off a column-pruned
     // scan — the twoPhaseIndex bounded-collect rule; at 100 TB this list is
@@ -1369,7 +1368,7 @@ object Dedup {
     // projection IS the persisted index artifact the scaladoc names
     val hv = docs
       .select($"doc_id",
-        array_distinct(gramHashes31(split(lower(trim($"text")), "\\s+"), lit(3)))
+        array_distinct(gramHashes31(TextOps.words($"text"), lit(3)))
           .as("hv"))
       .transform(Materialize(_))
     val postings = hv.select($"doc_id", explode($"hv").as("h"))
@@ -1424,14 +1423,14 @@ object Dedup {
     val origs = Tables.documents(s, dir)
       .filter($"doc_id" < LshQualityCap).select($"doc_id", $"text")
     val synth = origs
-      .withColumn("toks", split(lower(trim($"text")), "\\s+"))
+      .withColumn("toks", TextOps.words($"text"))
       .select(($"doc_id" + SynthOffset).as("doc_id"),
         array_join(expr(
           "transform(toks, (x, i) -> CASE WHEN (i + 1) % (4 + doc_id % 5) = 0 " +
           "THEN concat('zz', i) ELSE x END)"), " ").as("text"))
     val sample = origs.unionByName(synth)
     val gd = sample.select($"doc_id",
-      array_distinct(shingleStrings(split(lower(trim($"text")), "\\s+"), lit(3)))
+      array_distinct(shingleStrings(TextOps.words($"text"), lit(3)))
         .as("grams"))
     val pairs = broadcast(gd.select($"doc_id".as("doc_a"), $"grams".as("ga")))
       .join(gd.select($"doc_id".as("doc_b"), $"grams".as("gb")),
@@ -1500,7 +1499,7 @@ object Dedup {
     // engines unambiguously key the perturbation/filler off the ORIGINAL id
     // (a lateral-alias resolution difference would otherwise drift silently)
     val hosts = origs
-      .select($"doc_id".as("oid"), split(lower(trim($"text")), "\\s+").as("toks"))
+      .select($"doc_id".as("oid"), TextOps.words($"text").as("toks"))
       .select(($"oid" + ContainHostOffset).as("doc_id"),
         concat(
           array_join(expr(
@@ -1512,7 +1511,7 @@ object Dedup {
             " ")).as("text"))
     val sample = origs.unionByName(hosts)
     val gd = sample.select($"doc_id",
-      array_distinct(gramHashes31(split(lower(trim($"text")), "\\s+"), lit(3)))
+      array_distinct(gramHashes31(TextOps.words($"text"), lit(3)))
         .as("hv"))
     val truth = broadcast(gd.select($"doc_id".as("doc_a"), $"hv".as("ha")))
       .join(gd.select($"doc_id".as("doc_b"), $"hv".as("hb")), $"doc_a" < $"doc_b")

@@ -141,8 +141,7 @@ object EndToEnd {
     val scored = Tables.documents(s, dir)
       .select($"doc_id", $"source", TextOps.qualityCol.as("quality"),
         TextOps.contentFp.as("content_md5"),
-        size(expr("filter(split(lower(trim(text)), '\\\\s+'), t -> t <> '')"))
-          .cast("long").as("n_toks"))
+        size(TextOps.nonEmptyWords($"text")).cast("long").as("n_toks"))
       .transform(Materialize(_))
     // 1. histogram-calibrated per-source quality gate (d24)
     val gated = Dedup.withQualityCutoffs(scored, Dedup.histogramQualityCutoffs(scored))

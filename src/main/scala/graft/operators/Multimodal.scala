@@ -533,7 +533,7 @@ object Multimodal {
     import s.implicits._
     import graft.functions.GraftFunctions.{cosineSim, hashEmbed}
     val txt = Tables.documents(s, dir).select($"doc_id", $"source",
-      hashEmbed(split(trim(lower($"text")), "\\s+"), lit(AlignDims)).as("tvec"))
+      hashEmbed(TextOps.words($"text"), lit(AlignDims)).as("tvec"))
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id".as("doc_id"), $"embedding")
     txt.join(emb, "doc_id")

@@ -92,6 +92,12 @@ object PipelineOps {
   private[graft] def tfCol(i: Int): String = s"tf_$i"
   private[graft] def dfCol(i: Int): String = s"df_$i"
 
+  /** The search-term split: lowercase tokens of the UNtrimmed text on
+    * whitespace runs, unlike [[TextOps.words]] — leading whitespace yields
+    * a leading empty token, which the shared p18/p20 oracle and the BM25
+    * `dl` count too. */
+  private[graft] def searchTokens(text: Column): Column = split(lower(text), "\\s+")
+
   /** Rename the positional tf columns to human-facing tf_<term> names for
     * the keyed queries whose terms are CODE CONSTANTS (SearchTerms) — the
     * oracle SQL publishes those names. withColumnsRenamed does not parse
@@ -112,7 +118,7 @@ object PipelineOps {
   private[graft] def termTfCols(docs: DataFrame, terms: Seq[String]): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val toks = split(lower($"text"), "\\s+")
+    val toks = searchTokens($"text")
     docs.select($"doc_id", $"source", size(toks).cast("long").as("dl"),
         graft.functions.GraftFunctions.termCounts(
           toks, array(terms.map(lit): _*)).as("tfs"))
@@ -144,7 +150,7 @@ object PipelineOps {
   def indexedSearch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val termArray = array(SearchTerms.map(lit): _*)
-    val matching = explode(filter(split(lower($"text"), "\\s+"),
+    val matching = explode(filter(searchTokens($"text"),
       t => array_contains(termArray, t)))
     val postings = Tables.documents(s, dir)
       .select($"doc_id", $"source", matching.as("tok"))
@@ -624,8 +630,7 @@ object PipelineOps {
     val s = docs.sparkSession
     import s.implicits._
     seqMembershipTok(docs.select($"doc_id", $"source",
-      size(expr("filter(split(lower(trim(text)), '\\\\s+'), t -> t <> '')"))
-        .cast("long").as("n_toks")))
+      size(TextOps.nonEmptyWords($"text")).cast("long").as("n_toks")))
   }
 
   /** The placement law over a (doc_id, source, n_toks) frame whose token
@@ -867,7 +872,7 @@ object PipelineOps {
   def datasetCard(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val toks = size(split(lower(trim($"text")), "\\s+")).cast("long")
+    val toks = size(TextOps.words($"text")).cast("long")
     val base = docs.select($"lang", $"source", $"n_chars", toks.as("n_toks"),
       TextOps.contentFp.as("fp"),
       floor(TextOps.qualityCol * lit(10000d) + lit(0.5d)).cast("long").as("q_e4"))

@@ -37,14 +37,18 @@ object Similarity {
               cosineSim($"qe", $"embedding").as("sim"))
   }
 
-  /** Brute-force cosine top-k per query. The rank filter compiles to a
-    * WindowGroupLimit, so each partition keeps only k rows before the
-    * shuffle — the full corpus never moves.
+  /** Brute-force cosine top-k per query over every corpus vector. */
+  def cosineTopK(s: SparkSession, dir: String): DataFrame = topK(scored(s, dir))
+
+  /** The K best (query_id, neighbor_id, rank) per query of a scored
+    * (query_id, neighbor_id, sim) frame, ties to the lower neighbor_id.
+    * The rank filter compiles to a WindowGroupLimit, so each partition
+    * keeps only K rows before the shuffle — the full corpus never moves.
     */
-  def cosineTopK(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
+  private def topK(scored: DataFrame): DataFrame = {
+    import scored.sparkSession.implicits._
     val w = Window.partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id".asc)
-    scored(s, dir)
+    scored
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter($"rank" <= K)
       .select($"query_id", $"neighbor_id", $"rank")
@@ -278,14 +282,9 @@ object Similarity {
                $"crank" <= ceil($"n_cells" * IvfMaxProbeFrac)))
       .select($"query_id", $"qe", $"centroid_id")
     // score only inside probed cells
-    val w = Window.partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id".asc)
-    assigned.join(broadcast(probes), Seq("centroid_id"))
+    topK(assigned.join(broadcast(probes), Seq("centroid_id"))
       .filter($"vec_id" =!= $"query_id")
-      .select($"query_id", $"vec_id".as("neighbor_id"), cosineSim($"qe", $"embedding").as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= K)
-      .select($"query_id", $"neighbor_id", $"rank")
-      .orderBy($"query_id", $"rank")
+      .select($"query_id", $"vec_id".as("neighbor_id"), cosineSim($"qe", $"embedding").as("sim")))
   }
 
   private val PqSubspaces = 8
@@ -424,14 +423,9 @@ object Similarity {
     // second corpus scan for full-precision vectors — no corpus shuffle
     val q = emb.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("qe"))
-    val w = Window.partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id".asc)
-    emb.join(broadcast(shortlist), $"vec_id" === $"neighbor_id")
+    topK(emb.join(broadcast(shortlist), $"vec_id" === $"neighbor_id")
       .join(broadcast(q), Seq("query_id"))
-      .select($"query_id", $"neighbor_id", cosineSim($"qe", $"embedding").as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= K)
-      .select($"query_id", $"neighbor_id", $"rank")
-      .orderBy($"query_id", $"rank")
+      .select($"query_id", $"neighbor_id", cosineSim($"qe", $"embedding").as("sim")))
   }
 
   /** Recall floors per ANN method, shared by the d13 oracle claim and the
@@ -743,15 +737,10 @@ object Similarity {
         explode(probesPerTable).as("tp"))
       .select($"query_id", $"qe", $"tp.table_id",
         explode($"tp.probe_buckets").as("bucket"))
-    val w = Window.partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id".asc)
-    emb.join(broadcast(q), Seq("table_id", "bucket"))
+    topK(emb.join(broadcast(q), Seq("table_id", "bucket"))
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id".as("neighbor_id"), cosineSim($"qe", $"embedding").as("sim"))
-      .distinct() // collapse multi-table collisions (sim is identical per pair)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= K)
-      .select($"query_id", $"neighbor_id", $"rank")
-      .orderBy($"query_id", $"rank")
+      .distinct()) // collapse multi-table collisions (sim is identical per pair)
   }
 
   /** d30 eval-query sample: deterministic and capped, so the oracle's

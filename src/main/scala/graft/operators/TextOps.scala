@@ -150,6 +150,14 @@ object TextOps {
     * the one exact-dedup, decontamination and erasure key. */
   private[graft] def contentFp: Column = md5(regexp_replace(lower(col("text")), "\\s+", " "))
 
+  /** The word-token rule: lowercase tokens of the trimmed text split on
+    * whitespace runs, as every text, dedup and packing operator (and its
+    * DuckDB oracle) counts them. Empty text gives one empty token. */
+  private[graft] def words(text: Column): Column = split(lower(trim(text)), "\\s+")
+
+  /** [[words]] without the empty token that empty or blank text yields. */
+  private[graft] def nonEmptyWords(text: Column): Column = array_remove(words(text), "")
+
   def qualityScore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)
@@ -166,11 +174,11 @@ object TextOps {
   def ngramTopK(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val words = split(lower(trim($"text")), "\\s+")
-    val n = size(words)
+    val toks = words($"text")
+    val n = size(toks)
     val bigrams = zip_with(
-      slice(words, lit(1), greatest(n - 1, lit(0))),
-      slice(words, lit(2), greatest(n - 1, lit(0))),
+      slice(toks, lit(1), greatest(n - 1, lit(0))),
+      slice(toks, lit(2), greatest(n - 1, lit(0))),
       (a, b) => concat(a, lit(" "), b))
     val counts = Tables.documents(s, dir)
       .select($"source", explode(bigrams).as("bigram"))
@@ -202,7 +210,7 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, dir)
     val perDoc = docs
-      .select($"doc_id", $"source", explode(split(lower(trim($"text")), "\\s+")).as("term"))
+      .select($"doc_id", $"source", explode(words($"text")).as("term"))
       .filter($"term" =!= "")
       .groupBy($"doc_id", $"source", $"term").agg(count(lit(1)).as("c"))
     val st = perDoc.groupBy($"source", $"term")
@@ -250,7 +258,7 @@ object TextOps {
   def tokenSpectrum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)
-      .select(explode(split(lower(trim($"text")), "\\s+")).as("term"))
+      .select(explode(words($"text")).as("term"))
       .filter($"term" =!= "")
       .groupBy($"term").agg(count(lit(1)).as("f"))
       .groupBy(length(bin($"f")).cast("long").as("bucket_bits"))
@@ -294,7 +302,7 @@ object TextOps {
   private[graft] def corpusLm(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val tf = Tables.documents(s, dir)
-      .select(explode(split(lower(trim($"text")), "\\s+")).as("term"))
+      .select(explode(words($"text")).as("term"))
       .filter($"term" =!= "")
       .groupBy($"term").agg(count(lit(1)).as("c"))
     val n = tf.agg(sum($"c").as("n_total"))
@@ -319,7 +327,7 @@ object TextOps {
                                     lm: DataFrame): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)
-      .select($"doc_id", explode(split(lower(trim($"text")), "\\s+")).as("term"))
+      .select($"doc_id", explode(words($"text")).as("term"))
       .filter($"term" =!= "")
       .join(broadcast(lm), "term")
       .groupBy($"doc_id")
@@ -355,12 +363,12 @@ object TextOps {
   val Stopwords: Seq[String] = Seq("the", "a", "and", "of", "to", "in", "is")
   def stopwordFilter(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val words = split(lower(trim($"text")), "\\s+")
-    val kept = filter(words, w => !w.isInCollection(Stopwords))
+    val toks = words($"text")
+    val kept = filter(toks, w => !w.isInCollection(Stopwords))
     Tables.documents(s, dir)
       .select($"doc_id",
         array_join(kept, " ").as("filtered_text"),
-        (size(words) - size(kept)).cast("long").as("n_removed"),
+        (size(toks) - size(kept)).cast("long").as("n_removed"),
         size(kept).cast("long").as("n_kept"))
       .orderBy($"doc_id")
   }
@@ -411,7 +419,7 @@ object TextOps {
     */
   def repetition(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toks = split(lower(trim($"text")), "\\s+")
+    val toks = words($"text")
     val roundTo4 = (c: org.apache.spark.sql.Column) => floor(c * 10000.0 + 0.5) / 10000.0
     Tables.documents(s, dir)
       .select($"doc_id", toks.as("toks"),
@@ -474,8 +482,7 @@ object TextOps {
     import s.implicits._
     import graft.functions.GraftFunctions.{cmsAgg, cmsQuery}
     val counts = Tables.documents(s, dir)
-      .select(explode(expr("filter(split(lower(trim(text)), '\\\\s+'), t -> t <> '')"))
-        .as("term"))
+      .select(explode(nonEmptyWords($"text")).as("term"))
       .groupBy($"term").agg(count(lit(1)).as("true_n"))
     val top = counts.orderBy($"true_n".desc, $"term").limit(20)
     val sketch = counts.agg(cmsAgg($"term", $"true_n", lit(4), lit(1024)).as("cms"))
@@ -498,9 +505,8 @@ object TextOps {
   def contaminationScore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val grams = Tables.documents(s, dir)
-      .select($"doc_id",
-        explode(array_distinct(graft.functions.GraftFunctions.shingleStrings(
-          split(lower(trim($"text")), "\\s+"), lit(8)))).as("g"))
+      .select($"doc_id", explode(array_distinct(
+        graft.functions.GraftFunctions.shingleStrings(words($"text"), lit(8)))).as("g"))
     val evalGrams = grams.filter(Dedup.isEval).select($"g").distinct()
       .withColumn("hit", lit(1L))
     grams.filter(!Dedup.isEval)
@@ -551,9 +557,8 @@ object TextOps {
     val s = docs.sparkSession
     import s.implicits._
     val grams = docs.select($"doc_id", $"source",
-      array_distinct(
-        graft.functions.GraftFunctions.shingleStrings(
-          split(lower(trim($"text")), "\\s+"), lit(3))).as("grams"))
+      array_distinct(graft.functions.GraftFunctions.shingleStrings(words($"text"), lit(3)))
+        .as("grams"))
     // explode_outer keeps gram-less docs (< 3 tokens) as a null-gram row so
     // every document scores a row without a second pass over the doc list
     val exploded = grams.select($"doc_id", $"source", explode_outer($"grams").as("g"))
@@ -615,7 +620,7 @@ object TextOps {
   private[graft] def bpeVocab(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)
-      .select(explode(split(lower(trim($"text")), "\\s+")).as("term"))
+      .select(explode(words($"text")).as("term"))
       .filter($"term" =!= "")
       .groupBy($"term").agg(count(lit(1)).as("wc"))
   }
@@ -684,7 +689,7 @@ object TextOps {
       length($"term").cast("long").as("n_chr"),
       expr("size(split(s, chr(31)))").cast("long").as("n_sym"))
     Tables.documents(s, dir)
-      .select($"doc_id", explode(split(lower(trim($"text")), "\\s+")).as("term"))
+      .select($"doc_id", explode(words($"text")).as("term"))
       .filter($"term" =!= "")
       .join(encoded, Seq("term"))
       .groupBy($"doc_id")
@@ -714,8 +719,7 @@ object TextOps {
   def chunkOverlap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)
-      .select($"doc_id",
-        expr("filter(split(lower(trim(text)), '\\\\s+'), t -> t <> '')").as("toks"))
+      .select($"doc_id", nonEmptyWords($"text").as("toks"))
       .select($"doc_id", $"toks",
         explode(expr(
           s"sequence(0L, greatest(size(toks) - $OverlapTokens - 1, 0) div $ChunkStride)"))
@@ -782,7 +786,7 @@ object TextOps {
     // fan-out itself must stay lazy in both passes regardless (k× the
     // corpus is never stored).
     val wins = docs
-      .select($"doc_id", split(lower(trim($"text")), "\\s+").as("t"))
+      .select($"doc_id", words($"text").as("t"))
       .filter(size($"t") >= k)
       .select($"doc_id",
         posexplode(graft.functions.GraftFunctions.shingleStrings($"t", lit(k))))
@@ -847,7 +851,7 @@ object TextOps {
   val RuleMaxWords = 100000L
   def ruleGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toks = split(trim(lower($"text")), "\\s+")
+    val toks = words($"text")
     val df = Tables.documents(s, dir)
       .withColumn("n_words", size(toks).cast("long"))
       .withColumn("w_chars", length(regexp_replace($"text", "\\s+", "")).cast("long"))
@@ -875,7 +879,7 @@ object TextOps {
       .groupBy($"doc_id")
       .agg(array_sort(collect_list(struct($"span_start".as("s"), $"span_tokens".as("n")))).as("sps"),
            sum($"span_tokens").as("removed"))
-    docs.select($"doc_id", split(lower(trim($"text")), "\\s+").as("t"))
+    docs.select($"doc_id", words($"text").as("t"))
       .join(spans, Seq("doc_id"), "left")
       .select(
         $"doc_id",
@@ -930,7 +934,7 @@ object TextOps {
     val s = docs.sparkSession
     import s.implicits._
     val base = docs
-      .select($"doc_id", split(lower(trim($"text")), "\\s+").as("t"))
+      .select($"doc_id", words($"text").as("t"))
       .withColumn("n", size($"t"))
       .withColumn("hv", graft.functions.GraftFunctions.gramHashes31($"t", lit(CdcW)))
       // a 0-based window index i0 with hv ≡ 0 (mod D) cuts after 1-based
@@ -987,7 +991,7 @@ object TextOps {
       .agg(collect_list(struct($"start_tok".as("s"), $"n_toks".as("n"))).as("sps"),
            sum($"n_toks").as("removed"))
     docs
-      .select($"doc_id", split(lower(trim($"text")), "\\s+").as("t"))
+      .select($"doc_id", words($"text").as("t"))
       .join(flagged, Seq("doc_id"), "left")
       .select($"doc_id",
         size($"t").cast("long").as("n_tokens"),
@@ -1029,7 +1033,7 @@ object TextOps {
   private[graft] def surprisalToks(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    docs.select($"doc_id", explode(split(lower(trim($"text")), "\\s+")).as("term"))
+    docs.select($"doc_id", explode(words($"text")).as("term"))
       .filter($"term" =!= "")
   }
 
@@ -1216,7 +1220,7 @@ object TextOps {
     // cheap recompute; the model/scored checkpoints below still cap the
     // corpus tokenize at two passes (the r12 reduction).
     val toks = docs.select($"doc_id", $"source",
-        explode(split(lower(trim($"text")), "\\s+")).as("term"))
+        explode(words($"text")).as("term"))
       .filter($"term" =!= "")
     val raw = toks.groupBy($"term")
       .agg(count(lit(1)).as("cnt_raw"),
@@ -1311,7 +1315,7 @@ object TextOps {
   val ClfBias = 700000L
   def classifierGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toks = split(trim(lower($"text")), "\\s+")
+    val toks = words($"text")
     val df = Tables.documents(s, dir)
       .withColumn("n_words", size(toks).cast("long"))
       .withColumn("w_chars", length(regexp_replace($"text", "\\s+", "")).cast("long"))

@@ -722,4 +722,26 @@ class TextOpsSpec extends SparkSpec {
         s"classifier gate must be scan-local, got ${ex.map(_.outputPartitioning)}")
     } finally df.unpersist()
   }
+
+  test("TextOps.words and nonEmptyWords on edge inputs") {
+    import spark.implicits._
+    import graft.operators.TextOps.{nonEmptyWords, words}
+    val inputs = Seq("", "   ", "  a b  ", "\ta\tb\n", "a \n\t b", "a\u00a0b \u00a0",
+      "\u0130stanbul \u1e9e STRASSE", " \u00c0B  \u00c7 ", null)
+    val rows = inputs.toDF("text").select(
+        words($"text").as("w"), split(trim(lower($"text")), "\\s+").as("w_tl"),
+        nonEmptyWords($"text").as("ne"),
+        expr("filter(split(lower(trim(text)), '\\\\s+'), t -> t <> '')").as("ne_lambda"))
+      .collect().toSeq
+    def toks(i: Int): Seq[Seq[String]] = rows.map(r => Option(r.getSeq[String](i)).orNull)
+    // lower never makes or removes a U+0020, so the two orders tokenize alike
+    assert(toks(0) == toks(1))
+    assert(toks(2) == toks(3), "array_remove(words, \"\") is the old non-empty lambda form")
+    // trim strips U+0020 only: tabs, newlines and NBSP stay in the split
+    assert(toks(0) == Seq(Seq(""), Seq(""), Seq("a", "b"), Seq("", "a", "b", ""), Seq("a", "b"),
+      Seq("a\u00a0b", "\u00a0"), toks(0)(6), Seq("\u00e0b", "\u00e7"), null))
+    assert(toks(0)(6).size == 3 && toks(0)(6)(2) == "strasse")
+    assert(toks(2) == Seq(Seq(), Seq(), Seq("a", "b"), Seq("a", "b"), Seq("a", "b"),
+      Seq("a\u00a0b", "\u00a0"), toks(0)(6), Seq("\u00e0b", "\u00e7"), null))
+  }
 }
