@@ -1,23 +1,29 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.{GraftSqlShim, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev measurement loops, one main: `runMain graft.Probe <subcommand> ...`.
   *
-  *   time <sfDir> <key...> [reps]   times registered queries repeatedly
+  *   time <sfDir> <key...> [reps]   times registered queries built and
+  *                                  consumed through the `noop` sink, repeatedly
   *                                  (default 3 reps; several keys share one
   *                                  JVM — query keys never parse as integers)
   *   margin <sfDir>                 per-codebook cohesion margins (d17)
   *   recall <sfDir...> [pqDepth...] per-method ANN recall@K values
   *   dedup-scale <sfDir>            LSH band-bucket occupancy + minhash stage
   *                                  timings (SURVEY §7f)
-  *   plans <sfDir> [key...]         each key's formatted physical plan (default:
-  *                                  all keys, sorted), through [[maskPlan]]
+  *   plans <sfDir> [key...]         each key's formatted physical plan, after
+  *                                  those of the queries its build ran
+  *                                  (default: all keys, sorted), through
+  *                                  [[maskPlan]]
   *   jobs <sfDir> [key...]          each key's job, stage and task counts as
   *                                  one JSON line (default: all keys, sorted)
   *
@@ -46,15 +52,19 @@ object Probe {
     try run(spark, args.toSeq.drop(1)) finally spark.stop()
   }
 
-  /** Runs `f` once and prints `<label>: <seconds>s<note(result)>`. */
-  private def timed[T](label: String, note: T => String = (_: T) => "")(f: => T): T = {
+  /** Runs `f` once and prints `<label>: <seconds>s`. */
+  private def timed[T](label: String)(f: => T): T = {
     val t0 = System.nanoTime()
     val r = f
-    println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2fs${note(r)}")
+    println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2fs")
     r
   }
 
-  /** Complements Bench when iterating on a single hot operator. */
+  /** Complements Bench when iterating on a single hot operator. Each rep
+    * builds the key and writes it to the `noop` sink, as `jobs` and the
+    * benchmark consume: `count()` lets Catalyst prune every column the count
+    * does not need, so a change to a projected expression would not show.
+    */
   private def time(spark: SparkSession, args: Seq[String]): Unit = {
     val dir = args.head
     val (names, reps) = args.tail.lastOption.flatMap(_.toIntOption) match {
@@ -64,7 +74,7 @@ object Probe {
     for (name <- names) {
       val fn = SparkEntry.queries(name)
       (1 to reps).foreach { i =>
-        timed(s"[time] $name rep $i", (n: Long) => s" ($n rows)")(fn(spark, dir).count())
+        timed(s"[time] $name rep $i")(consume(fn(spark, dir)))
       }
     }
   }
@@ -104,20 +114,43 @@ object Probe {
     }
   }
 
+  private def consume(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  private def formatted(qe: QueryExecution): String =
+    maskPlan(qe.explainString(ExplainMode.fromString("formatted")))
+
   /** Prints `========== <key> ==========` and the key's masked
     * `.explain("formatted")`, one key at a time: the before/after evidence
-    * that a refactor left every plan as it was. The plans carry the
-    * session's shuffle-partition count, so compare runs at the same
+    * that a refactor left every plan as it was. Before it, each query the
+    * key ran while its DataFrame was built (a [[Materialize]]
+    * `localCheckpoint`, a driver collect) prints under
+    * `---------- build <n>: <action> ----------`, so a change inside a
+    * materialized frame shows although the key's own plan reads it only as
+    * a checkpointed RDD scan. The plans carry the session's
+    * shuffle-partition count, so compare runs at the same
     * `SPARK_GRAFT_CPUS`. [[graft.Explain]] is this loop on a 4-core session.
     */
   private[graft] def plans(spark: SparkSession, args: Seq[String]): Unit = {
     val dir = args.head
     val keys = if (args.length > 1) args.tail else SparkEntry.queries.keys.toSeq.sorted
-    for (key <- keys) {
-      println(s"========== $key ==========")
-      println(maskPlan(SparkEntry.queries(key)(spark, dir).queryExecution
-        .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))))
+    val built = new ConcurrentLinkedQueue[(String, QueryExecution)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, durationNs: Long): Unit =
+        built.add(action -> qe)
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    spark.listenerManager.register(listener)
+    try for (key <- keys) {
+      println(s"========== $key ==========")
+      val df = SparkEntry.queries(key)(spark, dir)
+      GraftSqlShim.drainListenerBus(spark.sparkContext)
+      Iterator.continually(built.poll()).takeWhile(_ != null).zipWithIndex.foreach {
+        case ((action, qe), i) =>
+          println(s"---------- build ${i + 1}: $action ----------")
+          println(formatted(qe))
+      }
+      println(formatted(df.queryExecution))
+    } finally spark.listenerManager.unregister(listener)
   }
 
   /** Prints, per key, `{"key", "build_jobs", "jobs", "stages", "tasks"}` on
@@ -147,7 +180,7 @@ object Probe {
       val (j0, s0, t0) = counts
       val df = SparkEntry.queries(key)(spark, dir)
       val built = counts._1
-      df.write.format("noop").mode("overwrite").save()
+      consume(df)
       val (j1, s1, t1) = counts
       println(s"""{"key": "$key", "build_jobs": ${built - j0}, "jobs": ${j1 - j0}, """ +
         s""""stages": ${s1 - s0}, "tasks": ${t1 - t0}}""")
@@ -155,16 +188,23 @@ object Probe {
   }
 
   /** Masks what differs between two runs of the same plan: expression ids,
-    * exchange `plan_id`s, Scala lambda object names, RDD ids together with
-    * their `<op> at <File>.scala:<line>` call sites, and the `v=<seq>`
-    * version directories of persisted fold state.
+    * exchange `plan_id`s, Scala lambda object names, the JVM-wide counter
+    * in Column-API lambda variables (`x_<n>`), RDD ids together with their
+    * `<op> at <File>.scala:<line>` call sites, the `v=<seq>` version
+    * directories of persisted fold state, and what a stateful streaming
+    * batch prints per run: graft objects' identity hashes, the query
+    * `runId` and the batch timestamp.
     */
   def maskPlan(plan: String): String = plan
     .replaceAll("#\\d+", "#N")
     .replaceAll("plan_id=\\d+", "plan_id=N")
     .replaceAll("\\$Lambda[^@\\s]*@[0-9a-f]+", "\\$Lambda")
+    .replaceAll("(lambda [a-z]+)_\\d+", "$1_N")
     .replaceAll("RDD\\[\\d+\\] at (\\w+) at ([\\w$.]+\\.scala):\\d+", "RDD[N] at $1 at $2:N")
     .replaceAll("/v=\\d+/", "/v=N/")
+    .replaceAll("(graft\\.[\\w$.]+)@[0-9a-f]+", "$1@N")
+    .replaceAll("runId = [0-9a-f-]+", "runId = N")
+    .replaceAll("(stateStoreCkptIds = \\w+, )\\d+", "$1N")
 
   /** Measurement loop behind the d02/m09 band-bucket occupancy analysis
     * (SURVEY §7f): reports the LSH band-bucket size distribution and times

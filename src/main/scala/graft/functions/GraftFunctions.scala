@@ -100,6 +100,15 @@ object GraftFunctions {
   // space-joined grams)
   val gramHashes31 = k2("gram_hashes31", Longs, "crosskernels.gramHashes31",
     types(Toks, IntegerType))(crosskernels.gramHashes31)
+  // t28's content-defined chunks as (start_tok, n_toks) over the
+  // gram_hashes31 windows: (tokens, window w, expected chunk length d)
+  val cdcSpans = k3("cdc_spans", ArrayType(StructType(Seq(
+      StructField("start_tok", IntegerType, nullable = false),
+      StructField("n_toks", IntegerType, nullable = false))), containsNull = false),
+    "crosskernels.cdcSpans", types(Toks, IntegerType, IntegerType))(crosskernels.cdcSpans)
+  // the most frequent element's count, one hash pass: t13's top bigram
+  val maxMultiplicity = k1("max_multiplicity", LongType, "crosskernels.maxMultiplicity",
+    types(Toks))(crosskernels.maxMultiplicity)
   // per-query-term tf in one pass over the tokens: the BM25/search kernel
   val termCounts = k2("term_counts", Longs, "kernels.termCounts", types(Toks, Toks))(
     kernels.termCounts)
@@ -176,11 +185,11 @@ object GraftFunctions {
     p => new VecSumBuffer(p(0)), VecSumBuffer.read)
 
   /** Every function, in registration order. */
-  val table: Seq[GraftFunction] = Seq(cosineSim, hashEmbed, gramHashes31, termCounts,
-    lshBuckets, overlapMarks, overlapMarksMask, shingleStrings, simhash60, simhashWide120,
-    minhashShingleSig, regexCount, interleaveBits, nonAlnumCount, nfcNorm, pqEncode,
-    nearestCentroid, nearestCosine, treeAncestors, cmsQuery, bloomContains, topkAgg, bloomAgg,
-    cmsAgg, vecMeanAgg)
+  val table: Seq[GraftFunction] = Seq(cosineSim, hashEmbed, gramHashes31, cdcSpans,
+    maxMultiplicity, termCounts, lshBuckets, overlapMarks, overlapMarksMask, shingleStrings,
+    simhash60, simhashWide120, minhashShingleSig, regexCount, interleaveBits, nonAlnumCount,
+    nfcNorm, pqEncode, nearestCentroid, nearestCosine, treeAncestors, cmsQuery, bloomContains,
+    topkAgg, bloomAgg, cmsAgg, vecMeanAgg)
 
   private val byName: Map[String, GraftFunction] = table.map(f => f.name -> f).toMap
 

@@ -673,7 +673,57 @@ object crosskernels {
   def gramHashes31(tokens: ArrayData, k: Int): ArrayData =
     new GenericArrayData(gramHashes31Arr(tokens, k))
 
+  /** cdc_spans(tokens, w, d): the content-defined chunks of t28, as
+    * (start_tok, n_toks) structs with 1-based starts. A chunk closes after
+    * token i0 + w exactly when the [[gramHashes31]] window starting at
+    * 0-based i0 is ≡ 0 (mod d), and the last chunk closes at the end of the
+    * array; fewer than w tokens make one whole-array chunk, and an empty
+    * array one (1, 0) chunk. One pass over the window hashes;
+    * `KernelPropertySpec` holds it equal to the SQL lambda form.
+    */
+  def cdcSpans(tokens: ArrayData, w: Int, d: Int): ArrayData = {
+    require(d >= 1, s"cdc_spans: expected chunk length must be >= 1, got $d")
+    val hs = gramHashes31Arr(tokens, w)
+    val n = tokens.numElements()
+    val out = new java.util.ArrayList[Any]()
+    var start = 1
+    var i0 = 0
+    while (i0 < hs.length) {
+      if (hs(i0) % d == 0) {
+        val end = i0 + w
+        out.add(new GenericInternalRow(Array[Any](start, end - start + 1)))
+        start = end + 1
+      }
+      i0 += 1
+    }
+    if (out.isEmpty || start <= n) out.add(new GenericInternalRow(Array[Any](start, n - start + 1)))
+    new GenericArrayData(out.toArray)
+  }
+
+  /** max_multiplicity(xs): how often the most frequent element occurs, in
+    * one hash pass; 0 for an empty array. Null elements count toward
+    * nothing, as `size(filter(xs, x -> x = g))` counts them.
+    */
+  def maxMultiplicity(xs: ArrayData): Long = {
+    val n = xs.numElements()
+    val counts = new java.util.HashMap[UTF8String, Integer](n * 2)
+    var best = 0
+    var i = 0
+    while (i < n) {
+      if (!xs.isNullAt(i)) {
+        val s = xs.getUTF8String(i)
+        val c0 = counts.get(s)
+        val c = if (c0 == null) 1 else c0 + 1
+        counts.put(s, c)
+        if (c > best) best = c
+      }
+      i += 1
+    }
+    best.toLong
+  }
+
   private def gramHashes31Arr(tokens: ArrayData, k: Int): Array[Long] = {
+    require(k >= 1, s"window length must be >= 1, got $k")
     val n = tokens.numElements()
     val m = if (n < k) 0 else n - k + 1
     val hs = new Array[Long](m)

@@ -167,19 +167,15 @@ object TextOps {
 
   /** Top-k word bigrams per space — corpus n-gram statistics, the frequency
     * layer a training pipeline needs for contamination screens and stopword
-    * discovery. One explode + one shuffle to (source, bigram) counts; the
+    * discovery. The bigrams come from the codegen'd `shingle_strings`
+    * kernel; one explode + one shuffle to (source, bigram) counts; the
     * rank filter compiles to WindowGroupLimit, so each partition keeps only
     * its local top-k before the final window shuffle.
     */
   def ngramTopK(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val toks = words($"text")
-    val n = size(toks)
-    val bigrams = zip_with(
-      slice(toks, lit(1), greatest(n - 1, lit(0))),
-      slice(toks, lit(2), greatest(n - 1, lit(0))),
-      (a, b) => concat(a, lit(" "), b))
+    val bigrams = graft.functions.GraftFunctions.shingleStrings(words($"text"), lit(2))
     val counts = Tables.documents(s, dir)
       .select($"source", explode(bigrams).as("bigram"))
       .groupBy($"source", $"bigram")
@@ -358,7 +354,8 @@ object TextOps {
 
   /** Stopword filtering: drop function words from the token stream, keeping
     * duplicates and order (array_except would dedup — wrong for token
-    * streams). Higher-order array functions stay codegen'd; no UDF.
+    * streams). The `filter` lambda runs interpreted, once per token: a
+    * single linear pass with a 7-literal membership test, no UDF.
     */
   val Stopwords: Seq[String] = Seq("the", "a", "and", "of", "to", "in", "is")
   def stopwordFilter(s: SparkSession, dir: String): DataFrame = {
@@ -414,8 +411,12 @@ object TextOps {
   /** Repetition signals — the dup-text quality filters LLM corpus pipelines
     * run (C4/Gopher-style): token repetition ratio (1 - distinct/total) and
     * top-bigram concentration (most frequent bigram's share of all bigrams).
-    * Pure per-row array math, codegen-friendly, no shuffle; both engines
-    * evaluate the identical expression so the scores are hash-oracled.
+    * Per-row and scan-local, no shuffle: the bigrams and the top bigram's
+    * count are codegen'd kernel calls (`shingle_strings`,
+    * `max_multiplicity`, one hash pass per document). The DuckDB oracle
+    * counts with the quadratic lambda `list_transform(list_distinct(grams),
+    * g -> len(list_filter(grams, x -> x = g)))`, so the scores are
+    * hash-oracled against an independent form.
     */
   def repetition(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -429,8 +430,8 @@ object TextOps {
         roundTo4(lit(1.0) - size(array_distinct($"toks")) / size($"toks").cast("double"))
           .as("rep_ratio"),
         when(size($"grams") === 0, 0.0).otherwise(roundTo4(
-          expr("array_max(transform(array_distinct(grams), g -> size(filter(grams, x -> x = g))))")
-            .cast("double") / size($"grams"))).as("top_bigram_share"))
+          graft.functions.GraftFunctions.maxMultiplicity($"grams").cast("double") /
+            size($"grams"))).as("top_bigram_share"))
       .orderBy($"doc_id")
   }
 
@@ -902,8 +903,8 @@ object TextOps {
     * an edit survive verbatim (spec-pinned); t24 finds duplicated spans by
     * exhaustive window comparison, CDC gets dup detection at ~1/D of the
     * index size by hashing VARIABLE spans with content-chosen borders.
-    * Per-doc work is entirely scan-local higher-order column math over the
-    * codegen'd cross-engine `gram_hashes31` kernel (no per-token rows);
+    * Per-doc work is scan-local: one codegen'd `cdc_spans` call over the
+    * cross-engine `gram_hashes31` window hashes (no per-token rows);
     * the ONLY corpus exchange is the chunk-digest window that counts
     * copies — the same natural key a chunk store would bucket by.
     * Docs shorter than W yield one whole-doc chunk; the last chunk closes
@@ -911,7 +912,7 @@ object TextOps {
     * unbounded law keeps the oracle exact without changing the shape.
     */
   val CdcW = 4
-  val CdcD = 8L
+  val CdcD = 8
   def cdcChunks(s: SparkSession, dir: String): DataFrame =
     cdcChunksOf(Tables.documents(s, dir))
 
@@ -933,31 +934,16 @@ object TextOps {
   private[graft] def chunkRows(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val base = docs
+    import graft.functions.GraftFunctions.{cdcSpans, gramHashes31}
+    docs
       .select($"doc_id", words($"text").as("t"))
-      .withColumn("n", size($"t"))
-      .withColumn("hv", graft.functions.GraftFunctions.gramHashes31($"t", lit(CdcW)))
-      // a 0-based window index i0 with hv ≡ 0 (mod D) cuts after 1-based
-      // token i0 + W
-      .withColumn("cuts", expr(
-        s"transform(filter(transform(hv, (x, i) -> struct(x AS h, i AS i0)), " +
-          s"p -> p.h % $CdcD = 0), p -> p.i0 + $CdcW)"))
-      .withColumn("ends", expr(
-        "CASE WHEN size(cuts) = 0 OR element_at(cuts, -1) <> n " +
-          "THEN concat(cuts, array(n)) ELSE cuts END"))
-      .withColumn("starts", expr(
-        "concat(array(1), transform(slice(ends, 1, size(ends) - 1), e -> e + 1))"))
-    base
-      .select($"doc_id", $"t", explode(expr(
-        "transform(sequence(1, size(ends)), k -> struct(" +
-          "k AS chunk_idx, element_at(starts, k) AS start_tok, " +
-          "element_at(ends, k) - element_at(starts, k) + 1 AS n_toks))")).as("c"))
+      .select($"doc_id", $"t", posexplode(cdcSpans($"t", lit(CdcW), lit(CdcD))).as(Seq("k", "c")))
       .select($"doc_id",
-        $"c.chunk_idx".cast("long").as("chunk_idx"),
+        ($"k" + 1).cast("long").as("chunk_idx"),
         $"c.start_tok".cast("long").as("start_tok"),
         $"c.n_toks".cast("long").as("n_toks"),
-        element_at(graft.functions.GraftFunctions.gramHashes31(
-          slice($"t", $"c.start_tok", $"c.n_toks"), $"c.n_toks"), 1).as("chunk_hash"))
+        element_at(gramHashes31(slice($"t", $"c.start_tok", $"c.n_toks"), $"c.n_toks"), 1)
+          .as("chunk_hash"))
   }
 
   /** t29: boilerplate excision at CDC-chunk granularity — the C4-style

@@ -20,6 +20,8 @@ class GraftExtensionsSpec extends SparkSpec {
     "cosine_sim" -> s"SELECT cosine_sim($vec, $vec)",
     "hash_embed" -> s"SELECT hash_embed($toks, 8)",
     "gram_hashes31" -> s"SELECT gram_hashes31($toks, 2)",
+    "cdc_spans" -> s"SELECT cdc_spans($toks, 2, 2)",
+    "max_multiplicity" -> s"SELECT max_multiplicity($toks)",
     "term_counts" -> s"SELECT term_counts($toks, array('a', 'z'))",
     "lsh_buckets" -> s"SELECT lsh_buckets($vec64)",
     "overlap_marks" -> "SELECT overlap_marks(array('s1', 's2'))",

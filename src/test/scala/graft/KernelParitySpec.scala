@@ -41,6 +41,8 @@ class KernelParitySpec extends SparkSpec {
     "cosine_sim" -> (Seq(Vec, Vec), () => Seq(vec(), vec())),
     "hash_embed" -> (Seq(Toks, IntegerType), () => Seq(toks(), small(16))),
     "gram_hashes31" -> (Seq(Toks, IntegerType), () => Seq(toks(), small(3))),
+    "cdc_spans" -> (Seq(Toks, IntegerType, IntegerType), () => Seq(toks(), small(4), small(4))),
+    "max_multiplicity" -> (Seq(Toks), () => Seq(toks())),
     "term_counts" -> (Seq(Toks, Toks), () => Seq(toks(), toks())),
     "lsh_buckets" -> (Seq(Vec), () => Seq(vec())),
     "overlap_marks" -> (Seq(Toks), () => Seq(names(rng.nextInt(6)))),

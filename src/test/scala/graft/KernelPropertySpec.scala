@@ -4,10 +4,11 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.kernels
 
-/** Property-style tests (seeded, deterministic) for the hash kernels behind
-  * the custom expressions — pure JVM, no Spark session needed.
+/** Property-style tests (seeded, deterministic) for the kernels behind the
+  * custom expressions. Most are pure JVM; the kernels that replaced SQL
+  * lambdas are compared with those lambdas on the shared session.
   */
-class KernelPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
+class KernelPropertySpec extends SparkSpec {
 
   private def arr(tokens: Seq[String]) =
     new GenericArrayData(tokens.map(t => UTF8String.fromString(t)).toArray[Any])
@@ -406,5 +407,83 @@ class KernelPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       val u = (mix(p * 64L + i) >>> 11).toDouble / (1L << 53).toDouble
       assert(lshplanes.Planes(p)(i) == (2.0 * u - 1.0).toFloat)
     }
+  }
+
+  // --- kernels that replaced corpus-length SQL lambdas: Spark evaluates the
+  // --- kernel and the lambda it replaced on the same token arrays.
+
+  /** Empty, 1 and 2 tokens, all-equal tokens, fewer than W tokens, a cut on
+    * the last window (end = n), non-ASCII tokens, then seeded arrays over a
+    * small vocabulary, so tokens and bigrams repeat. */
+  private lazy val lambdaCases: Seq[Seq[String]] = {
+    import graft.functions.crosskernels
+    import graft.operators.TextOps.{CdcD, CdcW}
+    val vocab = Seq("a", "b", "wort", "Ünïcødé", "☃", "文字化け")
+    def draw(n: Int) = List.fill(n)(vocab(rng.nextInt(vocab.size)))
+    val endCut = Iterator.continually(draw(CdcW + rng.nextInt(12))).find { t =>
+      val h = crosskernels.gramHashes31(arr(t), CdcW)
+      h.getLong(h.numElements() - 1) % CdcD == 0
+    }.get
+    Seq(Nil, Seq("a"), Seq("a", "b"), Seq.fill(9)("x"), Seq("w", "x", "y"), endCut,
+      Seq("Ünïcødé", "☃", "文字化け", "Ünïcødé", "☃")) ++ Seq.fill(60)(draw(rng.nextInt(40)))
+  }
+
+  private def lambdaFrame = {
+    import spark.implicits._
+    lambdaCases.toDF("t")
+  }
+
+  test("max_multiplicity equals the quadratic lambda count it replaced in t13") {
+    import org.apache.spark.sql.functions.{coalesce, col, expr, lit}
+    import graft.functions.GraftFunctions.{maxMultiplicity, shingleStrings}
+    // the lambda yields null on an empty array, where the kernel yields 0
+    def lambda(a: String) = coalesce(
+      expr(s"array_max(transform(array_distinct($a), g -> size(filter($a, x -> x = g))))"),
+      lit(0)).cast("long")
+    val df = lambdaFrame.withColumn("grams", shingleStrings(col("t"), lit(2)))
+      .selectExpr("*", "array('a', NULL, NULL, 'b', 'a') AS nulls",
+        "array(CAST(NULL AS STRING), NULL) AS all_null")
+    for (a <- Seq("t", "grams", "nulls", "all_null")) {
+      val bad = df.filter(lambda(a) =!= maxMultiplicity(col(a))).select(a).collect()
+      assert(bad.isEmpty, s"$a: ${bad.toSeq}")
+    }
+  }
+
+  test("shingle_strings(toks, 2) equals the zip_with bigram lambda it replaced in ngramTopK") {
+    import org.apache.spark.sql.functions.{col, expr, lit}
+    import graft.functions.GraftFunctions.shingleStrings
+    val lambda = expr("zip_with(slice(t, 1, greatest(size(t) - 1, 0)), " +
+      "slice(t, 2, greatest(size(t) - 1, 0)), (a, b) -> concat(a, ' ', b))")
+    val bad = lambdaFrame.filter(lambda =!= shingleStrings(col("t"), lit(2))).collect()
+    assert(bad.isEmpty, bad.toSeq)
+  }
+
+  test("cdc_spans equals the five-lambda cut/start/chunk form it replaced in chunkRows") {
+    import org.apache.spark.sql.functions.{col, expr, lit, size}
+    import graft.functions.GraftFunctions.{cdcSpans, gramHashes31}
+    import graft.operators.TextOps.{CdcD, CdcW}
+    for ((w, d) <- Seq((CdcW, CdcD), (2, 3), (1, 2))) {
+      val rows = lambdaFrame
+        .withColumn("n", size(col("t")))
+        .withColumn("hv", gramHashes31(col("t"), lit(w)))
+        .withColumn("cuts", expr(s"transform(filter(transform(hv, (x, i) -> struct(x AS h, i AS i0)), " +
+          s"p -> p.h % $d = 0), p -> p.i0 + $w)"))
+        .withColumn("ends", expr("CASE WHEN size(cuts) = 0 OR element_at(cuts, -1) <> n " +
+          "THEN concat(cuts, array(n)) ELSE cuts END"))
+        .withColumn("starts", expr(
+          "concat(array(1), transform(slice(ends, 1, size(ends) - 1), e -> e + 1))"))
+        .select(col("t"), expr("transform(sequence(1, size(ends)), k -> struct(" +
+            "element_at(starts, k) AS start_tok, " +
+            "element_at(ends, k) - element_at(starts, k) + 1 AS n_toks))").as("lambda"),
+          cdcSpans(col("t"), lit(w), lit(d)).as("kernel"))
+        .collect()
+      rows.foreach(r => assert(r.get(1) == r.get(2), s"w=$w d=$d t=${r.get(0)}"))
+      assert(rows.exists(_.getSeq[Any](2).size > 2), s"w=$w d=$d: no array is cut twice")
+    }
+    // a window or chunk length below 1 fails by name, not with an index error
+    import graft.functions.crosskernels
+    for ((w, d) <- Seq((0, CdcD), (-1, CdcD), (CdcW, 0)))
+      intercept[IllegalArgumentException](crosskernels.cdcSpans(arr(Seq("a", "b")), w, d))
+    intercept[IllegalArgumentException](crosskernels.gramHashes31(arr(Seq("a")), 0))
   }
 }

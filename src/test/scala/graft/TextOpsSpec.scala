@@ -70,6 +70,16 @@ class TextOpsSpec extends SparkSpec {
     assert(plan("t08_ngram_topk").contains("WindowGroupLimit"))
   }
 
+  test("t08, t13 and t28 build their corpus-length token arrays without lambdas") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    for (key <- Seq("t08_ngram_topk", "t13_repetition", "t28_cdc_chunks")) {
+      val plan = SparkEntry.queries(key)(spark, sfDir).queryExecution.optimizedPlan
+      val lambdas = plan.flatMap(_.expressions.flatMap(_.collect {
+        case f: HigherOrderFunction => f.prettyName }))
+      assert(lambdas.isEmpty, s"$key: ${lambdas.mkString(", ")}")
+    }
+  }
+
   test("t10 stopword filter keeps duplicates/order and removes only stopwords") {
     import spark.implicits._
     val df = SparkEntry.queries("t10_stopword_filter")(spark, sfDir).cache()
